@@ -1759,7 +1759,7 @@ def q29_crawl_schedule_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("depth"),
         F.lit(1.0).alias("score"),
     )
-    frontier = _combine_frontier(with_url_hash(valid_urls(frontier)), 9).persist()
+    frontier = _combine_frontier(with_url_hash(valid_urls(frontier))).persist()
     seen = frontier.filter(
         F.substring(F.md5("url"), 1, 1).isin(*list("01234567"))
     ).select("url_hash_hi", "url_hash_lo")

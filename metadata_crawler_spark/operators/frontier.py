@@ -313,10 +313,22 @@ def schedule_round(
     of one registrable domain instead of per exact host; robots matching
     and budgets stay per-host, per RFC 9309 origin scope).
     """
-    f = gate_frontier(
+    gated = gate_frontier(
         frontier, hosts, robots, default_budget, robots_broadcast, hosts_broadcast
     )
-    f = per_host_topk(f, "budget", salt_parts)
+    return schedule_eligible(gated, salt_parts, site_politeness, psl_rules)
+
+
+def schedule_eligible(
+    gated: DataFrame,
+    salt_parts: int,
+    site_politeness: bool,
+    psl_rules,
+) -> DataFrame:
+    """The scheduling half of a round over :func:`gate_frontier`'s
+    eligible set: skew-safe per-host top-budget, then politeness offsets
+    (per host, or per registrable domain with ``site_politeness``)."""
+    f = per_host_topk(gated, "budget", salt_parts)
     if site_politeness:
         f = with_site(f, rules=psl_rules)
     return with_politeness_schedule(f, by_site=site_politeness)

@@ -38,6 +38,7 @@ Scale notes (the 100 TB / 10^10-URL shape this is designed for):
 
 from __future__ import annotations
 
+import math
 import os
 import time
 from dataclasses import dataclass, field
@@ -48,10 +49,14 @@ from pyspark.sql import functions as F
 
 from ..functions.text import _decode, _extract_text_batch, _HREF_RE, _META_LANG_RE
 from ..functions.urls import canonicalize_udf, with_canonical, with_url_hash
-from ..operators.frontier import (
+# per_host_topk and with_politeness_schedule are not called in this
+# module (schedule_eligible composes them); they stay module attributes
+# because perfbench/spans.py wraps them by name on this module.
+from ..operators.frontier import (  # noqa: F401
     expand_outlinks,
     gate_frontier,
     per_host_topk,
+    schedule_eligible,
     small_enough_to_broadcast,
     valid_urls,
     with_politeness_schedule,
@@ -84,13 +89,6 @@ class CrawlConfig:
     #: minimum total fetched after run() completes, else EmptyCrawl
     #: (reference --fail-under, run.py:510-515)
     fail_under: int | None = None
-    #: combined-score rounding — floating sums across shuffles are not
-    #: bit-reproducible; 9 decimals makes ordering data-deterministic.
-    score_decimals: int = 9
-    #: True/False forces the bloom probe strategy; None auto-flips to the
-    #: cogrouped (nothing-broadcast) path when the filter's total bytes —
-    #: known from config arithmetic, no job — exceed the broadcast budget.
-    broadcast_bloom: bool | None = None
     #: scheduled sets larger than this are NOT broadcast into the fetch
     #: join (the observed count is known before the join is built); the
     #: join falls back to a shuffle join — at cluster scale the right
@@ -104,14 +102,6 @@ class CrawlConfig:
     #: co-located join with NO Exchange on the 100 TB pages side (the
     #: Iceberg storage-partitioned-join analog).
     bucketed_pages_table: str | None = None
-    #: per-round shuffle-width adaptation (session.py contract): the round's
-    #: shuffle.partitions ~= frontier rows / this, floored at the session's
-    #: core count for rounds big enough to use every core. Small rounds stop
-    #: fanning into near-empty partitions; 10^10-row rounds fan past the
-    #: session constant.
-    rows_per_shuffle_partition: int = 50_000
-    max_shuffle_partitions: int = 32_768
-    adapt_shuffle_partitions: bool = True
     #: seen-set compaction cadence (Iceberg snapshot-expiry analog,
     #: VERDICT r3 item 4): every k rounds the per-round scheduled deltas
     #: are consolidated into ONE distinct (url_hash_hi, url_hash_lo)
@@ -138,7 +128,6 @@ class CrawlConfig:
     #: production passes the full downloaded public-suffix list)
     psl_rules: tuple | None = None
     pagerank_iterations: int = 3
-    pagerank_damping: float = 0.85
     #: periodic host-blocklist mining (functions/urls.mine_blocked_hosts):
     #: every N rounds, Gopher-flag the accumulated fetched text, mine
     #: hosts whose documents are mostly junk (support-gated), commit the
@@ -160,8 +149,6 @@ class CrawlConfig:
     trap_every: int | None = None
     trap_min_urls: int = 50
     trap_max_novelty: float = 0.2
-    trap_min_template_frac: float = 0.8
-    trap_lgk: int = 12
     #: approximate seen-set tier: "bloom" (append-only, OR-union
     #: evolution, smallest bytes/key) or "cuckoo" (Fan et al. 2014 —
     #: deletable, so facet purges / stale sweeps can evict keys; evolves
@@ -177,7 +164,6 @@ class CrawlConfig:
     #: of host X have we covered?" (the reference answers its coverage
     #: questions by re-counting the store, api/stores/base.py).
     host_sketch: bool = False
-    host_sketch_lgk: int = 12
     #: AIMD per-host budget adaptation (operators/frontier.
     #: update_host_budgets): after each round, hosts with a healthy fetch
     #: rate earn additive budget, failing hosts take a multiplicative
@@ -191,6 +177,34 @@ class CrawlConfig:
 #: the 10^10-URL cogrouped probe path is used (a 10-bits/key filter over
 #: 10^10 keys is ~12 GB — never broadcastable)
 BLOOM_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
+
+#: combined-score rounding — floating sums across shuffles are not
+#: bit-reproducible; 9 decimals makes ordering data-deterministic.
+SCORE_DECIMALS = 9
+
+#: per-round shuffle width bounds (see _round_width)
+ROWS_PER_SHUFFLE_PARTITION = 50_000
+MAX_SHUFFLE_PARTITIONS = 32_768
+
+
+def _round_width(frontier_rows: int, cores: int) -> int:
+    """The round's ``spark.sql.shuffle.partitions``, from its OBSERVED
+    frontier size: ~ROWS_PER_SHUFFLE_PARTITION rows per partition,
+    floored at the core count once a round can use every core, capped at
+    MAX_SHUFFLE_PARTITIONS. Small rounds stop fanning into near-empty
+    partitions; 10^10-row rounds fan past the session constant. AQE still
+    coalesces below."""
+    width = max(1, math.ceil(frontier_rows / ROWS_PER_SHUFFLE_PARTITION))
+    # ADVICE r3 dead-zone fix: a frontier just under
+    # ROWS_PER_SHUFFLE_PARTITION used to get width=1 on a 32-core
+    # session, serializing every shuffle that round. Engage the
+    # core-count floor as soon as there is enough work to split
+    # (>= ~128 rows/core), not only at the full-partition mark.
+    if frontier_rows >= 128 * cores:
+        width = max(width, cores)
+    elif frontier_rows >= 256:
+        width = max(width, min(cores, math.ceil(frontier_rows / 128)))
+    return min(width, MAX_SHUFFLE_PARTITIONS)
 
 
 FETCH_SCHEMA = (
@@ -279,7 +293,7 @@ def derive_pages_snapshot(raw: DataFrame) -> DataFrame:
     )
 
 
-def _combine_frontier(df: DataFrame, decimals: int) -> DataFrame:
+def _combine_frontier(df: DataFrame) -> DataFrame:
     """OPIC combine of duplicate discoveries: sum the cash, keep min depth,
     deterministic url representative (all dups share the canonical url)."""
     return (
@@ -287,9 +301,18 @@ def _combine_frontier(df: DataFrame, decimals: int) -> DataFrame:
         .agg(
             F.min("url").alias("url"),
             F.min("depth").alias("depth"),
-            F.round(F.sum("score"), decimals).alias("score"),
+            F.round(F.sum("score"), SCORE_DECIMALS).alias("score"),
         )
     )
+
+
+def frontier_delta(df: DataFrame) -> DataFrame:
+    """The frontier prelude every scheduling entry point shares: raw
+    ``(url, depth, score)`` discoveries -> canonical url -> schedulable
+    urls only -> 128-bit key -> OPIC combine. Returns one row per key:
+    (url_hash_hi, url_hash_lo, url, depth, score)."""
+    f = with_canonical(df.select("url", "depth", "score"), "url")
+    return _combine_frontier(with_url_hash(valid_urls(f)))
 
 
 @dataclass
@@ -330,8 +353,6 @@ class Crawler:
         """Size-based bloom probe switch: total filter bytes follow from
         config arithmetic (shards x m_bits) — no job needed."""
         cfg = self.config
-        if cfg.broadcast_bloom is not None:
-            return cfg.broadcast_bloom
         if cfg.seen_filter == "cuckoo":
             from ..operators.seen import _CK_SLOTS, cuckoo_params
 
@@ -367,15 +388,6 @@ class Crawler:
                 self.spark.read.parquet(self.pages_path)
             ).persist()
         return self._pages_snapshot
-
-    def _seed_frontier(self, seeds: DataFrame) -> DataFrame:
-        f = with_canonical(seeds, "url").select(
-            "url",
-            F.col("depth").cast("int").alias("depth"),
-            F.col("priority").cast("double").alias("score"),
-        )
-        f = with_url_hash(valid_urls(f))
-        return _combine_frontier(f, self.config.score_decimals)
 
     # -- state -------------------------------------------------------------
     def seen_input_paths(self, upto: int) -> list[str]:
@@ -527,32 +539,10 @@ class Crawler:
             frontier_in_hint if frontier_in_hint is not None
             else frontier.count()
         )
-        # per-round shuffle width from the OBSERVED frontier size
-        # (session.py contract): ~rows_per_shuffle_partition rows per
-        # partition, floored at the core count once a round can use every
-        # core. Small rounds stop fanning to near-empty partitions; huge
-        # rounds fan past the session constant. AQE still coalesces below.
-        if cfg.adapt_shuffle_partitions:
-            import math
-
-            width = max(
-                1, math.ceil(frontier_in / cfg.rows_per_shuffle_partition)
-            )
-            # ADVICE r3 dead-zone fix: a frontier just under
-            # rows_per_shuffle_partition used to get width=1 on a 32-core
-            # session, serializing every shuffle that round. Engage the
-            # core-count floor as soon as there is enough work to split
-            # (>= ~128 rows/core), not only at the full-partition mark;
-            # AQE still coalesces near-empty partitions afterwards.
-            cores = self.spark.sparkContext.defaultParallelism
-            if frontier_in >= 128 * cores:
-                width = max(width, cores)
-            elif frontier_in >= 256:
-                width = max(width, min(cores, math.ceil(frontier_in / 128)))
-            width = min(width, cfg.max_shuffle_partitions)
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(width))
-        else:
-            width = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        width = _round_width(
+            frontier_in, self.spark.sparkContext.defaultParallelism
+        )
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(width))
         # the deduped count rides an Observation on the gated pipeline —
         # new_urls has exactly one consumer (gate_frontier), so it needs
         # neither its own persist nor a separate count job
@@ -572,13 +562,8 @@ class Crawler:
             new_urls, hosts_cur, self.robots, cfg.default_budget,
             self.robots_broadcast(), self.hosts_broadcast(),
         ).persist()
-        topk = per_host_topk(gated, "budget", cfg.salt_parts)
-        if cfg.site_politeness:
-            from ..operators.frontier import with_site
-
-            topk = with_site(topk, rules=cfg.psl_rules)
-        scheduled = with_politeness_schedule(
-            topk, by_site=cfg.site_politeness
+        scheduled = schedule_eligible(
+            gated, cfg.salt_parts, cfg.site_politeness, cfg.psl_rules
         )
         if cfg.max_urls_per_round is not None:
             # deterministic valve: global order, not task order
@@ -602,6 +587,12 @@ class Crawler:
         # barrier still gates the commit on the write succeeding, so
         # replay/resume semantics are unchanged (the next round's
         # _load_state still reads only committed parquet).
+        # Recompute-safety: an evicted cache block is recomputed from the
+        # pipeline, and the recompute yields the same rows because the
+        # schedule is a pure function of the data — a TOTAL (depth,
+        # score desc, url) order, independent of salt and partitioning
+        # (pinned by test_topk_invariant_to_salt_and_partitions). The
+        # write and the fetch join therefore always see one scheduled set.
         scheduled = scheduled.persist()
         scheduled_n = scheduled.count()
         t_sched = time.time()
@@ -660,31 +651,32 @@ class Crawler:
         def _write_host_sketch():
             # per-round host-cardinality sketch (config-gated): one HLL
             # row per host over the round's scheduled URLs, committed
-            # beside the round. Reads the just-written scheduled parquet
-            # (no pipeline recompute); the groupBy merges partial
-            # sketches map-side. Nothing in-round consumes it
-            # (host_cardinalities reads committed rounds), so it rides
-            # the pool instead of blocking the critical path (§2.6);
+            # beside the round. Reads the persisted scheduled cache, not
+            # the scheduled parquet (whose write may still be running);
+            # the groupBy merges partial sketches map-side. Nothing
+            # in-round consumes it (host_cardinalities reads committed
+            # rounds), so it rides the pool instead of blocking the
+            # critical path (§2.6);
             # the barrier below still gates the manifest flip on it.
             from ..operators.sketches import hll_sketches
 
             write_round_table(
-                hll_sketches(
-                    scheduled, ["host"], "url", cfg.host_sketch_lgk
-                ),
+                hll_sketches(scheduled, ["host"], "url"),
                 self.checkpoint_dir, round_no, "host_sketch",
             )
 
         pool = ThreadPoolExecutor(max_workers=3)
         try:
-            fut_sched_write = pool.submit(
-                write_round_table, scheduled, self.checkpoint_dir,
-                round_no, "scheduled",
-            )
-            fut_bloom = pool.submit(_evolve_filter)
-            fut_sketch = (
-                pool.submit(_write_host_sketch) if cfg.host_sketch else None
-            )
+            # every job the manifest flip must wait for, except the
+            # fetched write (fut_fetch: sweep rounds join it early, and
+            # its value is the round's fetched count)
+            barrier = [
+                pool.submit(
+                    write_round_table, scheduled, self.checkpoint_dir,
+                    round_no, "scheduled",
+                ),
+                pool.submit(_evolve_filter),
+            ]
 
             # fetch join: NEVER build/broadcast the pages side (it is the
             # 100 TB table) — a plain left join makes pages the build side
@@ -746,22 +738,25 @@ class Crawler:
                 )
                 return int(obs_fetch.get["n_fetched"] or 0)
 
+            # submitted before the optional sketch/budget jobs so it
+            # never queues behind them on the 3-worker pool
             fut_fetch = pool.submit(_write_fetched)
             t_fetch = time.time()
+            if cfg.host_sketch:
+                barrier.append(pool.submit(_write_host_sketch))
 
             # AIMD budget evolution (config-gated): the round's fetch
             # outcomes feed back into per-host budgets; the evolved table
             # checkpoints like the seen filter so resume replays
             # identically. Computed from the same in-memory rows.
-            fut_hosts = None
             if cfg.adapt_budgets:
                 from ..operators.frontier import update_host_budgets
 
-                fut_hosts = pool.submit(
+                barrier.append(pool.submit(
                     write_round_table,
                     update_host_budgets(hosts_cur, fetched_rows),
                     self.checkpoint_dir, round_no, "hosts",
-                )
+                ))
 
             # seen delta == this round's scheduled set (attempted = seen);
             # it lives in the already-written scheduled table — no extra
@@ -782,10 +777,10 @@ class Crawler:
                 )
                 .withColumn("round", F.lit(round_no))
             )
-            fut_metrics = pool.submit(
+            barrier.append(pool.submit(
                 write_round_table, metrics, self.checkpoint_dir, round_no,
                 "metrics",
-            )
+            ))
 
             # next frontier: over-budget carryover (eligible but not
             # scheduled this round) + OPIC-expanded outlinks; gate-blocked
@@ -797,9 +792,8 @@ class Crawler:
                 or (cfg.blocklist_every and round_no % cfg.blocklist_every == 0)
                 or (cfg.trap_every and round_no % cfg.trap_every == 0)
             )
-            fetched_n = None
             if sweep_round:
-                fetched_n = fut_fetch.result()
+                fut_fetch.result()
 
             carryover = gated.select(
                 "url", "depth", "score", "url_hash_hi", "url_hash_lo"
@@ -823,16 +817,14 @@ class Crawler:
             # hash-keyed combine below still merges raw variants that
             # canonicalize to the same url. Score addition regroups
             # (sum-of-sums), which stays inside the documented round-to-
-            # score_decimals float tolerance.
+            # SCORE_DECIMALS float tolerance.
             children = children.groupBy("url").agg(
                 F.min("depth").alias("depth"), F.sum("score").alias("score")
             )
             children = with_url_hash(
                 valid_urls(with_canonical(children, "url"))
             ).select("url", "depth", "score", "url_hash_hi", "url_hash_lo")
-            nxt = _combine_frontier(
-                carryover.unionByName(children), cfg.score_decimals
-            )
+            nxt = _combine_frontier(carryover.unionByName(children))
             # periodic global re-prioritization + host-level cuts.
             # r6 (guide §2.6): the two sweep MININGS (blocklist span
             # flags, trap partials) are independent scans of committed
@@ -874,15 +866,9 @@ class Crawler:
             # barrier before the commit point: every overlapped job must
             # have SUCCEEDED for the round to become visible (result()
             # re-raises); only then does the manifest flip below run
-            if fetched_n is None:
-                fetched_n = fut_fetch.result()
-            fut_sched_write.result()
-            fut_bloom.result()
-            fut_metrics.result()
-            if fut_sketch is not None:
-                fut_sketch.result()
-            if fut_hosts is not None:
-                fut_hosts.result()
+            fetched_n = fut_fetch.result()
+            for fut in barrier:
+                fut.result()
             fetched_hits.unpersist()
             scheduled.unpersist()
         finally:
@@ -924,7 +910,7 @@ class Crawler:
     def _pagerank_rescore(self, frontier: DataFrame, upto: int) -> DataFrame:
         """PageRank sweep over the accumulated link graph (edges = each
         committed fetch's url -> canonicalized outlinks) applied to the
-        next frontier's scores. Rounding to score_decimals keeps the
+        next frontier's scores. Rounding to SCORE_DECIMALS keeps the
         combined ordering data-deterministic, same as OPIC scores."""
         from ..functions.urls import with_canonical
         from ..operators.frontier import rescore_frontier
@@ -940,12 +926,8 @@ class Crawler:
             .select(F.col("url").alias("src"), F.explode("links").alias("dst"))
         )
         edges = with_canonical(edges, "dst")
-        out = rescore_frontier(
-            frontier, edges, cfg.pagerank_iterations, cfg.pagerank_damping
-        )
-        return out.withColumn(
-            "score", F.round("score", cfg.score_decimals)
-        )
+        out = rescore_frontier(frontier, edges, cfg.pagerank_iterations)
+        return out.withColumn("score", F.round("score", SCORE_DECIMALS))
 
     def _apply_committed_host_cut(
         self, frontier: DataFrame, name: str, round_no: int
@@ -1060,7 +1042,7 @@ class Crawler:
             ok = span.filter(F.col("fetched") & F.col("text").isNotNull())
             # one pass: both partials come off a shared checkpointed
             # projection — the span's bodies are scanned + hashed once
-            tpl_p, hll_p = trap_partials(ok, lgk=cfg.trap_lgk)
+            tpl_p, hll_p = trap_partials(ok)
             write_round_table(
                 tpl_p, self.checkpoint_dir, upto, "host_templates"
             )
@@ -1076,8 +1058,7 @@ class Crawler:
         if tpl is None or hll is None:
             return None
         report = trap_hosts_from_partials(
-            tpl, hll, cfg.trap_min_urls, cfg.trap_max_novelty,
-            cfg.trap_min_template_frac,
+            tpl, hll, cfg.trap_min_urls, cfg.trap_max_novelty
         )
         path = write_round_table(
             report.filter("trap"), self.checkpoint_dir, upto, "trap_hosts"
@@ -1313,7 +1294,11 @@ class Crawler:
         # inside round 0's fetch join, which holds the cores alone.
         try:
             if start == 0:
-                frontier = self._seed_frontier(seeds)
+                frontier = frontier_delta(seeds.select(
+                    "url",
+                    F.col("depth").cast("int").alias("depth"),
+                    F.col("priority").cast("double").alias("score"),
+                ))
                 seen, bloom = None, None
                 fr_hint = None
             else:

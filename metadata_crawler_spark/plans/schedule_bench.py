@@ -23,10 +23,10 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.urls import canonicalize_udf, with_canonical, with_url_hash
-from ..operators.frontier import schedule_round, valid_urls
+from ..functions.urls import canonicalize_udf
+from ..operators.frontier import schedule_round
 from ..operators.seen import bloom_build, dedup_against_seen
-from .round_loop import FETCH_SCHEMA, _combine_frontier, _fetch_batches
+from .round_loop import FETCH_SCHEMA, _fetch_batches, frontier_delta
 
 
 def run_schedule_pipeline(
@@ -44,15 +44,14 @@ def run_schedule_pipeline(
     n_urls = pages.count()  # warm: parquet footers + page cache
 
     t0 = time.time()
-    frontier = with_canonical(pages.select("url"), "url").select(
-        "url", F.lit(0).alias("depth"), F.lit(1.0).alias("score")
-    )
     # persist: downstream branches (seen filter, bloom build, anti-join
     # broadcast, top-k) would otherwise EACH recompute the pandas-UDF chain
     # inside concurrent broadcast-build jobs — a python-worker spawn storm
     # that anti-scales with core count (measured: 4 concurrent rebuilds,
     # 22-37s each at local[32] vs seconds when cached)
-    frontier = _combine_frontier(with_url_hash(valid_urls(frontier)), 9).persist()
+    frontier = frontier_delta(
+        pages.select("url", F.lit(0).alias("depth"), F.lit(1.0).alias("score"))
+    ).persist()
 
     # seen tier: every even hash was crawled before (deterministic half)
     seen = frontier.filter(F.pmod(F.col("url_hash_hi"), F.lit(2)) == 0).select(
@@ -132,10 +131,9 @@ def run_url_schedule_pipeline(
     n_urls = urls.count()
 
     t0 = time.time()
-    frontier = with_canonical(urls.select("url"), "url").select(
-        "url", F.lit(0).alias("depth"), F.lit(1.0).alias("score")
-    )
-    frontier = _combine_frontier(with_url_hash(valid_urls(frontier)), 9).persist()
+    frontier = frontier_delta(
+        urls.select("url", F.lit(0).alias("depth"), F.lit(1.0).alias("score"))
+    ).persist()
     seen = frontier.filter(F.pmod(F.col("url_hash_hi"), F.lit(2)) == 0).select(
         "url_hash_hi", "url_hash_lo"
     )

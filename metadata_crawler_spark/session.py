@@ -83,6 +83,13 @@ def tune(spark: SparkSession) -> SparkSession:
     return ship_package(spark)
 
 
+def _default_driver_memory(phys_bytes: int) -> str:
+    """``spark.driver.memory`` for a machine with ``phys_bytes`` of RAM:
+    half of it, at least Spark's own 1g default. The other half stays for
+    the pandas-UDF Python workers and the OS."""
+    return f"{max(1024, phys_bytes // 2 // 2**20)}m"
+
+
 def get_spark(
     app: str = "metadata_crawler_spark",
     cores: int | None = None,
@@ -92,7 +99,8 @@ def get_spark(
     """Build a local session; ``cores`` drives master + shuffle width.
 
     In local mode one JVM hosts driver+executors, so driver memory is the
-    only memory knob. shuffle.partitions defaults to the core count —
+    only memory knob (``SPARK_DRIVER_MEM``, else half the machine's RAM).
+    shuffle.partitions defaults to the core count —
     the 200 default over-parallelizes small rounds and under-parallelizes
     100 TB ones; on a real cluster this would be set per-round from the
     frontier size (see plans/round_loop.py).
@@ -141,9 +149,12 @@ def get_spark(
         )
     if own_session or caller_set_cores:
         b = b.config("spark.default.parallelism", str(cores))
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
     b = (
         b
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

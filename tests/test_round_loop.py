@@ -11,6 +11,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from metadata_crawler_spark.plans import round_loop
 from metadata_crawler_spark.plans.round_loop import CrawlConfig, Crawler
 
 CFG = CrawlConfig(n_shards=8, bloom_expected_per_shard=4096, salt_parts=4)
@@ -117,26 +118,22 @@ def test_resume_equals_straight_run(spark, fixture_dir, tables, tmp_path_factory
     assert [r["scheduled"] for r in res_a[2:]] == [r["scheduled"] for r in res_b]
 
 
-def test_order_independent_of_parallelism(spark, fixture_dir, tables, tmp_path_factory):
+def test_order_independent_of_parallelism(
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
+):
     """Crawl order is a function of the data, not the partitioning: same
     crawl at shuffle.partitions=3 vs 8 yields identical scheduled sets."""
     seeds = tables["seeds"]
     outs = []
-    # adaptation OFF so the two runs really do shuffle at different widths
-    noadapt = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
-        adapt_shuffle_partitions=False,
-    )
-    for parts in ("3", "8"):
+    for parts in (3, 8):
+        # pin the round width so the two runs really do shuffle at
+        # different widths
+        monkeypatch.setattr(
+            round_loop, "_round_width", lambda n, cores, p=parts: p
+        )
         ck = str(tmp_path_factory.mktemp(f"ckpt_p{parts}"))
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try:
-            c = _mk(spark, fixture_dir, tables, ck)
-            c.config = noadapt
-            c.run(seeds, rounds=2)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        results = _mk(spark, fixture_dir, tables, ck).run(seeds, rounds=2)
+        assert [r["shuffle_partitions"] for r in results] == [parts, parts]
         outs.append(
             spark.read.parquet(*[
                 os.path.join(ck, f"round={r:05d}", "scheduled") for r in range(2)
@@ -248,9 +245,6 @@ def test_size_based_switches(spark, tmp_path):
     # ~10^10 keys over 32 shards: bitmaps alone are gigabytes -> cogrouped
     big = mk(CrawlConfig(n_shards=32, bloom_expected_per_shard=300_000_000))
     assert big.bloom_broadcast() is False
-    forced = mk(CrawlConfig(broadcast_bloom=True,
-                            bloom_expected_per_shard=300_000_000))
-    assert forced.bloom_broadcast() is True
     # sanity on the threshold arithmetic itself
     from metadata_crawler_spark.operators.seen import bloom_params
 
@@ -343,21 +337,19 @@ def test_resume_at_exact_commit_boundary(spark, fixture_dir, tables, tmp_path_fa
 
 def test_shuffle_width_adapts_per_round(spark, fixture_dir, tables, tmp_path_factory):
     """Small rounds must not fan into near-empty session-width partitions;
-    rounds larger than rows_per_shuffle_partition keep at least the core
-    count; the session conf is restored after run()."""
+    rounds big enough to split keep up to the core count, large rounds
+    get ~ROWS_PER_SHUFFLE_PARTITION rows per partition up to the cap; the
+    session conf is restored after run()."""
+    from metadata_crawler_spark.plans.round_loop import (
+        MAX_SHUFFLE_PARTITIONS,
+        _round_width,
+    )
+
     ck = str(tmp_path_factory.mktemp("ckpt_width"))
-    cfg = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
-        rows_per_shuffle_partition=50_000,
-    )
-    c = Crawler(
-        spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
-        robots=tables["robots"], hosts=tables["hosts"],
-        checkpoint_dir=ck, config=cfg,
-    )
+    c = _mk(spark, fixture_dir, tables, ck)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     results = c.run(tables["seeds"], rounds=2)
-    # fixture frontier is ~1.2k rows << 50k -> exactly one shuffle partition
+    # the fixture seed rounds are under 256 rows -> one shuffle partition
     assert all(r["shuffle_partitions"] == 1 for r in results)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     # a tiny round's output is not sprayed across the session width
@@ -366,13 +358,18 @@ def test_shuffle_width_adapts_per_round(spark, fixture_dir, tables, tmp_path_fac
         if f.startswith("part-")
     ]
     assert len(parts) <= 4, parts
-    # big-round arithmetic (no crawl needed): >=cores once data can use them
-    import math
-
-    cores = spark.sparkContext.defaultParallelism
-    n = 10_000_000
-    width = max(1, math.ceil(n / cfg.rows_per_shuffle_partition))
-    assert width == 200 and max(width, cores) == width
+    # the rule itself, on a 32-core session
+    cores = 32
+    assert _round_width(0, cores) == 1
+    assert _round_width(255, cores) == 1
+    # dead zone: enough rows to split -> ~128 rows/partition, <= cores
+    assert _round_width(256, cores) == 2
+    assert _round_width(1000, cores) == 8
+    assert _round_width(128 * cores - 1, cores) == cores
+    assert _round_width(128 * cores, cores) == cores
+    # 50k rows/partition once that exceeds the core count, then the cap
+    assert _round_width(10**7, cores) == 200
+    assert _round_width(10**12, cores) == MAX_SHUFFLE_PARTITIONS == 32_768
 
 
 def test_bucketed_pages_fetch_join(spark, fixture_dir, tables, tmp_path_factory):

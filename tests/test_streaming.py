@@ -177,6 +177,52 @@ def test_stream_crawl_rounds_cross_batch_seen(spark, tmp_path):
     assert e1 == {f"https://a.com/p{i}" for i in range(10, 15)}  # only the new
 
 
+def test_stream_rounds_schedule_like_crawler(spark, fixture_dir, tables, tmp_path):
+    """Epoch 0 of both streaming variants schedules exactly what round 0
+    of a Crawler schedules from the same seeds — same urls, ranks and
+    politeness offsets — at a salt_parts the Crawler does not use (the
+    top-k is invariant to it)."""
+    from metadata_crawler_spark.plans.round_loop import CrawlConfig, Crawler
+    from metadata_crawler_spark.streaming.micro_batch import stream_crawl_rounds
+
+    cols = ["url", "rank", "fetch_offset_ms"]
+    crawl_ck = str(tmp_path / "crawl_ck")
+    Crawler(
+        spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
+        robots=tables["robots"], hosts=tables["hosts"],
+        checkpoint_dir=crawl_ck,
+        config=CrawlConfig(n_shards=8, bloom_expected_per_shard=4096,
+                           salt_parts=4),
+    ).run(tables["seeds"], rounds=1)
+    want = sorted(spark.read.parquet(
+        os.path.join(crawl_ck, "round=00000", "scheduled")
+    ).select(cols).collect())
+    assert want
+
+    src = str(tmp_path / "frontier_in")
+    tables["seeds"].select(
+        "url", F.col("depth").cast("int").alias("depth"),
+        F.col("priority").cast("double").alias("score"),
+    ).write.parquet(src)
+    for name, start in (
+        ("parity_fr", stream_frontier_rounds),
+        ("parity_cr", stream_crawl_rounds),
+    ):
+        out = str(tmp_path / f"{name}_out")
+        q = start(
+            spark, src, tables["robots"], tables["hosts"], out,
+            str(tmp_path / f"{name}_ck"), name, salt_parts=8,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = sorted(spark.read.parquet(
+            os.path.join(out, "epoch=00000")
+        ).select(cols).collect())
+        assert got == want, name
+
+
 def test_stream_document_scores_parity_and_dedup(spark, tmp_path):
     """Streaming corpus scoring (r5): two document deltas with an
     overlapping doc_id stream through watermarked dedup + stateless
