@@ -14,10 +14,20 @@ Spark-native redesign (north rule): membership = two tiers keyed on the
    per shard, shard = pmod(hash_hi, S). Built per shard with
    ``applyInPandas`` (numpy bit ops, no per-row Python); persisted as a
    tiny table ``(shard, bloom binary, n_items, m_bits, k)``; evolves
-   across rounds by bitwise-OR union (no rebuild — SURVEY §7 hard part b).
+   across rounds by bitwise-OR union of a same-geometry delta.
 2. **Exact hash-pair table** — only consulted for the Bloom "maybe" slice
    via a ``left_anti`` join, so at 10^10 URLs the expensive join touches
    ~fpr of candidates instead of all of them.
+
+Geometry (tier, shard count, capacity per shard) is a property of a
+built filter, not of a caller's config: the round loop records it with
+the filter, evolves the filter at that geometry, and rebuilds it from
+the exact seen set at double the seen count once the count outgrows the
+capacity (SURVEY §7 hard part b: append + periodic compaction). Rebuilds
+are O(log N) over a crawl, and a filter never holds more keys per shard
+(on average) than it was sized for. :func:`filter_bytes` and
+:func:`filter_health` are the arithmetic on that geometry, run on the
+Spark driver with no job.
 
 Probe strategies:
 - ``probe_with_broadcast`` — bitmaps collected+broadcast, vectorized
@@ -117,7 +127,7 @@ def bloom_build(
 
 def bloom_union(a: DataFrame, b: DataFrame) -> DataFrame:
     """OR-merge two bloom tables (same sharding + sizing): the cross-round
-    evolution path — append-then-compact, never rebuild."""
+    evolution path between rebuilds."""
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         arrs = [np.frombuffer(x, dtype=np.uint8) for x in pdf["bloom"]]
@@ -333,8 +343,8 @@ def dedup_against_seen(
 # pmod(hash_hi, S)); same no-false-negative guarantee for present keys.
 #
 # Layout per shard: nb buckets x 4 slots of 16-bit fingerprints (0 =
-# empty slot; fingerprints are forced nonzero). i1 = hash_hi mod nb,
-# i2 = i1 XOR h(fp) with nb a power of two — the partial-key cuckoo
+# empty slot; fingerprints are forced nonzero). i1 = (hash_hi >> 32)
+# mod nb, i2 = i1 XOR h(fp) with nb a power of two — the partial-key cuckoo
 # property that lets delete/probe recover both buckets from (index, fp)
 # alone. Build is VECTORIZED in two placement waves (rank-within-bucket
 # via lexsort, no per-item Python for the ~95% that fit) with the
@@ -360,6 +370,26 @@ def cuckoo_params(expected_items: int, load: float = 0.84) -> int:
     return max(nb, 2)
 
 
+def filter_bytes(tier: str, per_shard: int, n_shards: int) -> int:
+    """Total payload bytes of a ``tier`` ("bloom" | "cuckoo") filter built
+    for ``per_shard`` keys per shard: bitmap bytes, or 16-bit slots."""
+    if tier == "cuckoo":
+        return cuckoo_params(per_shard) * _CK_SLOTS * 2 * n_shards
+    m, _ = bloom_params(per_shard)
+    return (m // 8) * n_shards
+
+
+def filter_health(tier: str, per_shard: int, n_shards: int, keys: int) -> dict:
+    """Fill of a filter holding ``keys`` keys: bloom's estimated
+    false-positive rate ``(1 - e^(-k n / m))^k`` or cuckoo's slot load,
+    at the mean ``n = keys / n_shards`` keys per shard."""
+    n = keys / n_shards
+    if tier == "cuckoo":
+        return {"load": n / (cuckoo_params(per_shard) * _CK_SLOTS)}
+    m, k = bloom_params(per_shard)
+    return {"est_fpr": (1.0 - math.exp(-k * n / m)) ** k}
+
+
 def _ck_fp(lo: np.ndarray) -> np.ndarray:
     """16-bit nonzero fingerprint from url_hash_lo."""
     fp = (lo.astype(np.int64).view(np.uint64) & np.uint64(0xFFFF)).astype(np.uint16)
@@ -368,7 +398,12 @@ def _ck_fp(lo: np.ndarray) -> np.ndarray:
 
 
 def _ck_i1(hi: np.ndarray, nb: int) -> np.ndarray:
-    return (hi.astype(np.int64).view(np.uint64) % np.uint64(nb)).astype(np.int64)
+    """Primary bucket from the HIGH 32 bits of url_hash_hi: the shard is
+    pmod(hash_hi, S), so within one shard the low bits are pinned, and a
+    low-bit bucket index would confine every key of the shard to nb / S
+    primary buckets (measured: tables then fill at ~45-60% load)."""
+    hi = hi.astype(np.int64).view(np.uint64) >> np.uint64(32)
+    return (hi % np.uint64(nb)).astype(np.int64)
 
 
 def _ck_alt(idx: np.ndarray, fp: np.ndarray, nb: int) -> np.ndarray:

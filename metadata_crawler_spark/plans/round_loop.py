@@ -61,7 +61,15 @@ from ..operators.frontier import (  # noqa: F401
     valid_urls,
     with_politeness_schedule,
 )
-from ..operators.seen import bloom_build, bloom_params, bloom_union, dedup_against_seen
+from ..operators.seen import (
+    bloom_build,
+    bloom_union,
+    cuckoo_build,
+    cuckoo_insert,
+    dedup_against_seen,
+    filter_bytes,
+    filter_health,
+)
 from ..operators.versioning import latest_per_key
 from ..sources.tables import (
     ManifestLog,
@@ -78,9 +86,10 @@ class EmptyCrawl(RuntimeError):
 
 @dataclass
 class CrawlConfig:
+    #: seen-filter shard count, applied when a filter is BUILT (the first
+    #: round, or a rebuild). A standing filter keeps the shard count it
+    #: was built with; resuming under a different value rebuilds it.
     n_shards: int = 32
-    bloom_fpr: float = 0.01
-    bloom_expected_per_shard: int = 50_000
     salt_parts: int = 8
     default_budget: int = 8
     #: cap on URLs scheduled per round (the MDC_MAX_FILES test valve,
@@ -149,12 +158,14 @@ class CrawlConfig:
     trap_every: int | None = None
     trap_min_urls: int = 50
     trap_max_novelty: float = 0.2
-    #: approximate seen-set tier: "bloom" (append-only, OR-union
-    #: evolution, smallest bytes/key) or "cuckoo" (Fan et al. 2014 —
-    #: deletable, so facet purges / stale sweeps can evict keys; evolves
-    #: by absorbing each round's key batch via cuckoo_insert). Same
-    #: sharding, same no-false-negative contract, same broadcast vs
-    #: cogrouped probe switch.
+    #: approximate seen-set tier for filters this crawl BUILDS: "bloom"
+    #: (OR-union evolution, smallest bytes/key) or "cuckoo" (Fan et al.
+    #: 2014 — deletable, so facet purges / stale sweeps can evict keys;
+    #: evolves by absorbing each round's key batch via cuckoo_insert).
+    #: Same sharding, same no-false-negative contract, same broadcast vs
+    #: cogrouped probe switch. Capacity is never configured: it follows
+    #: the seen count (run_round's filter step); a resume under the other
+    #: tier rebuilds the filter.
     seen_filter: str = "bloom"
     #: per-host distinct-URL cardinality sketches (operators/sketches):
     #: when on, each round also commits one HLL sketch row per host over
@@ -177,6 +188,10 @@ class CrawlConfig:
 #: the 10^10-URL cogrouped probe path is used (a 10-bits/key filter over
 #: 10^10 keys is ~12 GB — never broadcastable)
 BLOOM_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
+
+#: smallest seen-filter capacity (keys per shard) a build uses; above it
+#: a build sizes for twice the seen count (see run_round's filter step)
+FILTER_MIN_PER_SHARD = 50_000
 
 #: combined-score rounding — floating sums across shuffles are not
 #: bit-reproducible; 9 decimals makes ordering data-deterministic.
@@ -349,17 +364,13 @@ class Crawler:
             )
         return self._hosts_broadcast
 
-    def bloom_broadcast(self) -> bool:
-        """Size-based bloom probe switch: total filter bytes follow from
-        config arithmetic (shards x m_bits) — no job needed."""
-        cfg = self.config
-        if cfg.seen_filter == "cuckoo":
-            from ..operators.seen import _CK_SLOTS, cuckoo_params
-
-            nb = cuckoo_params(cfg.bloom_expected_per_shard)
-            return nb * _CK_SLOTS * 2 * cfg.n_shards <= BLOOM_BROADCAST_MAX_BYTES
-        m, _ = bloom_params(cfg.bloom_expected_per_shard, cfg.bloom_fpr)
-        return (m // 8) * cfg.n_shards <= BLOOM_BROADCAST_MAX_BYTES
+    def bloom_broadcast(self, geometry: dict) -> bool:
+        """Size-based seen-filter probe switch: total filter bytes follow
+        from the filter's recorded geometry (tier, per_shard, n_shards)
+        — no job needed."""
+        return filter_bytes(
+            geometry["tier"], geometry["per_shard"], geometry["n_shards"]
+        ) <= BLOOM_BROADCAST_MAX_BYTES
 
     # -- inputs ------------------------------------------------------------
     def pages_snapshot(self) -> DataFrame:
@@ -525,6 +536,17 @@ class Crawler:
 
         cfg = self.config
         t0 = time.time()
+        state = self.log.read() or {}
+        # the standing filter's geometry, recorded by the round that
+        # wrote it. Without a record (no filter yet, or a checkpoint
+        # written before geometry was recorded) the loaded filter is not
+        # probed: this round dedups by the exact anti-join alone and
+        # builds a fresh filter.
+        standing = (
+            state.get(f"r{round_no - 1}", {}).get("seen_filter")
+            if bloom is not None else None
+        )
+        tier = standing["tier"] if standing else None
 
         frontier = frontier.persist()
         # r6: for resumed/continued rounds the frontier size is ALREADY
@@ -547,11 +569,10 @@ class Crawler:
         # new_urls has exactly one consumer (gate_frontier), so it needs
         # neither its own persist nor a separate count job
         obs_dedup = Observation(f"dedup_{round_no}")
-        is_cuckoo = cfg.seen_filter == "cuckoo"
         new_urls = dedup_against_seen(
-            frontier, seen, None if is_cuckoo else bloom,
-            cfg.n_shards, self.bloom_broadcast(),
-            cuckoo=bloom if is_cuckoo else None,
+            frontier, seen, bloom if tier == "bloom" else None, cfg.n_shards,
+            tier is not None and self.bloom_broadcast(standing),
+            cuckoo=bloom if tier == "cuckoo" else None,
         ).observe(obs_dedup, F.count(F.lit(1)).alias("n"))
         # gates split from top-k so the carryover can be computed from the
         # ELIGIBLE set: URLs dropped by validity/robots are permanently
@@ -597,6 +618,31 @@ class Crawler:
         scheduled_n = scheduled.count()
         t_sched = time.time()
 
+        # the seen filter's one build-vs-evolve rule. The seen count is
+        # exact without a job: committed scheduled sets are disjoint (the
+        # exact dedup tier) and their sizes are in the manifest. Build a
+        # fresh filter when there is none, its geometry is unrecorded or
+        # differs from the config, or the seen count outgrows its
+        # capacity; size it at twice the count, so rebuilds stay
+        # O(log N) over a crawl. Otherwise evolve the standing filter at
+        # its recorded geometry.
+        keys = scheduled_n + sum(
+            state.get(f"r{i}", {}).get("scheduled", 0) for i in range(round_no)
+        )
+        need = -(-keys // cfg.n_shards)
+        geo = {
+            "tier": cfg.seen_filter, "n_shards": cfg.n_shards,
+            "per_shard": max(FILTER_MIN_PER_SHARD, 2 * need),
+        }
+        rebuilt = (
+            standing is None
+            or (standing["tier"], standing["n_shards"])
+            != (geo["tier"], geo["n_shards"])
+            or need > standing["per_shard"]
+        )
+        if not rebuilt:
+            geo["per_shard"] = standing["per_shard"]
+
         # r6 (guide §2.6 "overlap independent jobs"): a round's commit is
         # latency-bound by its ACTION count, not its data volume, and
         # four of the per-round jobs are mutually independent once the
@@ -616,33 +662,28 @@ class Crawler:
         from concurrent.futures import ThreadPoolExecutor
 
         def _evolve_filter():
-            # filter evolution — bloom: OR-in this round's keys (append,
-            # never rebuild); cuckoo: absorb the key batch into the
-            # standing tables (insert-in-place, deletable later)
+            # rebuild: the committed seen set plus this round's keys at
+            # the new geometry. Evolve — bloom: OR-in a same-geometry
+            # delta of this round's keys; cuckoo: absorb the key batch
+            # into the standing tables (insert-in-place, deletable later)
             round_keys = scheduled.select("url_hash_hi", "url_hash_lo")
-            if is_cuckoo:
-                from ..operators.seen import cuckoo_build, cuckoo_insert
-
-                new_bloom = (
-                    cuckoo_insert(bloom, round_keys)
-                    if bloom is not None
-                    else cuckoo_build(
-                        round_keys, cfg.n_shards,
-                        expected_per_shard=cfg.bloom_expected_per_shard,
-                    )
+            cuckoo = geo["tier"] == "cuckoo"
+            if rebuilt:
+                keys_df = round_keys if seen is None else seen.select(
+                    "url_hash_hi", "url_hash_lo"
+                ).unionByName(round_keys)
+                build = cuckoo_build if cuckoo else bloom_build
+                new_bloom = build(
+                    keys_df, geo["n_shards"],
+                    expected_per_shard=geo["per_shard"],
                 )
+            elif cuckoo:
+                new_bloom = cuckoo_insert(bloom, round_keys)
             else:
-                delta_bloom = bloom_build(
-                    round_keys,
-                    cfg.n_shards,
-                    cfg.bloom_fpr,
-                    cfg.bloom_expected_per_shard,
-                )
-                new_bloom = (
-                    bloom_union(bloom, delta_bloom)
-                    if bloom is not None
-                    else delta_bloom
-                )
+                new_bloom = bloom_union(bloom, bloom_build(
+                    round_keys, geo["n_shards"],
+                    expected_per_shard=geo["per_shard"],
+                ))
             bloom_out = os.path.join(
                 self.checkpoint_dir, f"round={round_no:05d}", "bloom"
             )
@@ -883,20 +924,27 @@ class Crawler:
             "frontier_next": frontier_next_n,
             "shuffle_partitions": width,
             "wall_s": round(time.time() - t0, 3),
-            # per-phase walls (bench_extra diagnostics; wall-clock on the
-            # critical path — overlapped jobs show up as barrier wait)
+            # per-phase walls (wall-clock on the critical path —
+            # overlapped jobs show up as barrier wait)
             "phase_walls": {
                 "schedule": round(t_sched - t0, 3),
                 "fetch": round(t_fetch - t_sched, 3),
                 "next": round(t_next - t_fetch, 3),
                 "barrier": round(time.time() - t_next, 3),
             },
+            # the written filter's geometry (the next round evolves at it)
+            # and its fill, from counts already held (no job)
+            "seen_filter": {
+                **geo, "keys": keys, "rebuilt": rebuilt,
+                **filter_health(
+                    geo["tier"], geo["per_shard"], geo["n_shards"], keys
+                ),
+            },
         }
         frontier.unpersist()
         gated.unpersist()
         # THE commit point: manifest flip makes the round visible atomically;
         # prior rounds' counts are carried forward (lineage accumulates)
-        state = self.log.read() or {}
         state.pop("committed_at", None)
         state["last_round"] = round_no
         state[f"r{round_no}"] = counts

@@ -5,7 +5,11 @@
     spark-submit --py-files mcs.zip -m ...   # or:
     spark-submit --py-files mcs.zip run_crawl.py \
         --pages s3://bucket/pages --seeds s3://bucket/seeds \
-        --robots ... --hosts ... --checkpoint s3://bucket/ck --rounds 10
+        --robots ... --hosts ... --checkpoint file:///shared/ck --rounds 10
+
+Input tables may live on any Spark filesystem. The checkpoint must be a
+local path or a ``file://`` URI (on a cluster: a shared mount), because
+its manifest commit uses local file operations.
 
 Also runnable locally: ``python -m metadata_crawler_spark.plans.run_crawl
 --fixtures 2000 --rounds 3`` (self-generates a fixture corpus).

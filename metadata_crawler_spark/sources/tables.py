@@ -21,14 +21,29 @@ import json
 import os
 import time
 from typing import Any
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 class ManifestLog:
-    """Atomic JSON manifest: the commit pointer for the round loop."""
+    """Atomic JSON manifest: the commit pointer for the round loop.
+
+    The commit uses local file operations, so ``root`` must be a local
+    path or a ``file://`` URI (mapped to its local path). Any other
+    scheme raises instead of committing on the Spark driver's disk while
+    the round's data goes to the store."""
 
     def __init__(self, root: str):
+        scheme, sep, _ = root.partition("://")
+        if sep:
+            if scheme != "file":
+                raise ValueError(
+                    f"manifest root {root!r}: the manifest commit needs a "
+                    "local or file:// checkpoint; commits on other "
+                    "filesystems are not supported yet"
+                )
+            root = urlparse(root).path
         self.root = root
         os.makedirs(root, exist_ok=True)
         self.path = os.path.join(root, "manifest.json")

@@ -208,7 +208,7 @@ def test_crawler_recrawl_round_e2e(spark, fixture_dir, tables, tmp_path_factory)
         robots=tables["robots"], hosts=tables["hosts"],
         checkpoint_dir=ckpt,
         config=CrawlConfig(
-            n_shards=8, bloom_expected_per_shard=4096, salt_parts=4
+            n_shards=8, salt_parts=4
         ),
     )
     pages_path = os.path.join(fixture_dir, "pages.parquet")
@@ -411,7 +411,7 @@ def test_recrawl_rounds_match_independent_model(
             robots=tables["robots"], hosts=tables["hosts"],
             checkpoint_dir=ckpt,
             config=CrawlConfig(
-                n_shards=8, bloom_expected_per_shard=4096, salt_parts=4
+                n_shards=8, salt_parts=4
             ),
         )
 

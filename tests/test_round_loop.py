@@ -14,7 +14,7 @@ import pytest
 from metadata_crawler_spark.plans import round_loop
 from metadata_crawler_spark.plans.round_loop import CrawlConfig, Crawler
 
-CFG = CrawlConfig(n_shards=8, bloom_expected_per_shard=4096, salt_parts=4)
+CFG = CrawlConfig(n_shards=8, salt_parts=4)
 
 
 def _mk(spark, fixture_dir, tables, ckpt) -> Crawler:
@@ -185,7 +185,7 @@ def test_max_urls_valve_and_fail_under(spark, fixture_dir, tables, tmp_path_fact
 
     ck = str(tmp_path_factory.mktemp("ckpt_valve"))
     cfg = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         max_urls_per_round=5, fail_under=10_000,
     )
     c = Crawler(
@@ -218,10 +218,11 @@ def test_guarded_sweep(spark):
 
 
 def test_size_based_switches(spark, tmp_path):
-    """The scale switches decide from size, not constants: bloom broadcast
-    flips to the cogrouped probe when the filter's total bytes outgrow the
-    budget (pure config arithmetic — no job), and the robots join switch
-    probes the rules table with a bounded limit-count."""
+    """The scale switches decide from size, not constants: the seen-filter
+    probe flips to the cogrouped path when the filter's total bytes (from
+    its recorded geometry — no job) outgrow the budget, and the robots
+    join switch probes the rules table with a bounded limit-count."""
+    from metadata_crawler_spark.operators.seen import bloom_params, filter_bytes
     from metadata_crawler_spark.plans.round_loop import (
         BLOOM_BROADCAST_MAX_BYTES,
         CrawlConfig,
@@ -233,25 +234,23 @@ def test_size_based_switches(spark, tmp_path):
         "host string, disallow array<string>, crawl_delay_ms long",
     )
     hosts = spark.createDataFrame([("a.com", 8)], "host string, budget int")
+    crawler = Crawler(
+        spark=spark, pages_path="unused", robots=robots, hosts=hosts,
+        checkpoint_dir=str(tmp_path / "ck"), config=CrawlConfig(n_shards=32),
+    )
 
-    def mk(cfg):
-        return Crawler(
-            spark=spark, pages_path="unused", robots=robots, hosts=hosts,
-            checkpoint_dir=str(tmp_path / "ck"), config=cfg,
-        )
-
-    small = mk(CrawlConfig(n_shards=32, bloom_expected_per_shard=50_000))
-    assert small.bloom_broadcast() is True
-    # ~10^10 keys over 32 shards: bitmaps alone are gigabytes -> cogrouped
-    big = mk(CrawlConfig(n_shards=32, bloom_expected_per_shard=300_000_000))
-    assert big.bloom_broadcast() is False
+    for tier in ("bloom", "cuckoo"):
+        small = {"tier": tier, "per_shard": 50_000, "n_shards": 32}
+        assert crawler.bloom_broadcast(small) is True
+        # ~10^10 keys over 32 shards: tables alone are gigabytes -> cogrouped
+        big = {"tier": tier, "per_shard": 300_000_000, "n_shards": 32}
+        assert crawler.bloom_broadcast(big) is False
     # sanity on the threshold arithmetic itself
-    from metadata_crawler_spark.operators.seen import bloom_params
-
     m, _ = bloom_params(300_000_000, 0.01)
+    assert filter_bytes("bloom", 300_000_000, 32) == (m // 8) * 32
     assert (m // 8) * 32 > BLOOM_BROADCAST_MAX_BYTES
     # robots switch: tiny table -> broadcast
-    assert small.robots_broadcast() is True
+    assert crawler.robots_broadcast() is True
 
 
 def test_fetch_join_broadcast_gate(spark, fixture_dir, tables, tmp_path_factory):
@@ -388,7 +387,7 @@ def test_bucketed_pages_fetch_join(spark, fixture_dir, tables, tmp_path_factory)
     )
     try:
         cfg = CrawlConfig(
-            n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+            n_shards=8, salt_parts=4,
             bucketed_pages_table="pages_bucketed_rl",
             scheduled_broadcast_max_rows=0,  # force the fallback join
         )
@@ -434,7 +433,7 @@ def test_seen_compaction_path_bound(spark, fixture_dir, tables, tmp_path_factory
 
     ckpt = str(tmp_path_factory.mktemp("ckpt_compact"))
     cfg = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         seen_compact_every=256,
     )
     crawler = Crawler(
@@ -485,7 +484,7 @@ def test_resume_after_compaction_equals_straight_run(
     consolidated seen + tail deltas and produce the same crawl as an
     uninterrupted run."""
     cfg = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         seen_compact_every=2,
     )
 
@@ -529,7 +528,7 @@ def test_pagerank_rescore_round(spark, fixture_dir, tables, tmp_path_factory):
     the non-starving floor (i.e. the graph actually contributed)."""
     ckpt = str(tmp_path_factory.mktemp("ckpt_pr"))
     cfg = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         pagerank_every=1, pagerank_iterations=2,
     )
     c = Crawler(
@@ -569,7 +568,7 @@ def test_cuckoo_seen_filter_crawl_equivalence(
         checkpoint_dir=ck_b, config=CFG,
     ).run(seeds, rounds=3)
     cfg_c = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         seen_filter="cuckoo",
     )
     c1 = Crawler(
@@ -613,7 +612,7 @@ def test_adapt_budgets_crawl_and_resume(spark, fixture_dir, tables, tmp_path_fac
     (the evolved table reloads from parquet, not driver state)."""
     seeds = tables["seeds"]
     cfg = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         adapt_budgets=True,
     )
 
@@ -658,7 +657,7 @@ def test_host_sketch_cardinalities(spark, fixture_dir, tables, tmp_path_factory)
     counts within the lgk error band, without re-reading history."""
     ckpt = str(tmp_path_factory.mktemp("ckpt_sketch"))
     cfg = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         host_sketch=True,
     )
     c = Crawler(
@@ -708,7 +707,7 @@ def test_blocklist_sweep_round(spark, fixture_dir, tables, tmp_path_factory):
 
     ckpt = str(tmp_path_factory.mktemp("ckpt_bl_off"))
     cfg = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         blocklist_every=1, blocklist_max_flag_frac=1.5,
     )
     c = Crawler(
@@ -724,7 +723,7 @@ def test_blocklist_sweep_round(spark, fixture_dir, tables, tmp_path_factory):
 
     ckpt2 = str(tmp_path_factory.mktemp("ckpt_bl_on"))
     cfg2 = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         blocklist_every=1, blocklist_min_docs=1,
         blocklist_max_flag_frac=0.0,
     )
@@ -754,7 +753,7 @@ def test_blocklist_partials_resume_equals_straight_run(
     kill-after-round-1 resume rebuilds identical partials and blocklist
     totals to a straight run — the additive-counts contract."""
     cfg = lambda: CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         blocklist_every=1, blocklist_min_docs=1,
         blocklist_max_flag_frac=0.0,
     )
@@ -801,7 +800,7 @@ def test_blocklist_standing_gate_between_sweeps(
 
     ckpt = str(tmp_path_factory.mktemp("ckpt_bl_gate"))
     cfg = CrawlConfig(
-        n_shards=8, bloom_expected_per_shard=4096, salt_parts=4,
+        n_shards=8, salt_parts=4,
         blocklist_every=2, blocklist_min_docs=1,
         blocklist_max_flag_frac=0.0,
     )

@@ -29,7 +29,7 @@ def crawled(spark, fixture_dir, tables, tmp_path_factory):
         robots=tables["robots"],
         hosts=tables["hosts"],
         checkpoint_dir=ck,
-        config=CrawlConfig(n_shards=8, bloom_expected_per_shard=4096, salt_parts=4),
+        config=CrawlConfig(n_shards=8, salt_parts=4),
     )
     c.run(tables["seeds"], rounds=2)
     return ck

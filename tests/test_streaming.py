@@ -191,8 +191,7 @@ def test_stream_rounds_schedule_like_crawler(spark, fixture_dir, tables, tmp_pat
         spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
         robots=tables["robots"], hosts=tables["hosts"],
         checkpoint_dir=crawl_ck,
-        config=CrawlConfig(n_shards=8, bloom_expected_per_shard=4096,
-                           salt_parts=4),
+        config=CrawlConfig(n_shards=8, salt_parts=4),
     ).run(tables["seeds"], rounds=1)
     want = sorted(spark.read.parquet(
         os.path.join(crawl_ck, "round=00000", "scheduled")

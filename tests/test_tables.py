@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from metadata_crawler_spark.sources.tables import ManifestLog, read_rounds, write_round_table
 
 
@@ -30,6 +32,27 @@ def test_commit_overwrites_atomically(tmp_path):
     for i in range(5):
         log.commit({"last_round": i})
         assert log.read()["last_round"] == i
+
+
+def test_manifest_on_file_uri_from_other_cwd(tmp_path, monkeypatch):
+    """A file:// root commits to its local path, not to a path relative to
+    the working directory."""
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    monkeypatch.chdir(elsewhere)
+    ck = tmp_path / "ck"
+    ManifestLog(f"file://{ck}").commit({"last_round": 4})
+    assert os.listdir(elsewhere) == []
+    assert ManifestLog(str(ck)).read()["last_round"] == 4
+    assert ManifestLog(f"file://{ck}").read()["last_round"] == 4
+
+
+def test_manifest_rejects_remote_root(tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    for root in ("s3a://bucket/ck", "hdfs://nn:8020/ck"):
+        with pytest.raises(ValueError, match="file://"):
+            ManifestLog(root)
+    assert os.listdir(tmp_path) == []
 
 
 def test_round_tables(spark, tmp_path):

@@ -153,7 +153,7 @@ def test_trap_sweep_in_crawl_loop(spark, fixture_dir, tables, tmp_path_factory):
     from metadata_crawler_spark.functions.urls import host_expr
     from metadata_crawler_spark.plans.round_loop import CrawlConfig, Crawler
 
-    common = dict(n_shards=8, bloom_expected_per_shard=4096, salt_parts=4)
+    common = dict(n_shards=8, salt_parts=4)
     ckpt = str(tmp_path_factory.mktemp("ckpt_trap_off"))
     c = Crawler(
         spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
