@@ -154,27 +154,6 @@ def apply_robots(
     )
 
 
-def dedup_within_frontier(frontier: DataFrame) -> DataFrame:
-    """Collapse duplicate canonical URLs discovered in the same round to one
-    deterministic representative: min depth, then max score.
-    Aggregation (partial, map-side combined) instead of a window — at
-    10^10 rows a window would sort every partition; min/max structs don't.
-    """
-    best = F.min(F.struct("depth", F.col("score_neg"), "url")).alias("b")
-    return (
-        frontier.withColumn("score_neg", -F.col("score"))
-        .groupBy("url_hash_hi", "url_hash_lo")
-        .agg(best)
-        .select(
-            "url_hash_hi",
-            "url_hash_lo",
-            F.col("b.url").alias("url"),
-            F.col("b.depth").alias("depth"),
-            (-F.col("b.score_neg")).alias("score"),
-        )
-    )
-
-
 def per_host_topk(
     frontier: DataFrame,
     budget_col: str = "budget",

@@ -33,8 +33,6 @@ Design for 10^10 docs:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 

@@ -275,7 +275,6 @@ def dedup_against_seen(
     bloom: DataFrame | None = None,
     n_shards: int = 32,
     broadcast_bloom: bool = True,
-    shuffle_exact_join: bool = False,
     cuckoo: DataFrame | None = None,
 ) -> DataFrame:
     """Return only candidates NOT in the seen set (reference analog: the
@@ -311,15 +310,8 @@ def dedup_against_seen(
     if probed is not None:
         definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        seen_keys = seen_exact.select("url_hash_hi", "url_hash_lo")
-        if shuffle_exact_join:
-            # at 10^10 URLs the seen table can never be the broadcast
-            # build side — force the shuffle hash join (all-parallel, no
-            # driver barrier); locally this is also what lets the anti
-            # join scale with cores instead of serializing on the build
-            seen_keys = seen_keys.hint("shuffle_hash")
         confirmed_new = maybe.join(
-            seen_keys,
+            seen_exact.select("url_hash_hi", "url_hash_lo"),
             ["url_hash_hi", "url_hash_lo"],
             "left_anti",
         )

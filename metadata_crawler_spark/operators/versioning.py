@@ -41,16 +41,6 @@ def latest_per_key(
     )
 
 
-def with_version_rank(
-    df: DataFrame, key: str | list[str], version_col: str = "warc_ts"
-) -> DataFrame:
-    """files-index view with the version rank attached (0 = newest), the
-    direct analog of the reference's descending-sorted version walk."""
-    keys = [key] if isinstance(key, str) else list(key)
-    w = Window.partitionBy(*keys).orderBy(F.col(version_col).desc())
-    return df.withColumn("version_rank", F.row_number().over(w) - 1)
-
-
 def sweep_stale(
     df: DataFrame, epoch_col: str, watermark
 ) -> DataFrame:

@@ -717,14 +717,6 @@ def _write_prefix_code(
     return codes
 
 
-def _emit_stream(bw: _BitWriter, writer: _SymbolWriter, codes) -> None:
-    for sym, extra, nbits in writer.symbols:
-        c, cl = codes[sym]
-        bw.write_code(c, cl)
-        if nbits:
-            bw.write(extra, nbits)
-
-
 def _encode_literal_image(
     bw: _BitWriter,
     px: np.ndarray,  # (n, 4) ARGB uint8

@@ -23,6 +23,13 @@ manifest pointer (sources/tables.ManifestLog). Kill the process anywhere
 before the flip and the round never happened; re-running overwrites the
 same round-scoped paths — idempotent replay (SURVEY §7 hard part d).
 
+Resume is not a separate path: every round starts by reading the
+manifest and loading the previous round's committed tables by name
+(round 0 starts from the seeds), so a resumed round runs exactly the
+code a straight run does. A committed table that has gone missing fails
+that read: a lost frontier_next must not pass for an exhausted frontier,
+nor a lost scheduled delta for an empty one.
+
 Scale notes (the 100 TB / 10^10-URL shape this is designed for):
 - the frontier delta is small relative to `pages`; Catalyst broadcasts it
   into the fetch join so the pages table is never shuffled. On a real
@@ -43,7 +50,6 @@ import os
 import time
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -401,29 +407,30 @@ class Crawler:
         return self._pages_snapshot
 
     # -- state -------------------------------------------------------------
-    def seen_input_paths(self, upto: int) -> list[str]:
-        """The parquet paths the seen-snapshot read touches: consolidated
-        seen_compact (if the manifest records one at round c <= upto) plus
-        only the scheduled deltas AFTER it. Factored out so tests can
-        assert the O(seen_compact_every) path bound without instrumenting
-        the reader."""
-        from ..sources.tables import round_table_paths
+    def _table_path(self, round_no: int, name: str) -> str:
+        return os.path.join(self.checkpoint_dir, f"round={round_no:05d}", name)
 
-        state = self.log.read() or {}
+    def seen_input_paths(self, upto: int, state: dict | None = None) -> list[str]:
+        """The parquet paths the seen-snapshot read touches: consolidated
+        seen_compact (if ``state`` — the manifest when not given — records
+        one at round c <= upto) plus only the scheduled deltas AFTER it.
+        Every committed round wrote its scheduled delta, so the paths are
+        named, not probed: a missing one fails the read. Factored out so
+        tests can assert the O(seen_compact_every) path bound without
+        instrumenting the reader."""
+        if state is None:
+            state = self.log.read() or {}
         c = state.get("seen_compacted_upto", -1)
         paths: list[str] = []
         lo = 0
         if 0 <= c <= upto:
-            cp = os.path.join(
-                self.checkpoint_dir, f"round={c:05d}", "seen_compact"
-            )
-            if path_exists(cp):
-                paths.append(cp)
-                lo = c + 1
-        paths += round_table_paths(self.checkpoint_dir, "scheduled", upto, lo)
-        return paths
+            paths.append(self._table_path(c, "seen_compact"))
+            lo = c + 1
+        return paths + [
+            self._table_path(r, "scheduled") for r in range(lo, upto + 1)
+        ]
 
-    def _read_seen(self, upto: int) -> DataFrame | None:
+    def _read_seen(self, upto: int, state: dict | None = None) -> DataFrame:
         """Seen snapshot as (url_hash_hi, url_hash_lo), reading EXACTLY
         the paths :meth:`seen_input_paths` resolves — one source of
         truth for the compact/lo logic, so the tested
@@ -432,19 +439,15 @@ class Crawler:
         schemas, so each group is read separately and unioned on the
         two hash columns (parquet column pruning keeps the delta read
         2-column either way)."""
-        paths = self.seen_input_paths(upto)
+        paths = self.seen_input_paths(upto, state)
         compact = [p for p in paths if p.endswith("seen_compact")]
         deltas = [p for p in paths if not p.endswith("seen_compact")]
-        parts: list[DataFrame] = []
-        if compact:
-            parts.append(self.spark.read.parquet(*compact))
+        parts: list[DataFrame] = [self.spark.read.parquet(p) for p in compact]
         if deltas:
             parts.append(
                 self.spark.read.parquet(*deltas)
                 .select("url_hash_hi", "url_hash_lo")
             )
-        if not parts:
-            return None
         seen = parts[0]
         for p in parts[1:]:
             seen = seen.unionByName(p)
@@ -462,34 +465,24 @@ class Crawler:
         c = state.get("seen_compacted_upto", -1)
         if round_no - c < k:
             return state
-        seen = self._read_seen(round_no)
-        if seen is None:
-            return state
         write_round_table(
-            seen.distinct(), self.checkpoint_dir, round_no, "seen_compact"
+            self._read_seen(round_no, state).distinct(), self.checkpoint_dir,
+            round_no, "seen_compact",
         )
         state["seen_compacted_upto"] = round_no
         return state
 
-    def _load_state(self, upto: int):
+    def _load_state(self, upto: int, state: dict):
+        """Round ``upto + 1``'s committed inputs: the seen set through
+        ``upto``, round ``upto``'s seen filter and its ``frontier_next``.
+        Every committed round writes all three, so they are read by name:
+        a missing table fails here (Spark's PATH_NOT_FOUND names it)."""
         # the seen set IS the union of scheduled sets (attempted = seen):
         # no separate seen_delta table — parquet column pruning makes this
         # a 2-column read, and compaction bounds it to O(k) paths
-        seen = self._read_seen(upto)
-        bloom_path = os.path.join(self.checkpoint_dir, f"round={upto:05d}", "bloom")
-        bloom = (
-            self.spark.read.parquet(bloom_path)
-            if path_exists(bloom_path)
-            else None
-        )
-        frontier_path = os.path.join(
-            self.checkpoint_dir, f"round={upto:05d}", "frontier_next"
-        )
-        frontier = (
-            self.spark.read.parquet(frontier_path)
-            if path_exists(frontier_path)
-            else None
-        )
+        seen = self._read_seen(upto, state)
+        bloom = self.spark.read.parquet(self._table_path(upto, "bloom"))
+        frontier = self.spark.read.parquet(self._table_path(upto, "frontier_next"))
         return seen, bloom, frontier
 
     def _hosts_for_round(self, round_no: int) -> DataFrame:
@@ -499,9 +492,7 @@ class Crawler:
         straight run)."""
         if not self.config.adapt_budgets or round_no == 0:
             return self.hosts
-        path = os.path.join(
-            self.checkpoint_dir, f"round={round_no - 1:05d}", "hosts"
-        )
+        path = self._table_path(round_no - 1, "hosts")
         return self.spark.read.parquet(path) if path_exists(path) else self.hosts
 
     def host_cardinalities(self, upto: int) -> DataFrame:
@@ -524,42 +515,47 @@ class Crawler:
         )
 
     # -- one round ---------------------------------------------------------
-    def run_round(
-        self,
-        round_no: int,
-        frontier: DataFrame,
-        seen: DataFrame | None,
-        bloom: DataFrame | None,
-        frontier_in_hint: int | None = None,
-    ) -> dict:
+    def run_round(self, round_no: int, seeds: DataFrame) -> dict:
+        """One round, from its committed inputs to its manifest commit.
+
+        Reads the manifest once. Round 0 builds its frontier from
+        ``seeds``; every later round loads round ``round_no - 1``'s
+        committed seen set, seen filter and ``frontier_next``
+        (:meth:`_load_state`) — whether this process committed that
+        round or a crashed one did. Returns the round's counts."""
         from pyspark.sql import Observation
 
         cfg = self.config
         t0 = time.time()
         state = self.log.read() or {}
-        # the standing filter's geometry, recorded by the round that
-        # wrote it. Without a record (no filter yet, or a checkpoint
-        # written before geometry was recorded) the loaded filter is not
-        # probed: this round dedups by the exact anti-join alone and
-        # builds a fresh filter.
-        standing = (
-            state.get(f"r{round_no - 1}", {}).get("seen_filter")
-            if bloom is not None else None
-        )
+        if round_no == 0:
+            frontier = frontier_delta(seeds.select(
+                "url",
+                F.col("depth").cast("int").alias("depth"),
+                F.col("priority").cast("double").alias("score"),
+            ))
+            seen = bloom = standing = None
+        else:
+            seen, bloom, frontier = self._load_state(round_no - 1, state)
+            prev = state[f"r{round_no - 1}"]
+            # the standing filter's geometry, recorded by the round that
+            # wrote it. Without a record (a checkpoint written before
+            # geometry was recorded) the loaded filter is not probed:
+            # this round dedups by the exact anti-join alone and builds a
+            # fresh filter.
+            standing = prev.get("seen_filter")
         tier = standing["tier"] if standing else None
 
         frontier = frontier.persist()
-        # r6: for resumed/continued rounds the frontier size is ALREADY
-        # known exactly — it is the previous round's frontier_next
-        # Observation (== rows written == rows of this frontier's
-        # parquet), passed down by run(). The count job is then skipped;
-        # the persist materializes lazily inside the first consuming job
-        # (block-level cache locks keep the two dedup branches from
-        # computing it twice). Round 0 (seed chain, size unknown) still
-        # counts.
+        # r6: after round 0 the frontier size is ALREADY known exactly —
+        # it is the previous round's committed frontier_next count (==
+        # rows of this frontier's parquet). The count job is then
+        # skipped; the persist materializes lazily inside the first
+        # consuming job (block-level cache locks keep the two dedup
+        # branches from computing it twice). Round 0 (seed chain, size
+        # unknown) still counts.
         frontier_in = (
-            frontier_in_hint if frontier_in_hint is not None
-            else frontier.count()
+            frontier.count() if round_no == 0 else prev["frontier_next"]
         )
         width = _round_width(
             frontier_in, self.spark.sparkContext.defaultParallelism
@@ -607,7 +603,7 @@ class Crawler:
         # exact cached rows the consumers read — and the pre-manifest
         # barrier still gates the commit on the write succeeding, so
         # replay/resume semantics are unchanged (the next round's
-        # _load_state still reads only committed parquet).
+        # _load_state reads only committed parquet).
         # Recompute-safety: an evicted cache block is recomputed from the
         # pipeline, and the recompute yields the same rows because the
         # schedule is a pure function of the data — a TOTAL (depth,
@@ -684,10 +680,9 @@ class Crawler:
                     round_keys, geo["n_shards"],
                     expected_per_shard=geo["per_shard"],
                 ))
-            bloom_out = os.path.join(
-                self.checkpoint_dir, f"round={round_no:05d}", "bloom"
+            new_bloom.write.mode("overwrite").parquet(
+                self._table_path(round_no, "bloom")
             )
-            new_bloom.write.mode("overwrite").parquet(bloom_out)
 
         def _write_host_sketch():
             # per-round host-cardinality sketch (config-gated): one HLL
@@ -1154,10 +1149,10 @@ class Crawler:
         from ..operators.changes import estimate_change_rate, revisit_schedule
         from ..plans.recrawl import checks_delta, recrawl_batch
 
-        state0 = self.log.read() or {}
+        state = self.log.read() or {}
         fetched_all = read_rounds(
             self.spark, self.checkpoint_dir, "fetched",
-            state0.get("last_round", 0),
+            state.get("last_round", 0),
         )
         if fetched_all is None:
             raise ValueError(
@@ -1172,7 +1167,7 @@ class Crawler:
         # crashed after write_round_table but before log.commit left
         # round dirs on disk that must stay invisible (tables.py
         # contract) until its replay rewrites and commits them
-        last_rc = state0.get("last_recrawl", -1)
+        last_rc = state.get("last_recrawl", -1)
         if recrawl_no != last_rc + 1:
             # passes are STRICTLY sequential: skipping ahead would
             # silently bless any crashed pass's orphan round dirs in
@@ -1273,7 +1268,8 @@ class Crawler:
             r["status"]: (r["n_urls"], r["bytes_saved"])
             for r in self.spark.read.parquet(path).collect()
         }
-        state = self.log.read() or {}
+        # committed from the manifest read at the start of the pass: a
+        # pass is the only writer of its checkpoint's recrawl state
         state.pop("committed_at", None)
         state["last_recrawl"] = recrawl_no
         state[f"rc{recrawl_no}"] = {
@@ -1282,21 +1278,21 @@ class Crawler:
         self.log.commit(state)
         return counts
 
-    def _check_fail_under(self) -> None:
+    def _check_fail_under(self, state: dict, results: list[dict]) -> None:
         """Whole-crawl --fail-under semantics (reference run.py:510-515):
-        the committed manifest counts cover ALL rounds, so a resumed crawl
-        near its end is judged on the full crawl, not just this
-        invocation's rounds. Applied on every exit path of run()."""
+        the rounds committed before this run (``state``, the manifest as
+        run() found it) plus this run's ``results`` cover ALL rounds, so
+        a resumed crawl near its end is judged on the full crawl, not
+        just this invocation's rounds."""
         import re
 
         if self.config.fail_under is None:
             return
-        state = self.log.read() or {}
         total = sum(
             v.get("fetched", 0)
             for k, v in state.items()
             if re.fullmatch(r"r\d+", k) and isinstance(v, dict)
-        )
+        ) + sum(c["fetched"] for c in results)
         if total < self.config.fail_under:
             raise EmptyCrawl(
                 f"crawl fetched {total} < fail_under={self.config.fail_under}"
@@ -1304,10 +1300,12 @@ class Crawler:
 
     # -- the loop ----------------------------------------------------------
     def run(self, seeds: DataFrame, rounds: int) -> list[dict]:
-        """Run/resume up to ``rounds`` rounds. Resume reads the manifest:
-        already-committed rounds are skipped entirely (their outputs are
-        the checkpoint)."""
-        state = self.log.read()
+        """Run/resume up to ``rounds`` rounds. Already-committed rounds are
+        skipped entirely (their outputs are the checkpoint); each round
+        that runs loads its own committed inputs (:meth:`run_round`), so
+        a resumed run and a straight run execute the same rounds the
+        same way. Stops early when a round's frontier_next is empty."""
+        state = self.log.read() or {}
         # hash-version guard (ADVICE r5): a checkpoint whose seen-set keys
         # were written under a DIFFERENT (hi, lo) formula cannot be
         # resumed — every bloom/anti-join probe would miss the stored
@@ -1315,18 +1313,18 @@ class Crawler:
         # missing stamp is treated as current (the stamp postdates the
         # formula change; every unstamped checkpoint in the field was
         # written by the current formula).
-        if state is not None:
-            from ..functions.urls import URL_HASH_VERSION
+        from ..functions.urls import URL_HASH_VERSION
 
-            stamped = state.get("url_hash_version", URL_HASH_VERSION)
-            if stamped != URL_HASH_VERSION:
-                raise ValueError(
-                    f"checkpoint {self.checkpoint_dir!r} was written with "
-                    f"url-hash formula v{stamped}; this engine computes "
-                    f"v{URL_HASH_VERSION} — resuming would miss every "
-                    "stored seen key. Recompact or restart the crawl."
-                )
-        start = (state["last_round"] + 1) if state else 0
+        stamped = state.get("url_hash_version", URL_HASH_VERSION)
+        if stamped != URL_HASH_VERSION:
+            raise ValueError(
+                f"checkpoint {self.checkpoint_dir!r} was written with "
+                f"url-hash formula v{stamped}; this engine computes "
+                f"v{URL_HASH_VERSION} — resuming would miss every "
+                "stored seen key. Recompact or restart the crawl."
+            )
+        start = state.get("last_round", -1) + 1
+        prev = state.get(f"r{start - 1}", {})
         results: list[dict] = []
         # run_round adapts shuffle width per round; restore the session's
         # setting afterwards so co-tenants of the session are unaffected
@@ -1341,37 +1339,15 @@ class Crawler:
         # schedule_bench's persist note). The derivation stays lazy
         # inside round 0's fetch join, which holds the cores alone.
         try:
-            if start == 0:
-                frontier = frontier_delta(seeds.select(
-                    "url",
-                    F.col("depth").cast("int").alias("depth"),
-                    F.col("priority").cast("double").alias("score"),
-                ))
-                seen, bloom = None, None
-                fr_hint = None
-            else:
-                # frontier exhaustion is read from the committed counts — no
-                # isEmpty() action (it would re-run the whole frontier chain)
-                if state.get(f"r{start - 1}", {}).get("frontier_next") == 0:
-                    self._check_fail_under()
-                    return results
-                seen, bloom, frontier = self._load_state(start - 1)
-                if frontier is None:
-                    self._check_fail_under()
-                    return results
-                # committed count of the frontier parquet we just loaded
-                fr_hint = state.get(f"r{start - 1}", {}).get("frontier_next")
             for r in range(start, rounds):
-                counts = self.run_round(
-                    r, frontier, seen, bloom, frontier_in_hint=fr_hint
-                )
-                results.append(counts)
-                if counts["frontier_next"] == 0:
+                # frontier exhaustion is read from the committed counts —
+                # no isEmpty() action (it would re-run the frontier chain)
+                if prev.get("frontier_next") == 0:
                     break
-                seen, bloom, frontier = self._load_state(r)
-                fr_hint = counts["frontier_next"]
+                prev = self.run_round(r, seeds)
+                results.append(prev)
         finally:
             if orig_width is not None:
                 self.spark.conf.set("spark.sql.shuffle.partitions", orig_width)
-        self._check_fail_under()
+        self._check_fail_under(state, results)
         return results

@@ -94,18 +94,35 @@ def test_fetched_text_byte_identical(crawl, spark, fixture_dir):
     del pages
 
 
-def test_resume_equals_straight_run(spark, fixture_dir, tables, tmp_path_factory):
+def test_resume_equals_straight_run(
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
+):
     """Kill-after-round-k resume: 2 rounds + fresh crawler to 4 == straight 4
-    (SURVEY §5 resumability invariant)."""
+    (SURVEY §5 resumability invariant). Each round after round 0 loads
+    its committed inputs once, and nothing is loaded after the last
+    commit."""
+    loads: list[int] = []
+    real_load = Crawler._load_state
+
+    def counting_load(self, upto, *args):
+        loads.append(upto)
+        return real_load(self, upto, *args)
+
+    monkeypatch.setattr(Crawler, "_load_state", counting_load)
     ck_a = str(tmp_path_factory.mktemp("ckpt_a"))
     ck_b = str(tmp_path_factory.mktemp("ckpt_b"))
     seeds = tables["seeds"]
     a = _mk(spark, fixture_dir, tables, ck_a)
     res_a = a.run(seeds, rounds=4)
+    assert loads == [0, 1, 2]
+    loads.clear()
     b1 = _mk(spark, fixture_dir, tables, ck_b)
     b1.run(seeds, rounds=2)
+    assert loads == [0]
+    loads.clear()
     b2 = _mk(spark, fixture_dir, tables, ck_b)  # fresh instance = restart
     res_b = b2.run(seeds, rounds=4)
+    assert loads == [1, 2]
     assert [r["round"] for r in res_b] == [2, 3]
     seen_a = spark.read.parquet(*[
         os.path.join(ck_a, f"round={r:05d}", "scheduled") for r in range(4)
@@ -116,6 +133,34 @@ def test_resume_equals_straight_run(spark, fixture_dir, tables, tmp_path_factory
     assert seen_a.exceptAll(seen_b).count() == 0
     assert seen_b.exceptAll(seen_a).count() == 0
     assert [r["scheduled"] for r in res_a[2:]] == [r["scheduled"] for r in res_b]
+
+
+@pytest.mark.parametrize("table,rnd", [("frontier_next", 2), ("scheduled", 1)])
+def test_resume_fails_on_missing_committed_table(
+    crawl, spark, fixture_dir, tables, tmp_path_factory, table, rnd
+):
+    """A committed round's tables are named by the manifest, not probed:
+    resuming a checkpoint that lost one must fail at the read. Without
+    its frontier_next a resume used to stop as if the frontier were
+    exhausted; without a scheduled delta it re-scheduled urls of that
+    round."""
+    import json
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    _, ckpt, _ = crawl
+    ck = str(tmp_path_factory.mktemp(f"ckpt_missing_{table}"))
+    shutil.copytree(ckpt, ck, dirs_exist_ok=True)
+    with open(os.path.join(ck, "manifest.json")) as fh:
+        state = json.load(fh)
+    assert state["last_round"] == 2
+    assert state["r2"]["frontier_next"] > 0  # not an exhausted frontier
+    shutil.rmtree(os.path.join(ck, f"round={rnd:05d}", table))
+    with pytest.raises(AnalysisException, match=f"round={rnd:05d}/{table}"):
+        _mk(spark, fixture_dir, tables, ck).run(tables["seeds"], rounds=4)
+    with open(os.path.join(ck, "manifest.json")) as fh:
+        assert json.load(fh)["last_round"] == 2
 
 
 def test_order_independent_of_parallelism(
