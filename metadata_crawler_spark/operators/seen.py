@@ -10,12 +10,15 @@ That design serializes membership through one database.
 Spark-native redesign (north rule): membership = two tiers keyed on the
 128-bit xxhash of the canonical URL —
 
-1. **Sharded Bloom filter** (approximate, no false negatives): one bitmap
-   per shard, shard = pmod(hash_hi, S). Built per shard with
-   ``applyInPandas`` (numpy bit ops, no per-row Python); persisted as a
-   tiny table ``(shard, bloom binary, n_items, m_bits, k)``; evolves
-   across rounds by bitwise-OR union of a same-geometry delta.
-2. **Exact hash-pair table** — only consulted for the Bloom "maybe" slice
+1. **Sharded approximate filter** (no false negatives): one table per
+   shard, shard = pmod(hash_hi, S) — a Bloom bitmap, or a deletable
+   cuckoo table. Persisted as a tiny table of shard rows ``(shard,
+   payload, n_items, <geometry>, n_shards)``. Both tiers share one
+   lifecycle: built per shard with ``groupBy(shard).applyInPandas``, and
+   grown across rounds by co-grouping each round's keys with their
+   shard's standing row and setting them in place (one Python stage,
+   numpy inside, no per-row Python).
+2. **Exact hash-pair table** — only consulted for the filter's "maybe" slice
    via a ``left_anti`` join, so at 10^10 URLs the expensive join touches
    ~fpr of candidates instead of all of them.
 
@@ -29,11 +32,11 @@ are O(log N) over a crawl, and a filter never holds more keys per shard
 :func:`filter_health` are the arithmetic on that geometry, run on the
 Spark driver with no job.
 
-Probe strategies:
-- ``probe_with_broadcast`` — bitmaps collected+broadcast, vectorized
-  pandas UDF. Right when total bloom bytes fit in executor memory
+Probe strategies (either tier, read from the filter's schema):
+- ``probe_with_broadcast`` — shard tables collected+broadcast, vectorized
+  pandas UDF. Right when total filter bytes fit in executor memory
   (local mode, or small frontiers).
-- ``probe_cogrouped``   — candidates co-grouped with their shard's bitmap
+- ``probe_cogrouped``   — candidates co-grouped with their shard's table
   via ``groupby(shard).cogroup(...).applyInPandas``. Nothing is broadcast;
   shuffle moves only candidate rows. This is the 10^10-URL path: a
   10-bits/key filter over 10^10 keys is ~12 GB total but only
@@ -43,6 +46,7 @@ Probe strategies:
 from __future__ import annotations
 
 import math
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -84,249 +88,10 @@ def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return got.all(axis=0).astype(bool)
 
 
-def bloom_build(
-    keys: DataFrame,
-    n_shards: int = 32,
-    fpr: float = 0.01,
-    expected_per_shard: int | None = None,
-) -> DataFrame:
-    """Build the sharded Bloom table from (url_hash_hi, url_hash_lo) rows.
-
-    One reduce task per shard; inside the task everything is numpy.
-    ``expected_per_shard`` sizes the bitmaps; default assumes the input
-    count is representative (callers at scale pass their frontier-size
-    forecast so bitmaps don't need rebuilds as rounds append).
-    """
-    if expected_per_shard is None:
-        total = keys.count()
-        expected_per_shard = max(64, (2 * total) // max(1, n_shards))
-    m, k = bloom_params(expected_per_shard, fpr)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        pos = _positions(pdf["url_hash_hi"].to_numpy(), pdf["url_hash_lo"].to_numpy(), k, m)
-        _set_bits(bits, pos)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "bloom": [bits.tobytes()],
-                "n_items": [len(pdf)],
-                "m_bits": [m],
-                "k": [k],
-                "n_shards": [n_shards],
-            }
-        )
-
-    return (
-        keys.select("url_hash_hi", "url_hash_lo")
-        .withColumn("shard", shard_expr(F.col("url_hash_hi"), n_shards))
-        .groupBy("shard")
-        .applyInPandas(build, BLOOM_SCHEMA)
-    )
-
-
-def bloom_union(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two bloom tables (same sharding + sizing): the cross-round
-    evolution path between rebuilds."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        arrs = [np.frombuffer(x, dtype=np.uint8) for x in pdf["bloom"]]
-        bits = np.bitwise_or.reduce(arrs) if len(arrs) > 1 else arrs[0]
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "bloom": [bits.tobytes()],
-                "n_items": [int(pdf["n_items"].sum())],
-                "m_bits": [int(pdf["m_bits"].iloc[0])],
-                "k": [int(pdf["k"].iloc[0])],
-                "n_shards": [int(pdf["n_shards"].iloc[0])],
-            }
-        )
-
-    return a.unionByName(b).groupBy("shard").applyInPandas(merge, BLOOM_SCHEMA)
-
-
-def _probe_broadcast(candidates, filt, deserialize, lookup) -> DataFrame:
-    """Shared broadcast-probe scaffold for every approximate-membership
-    tier: driver-collect the sharded tables, broadcast a shard->entry
-    dict, gather per Arrow batch. ``deserialize(row) -> entry``,
-    ``lookup(entry, hi, lo) -> bool ndarray`` are the ONLY per-tier
-    pieces (bloom: bitmap+(m,k) / _test_bits; cuckoo: 2-D table /
-    _ck_lookup) — the shard dispatch, empty-filter and column plumbing
-    live once, here."""
-    spark = candidates.sparkSession
-    rows = filt.collect()
-    if not rows:
-        return candidates.withColumn("maybe_seen", F.lit(False))
-    n_shards = rows[0]["n_shards"]  # carried in the table; NEVER inferred
-    table = {r["shard"]: deserialize(r) for r in rows}
-    bc = spark.sparkContext.broadcast(table)
-
-    @F.pandas_udf("boolean")
-    def probe(hi: pd.Series, lo: pd.Series, shard: pd.Series) -> pd.Series:
-        t = bc.value
-        out = np.zeros(len(hi), dtype=bool)
-        hiv, lov, sv = hi.to_numpy(), lo.to_numpy(), shard.to_numpy()
-        for s in np.unique(sv):
-            ent = t.get(int(s))
-            if ent is None:
-                continue
-            mask = sv == s
-            out[mask] = lookup(ent, hiv[mask], lov[mask])
-        return pd.Series(out)
-
-    return candidates.withColumn(
-        "maybe_seen",
-        probe(
-            F.col("url_hash_hi"),
-            F.col("url_hash_lo"),
-            shard_expr(F.col("url_hash_hi"), n_shards),
-        ),
-    )
-
-
-def _probe_cogrouped(
-    candidates, filt, n_shards, deserialize_pdf, lookup
-) -> DataFrame:
-    """Shared cogrouped-probe scaffold (the 10^10-URL path — per-task
-    memory is one shard's table + one candidate partition, independent of
-    total filter size). Same (deserialize, lookup) contract as
-    :func:`_probe_broadcast`, with ``deserialize_pdf`` taking the shard's
-    one-row pandas frame."""
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in candidates.schema.fields
-    )
-    schema = f"{out_fields}, maybe_seen boolean"
-    cols = [f.name for f in candidates.schema.fields]
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        res = left.drop(columns=["__shard"])
-        if right.empty or left.empty:
-            res["maybe_seen"] = False
-            return res
-        ent = deserialize_pdf(right)
-        res["maybe_seen"] = lookup(
-            ent, left["url_hash_hi"].to_numpy(), left["url_hash_lo"].to_numpy()
-        )
-        return res
-
-    # geometry comes from the TABLE (the broadcast path's "carried in
-    # the table; NEVER inferred" contract): sharding candidates by a
-    # caller n_shards that drifted from the filter's build geometry
-    # (config change across a resume) would cogroup candidates with the
-    # wrong — usually absent — shard rows and report maybe_seen=False
-    # for seen urls: silent duplicate crawls. One bounded 1-row read of
-    # the column-pruned n_shards field; the caller value is only the
-    # empty-filter fallback (where every probe is False anyway).
-    geo = filt.select("n_shards").limit(1).collect()
-    if geo:
-        n_shards = int(geo[0]["n_shards"])
-    cand = candidates.withColumn("__shard", shard_expr(F.col("url_hash_hi"), n_shards))
-    return (
-        cand.groupBy("__shard")
-        .cogroup(filt.groupBy("shard"))
-        .applyInPandas(probe, schema)
-        .select(*cols, "maybe_seen")
-    )
-
-
-def _bloom_deserialize_row(r) -> tuple:
-    return (np.frombuffer(r["bloom"], dtype=np.uint8), r["m_bits"], r["k"])
-
-
-def _bloom_deserialize_pdf(right: pd.DataFrame) -> tuple:
-    return (
-        np.frombuffer(right["bloom"].iloc[0], dtype=np.uint8),
-        int(right["m_bits"].iloc[0]),
-        int(right["k"].iloc[0]),
-    )
-
-
-def _bloom_lookup(ent: tuple, hi: np.ndarray, lo: np.ndarray) -> np.ndarray:
-    bits, m, k = ent
-    return _test_bits(bits, _positions(hi, lo, k, m))
-
-
-def probe_with_broadcast(candidates: DataFrame, bloom: DataFrame) -> DataFrame:
-    """Append ``maybe_seen`` by probing driver-collected, broadcast bitmaps.
-
-    Best when the whole filter fits comfortably in memory (it does for
-    every local test/bench size). The UDF is one numpy gather per batch.
-    """
-    return _probe_broadcast(
-        candidates, bloom, _bloom_deserialize_row, _bloom_lookup
-    )
-
-
-def probe_cogrouped(
-    candidates: DataFrame, bloom: DataFrame, n_shards: int
-) -> DataFrame:
-    """Append ``maybe_seen`` without broadcasting: co-group candidates with
-    their shard's bitmap. The 10^10-URL path — per-task memory is one
-    bitmap + one candidate partition, independent of total filter size."""
-    return _probe_cogrouped(
-        candidates, bloom, n_shards, _bloom_deserialize_pdf, _bloom_lookup
-    )
-
-
-def dedup_against_seen(
-    candidates: DataFrame,
-    seen_exact: DataFrame | None,
-    bloom: DataFrame | None = None,
-    n_shards: int = 32,
-    broadcast_bloom: bool = True,
-    cuckoo: DataFrame | None = None,
-) -> DataFrame:
-    """Return only candidates NOT in the seen set (reference analog: the
-    unique-index upsert D1/D2 turning re-crawls into no-ops).
-
-    An approximate pre-filter (``bloom``, or the deletable ``cuckoo``
-    tier — ``cuckoo`` wins when both are passed) splits candidates into
-    definitely-new (filter says no; no join at all — zero false negatives
-    guarantee) and maybe-seen, which alone pays the exact ``left_anti``
-    join. Without a filter, plain anti.
-
-    An approximate tier WITHOUT an exact tier cannot prove membership —
-    treating its 'maybe' slice as seen would silently drop ~fpr of
-    genuinely-new URLs — so with ``seen_exact=None`` every candidate is
-    returned unfiltered.
-    """
-    if seen_exact is None:
-        return candidates
-    if cuckoo is not None:
-        probed = (
-            cuckoo_probe_broadcast(candidates, cuckoo)
-            if broadcast_bloom
-            else cuckoo_probe_cogrouped(candidates, cuckoo, n_shards)
-        )
-    elif bloom is not None:
-        probed = (
-            probe_with_broadcast(candidates, bloom)
-            if broadcast_bloom
-            else probe_cogrouped(candidates, bloom, n_shards)
-        )
-    else:
-        probed = None
-    if probed is not None:
-        definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        confirmed_new = maybe.join(
-            seen_exact.select("url_hash_hi", "url_hash_lo"),
-            ["url_hash_hi", "url_hash_lo"],
-            "left_anti",
-        )
-        return definitely_new.unionByName(confirmed_new)
-    return candidates.join(
-        seen_exact.select("url_hash_hi", "url_hash_lo"),
-        ["url_hash_hi", "url_hash_lo"],
-        "left_anti",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Cuckoo-filter tier (Fan et al. 2014, "Cuckoo Filter: Practically Better
 # Than Bloom"). The north-star membership design names BOTH structures:
-# the Bloom tier above is append-only (cross-round OR-union), while a
+# the Bloom tier is append-only (keys are only ever set), while a
 # cuckoo filter supports DELETION — the missing half that pairs with the
 # stale sweep (D4) and delete-by-facet (D5): when rows are purged from
 # the catalogue their keys can be evicted from the approximate tier too,
@@ -511,6 +276,291 @@ def _ck_delete_keys(table: np.ndarray, hi: np.ndarray, lo: np.ndarray) -> int:
     return removed
 
 
+# ---------------------------------------------------------------------------
+# One lifecycle for both tiers. A tier is its shard-row schema plus a few
+# numpy kernels over one shard's table; the Spark scaffolds below (build,
+# grow, broadcast probe, cogrouped probe) are written once against them.
+# ---------------------------------------------------------------------------
+
+
+class _Tier(NamedTuple):
+    schema: str
+    #: (per_shard, sizing knob) -> the shard row's geometry columns
+    geometry: Callable[..., dict]
+    #: geometry -> an empty table
+    blank: Callable[[dict], object]
+    #: shard row (Spark Row or pandas Series) -> a writable table
+    decode: Callable[[object], object]
+    #: table -> its payload and geometry columns
+    encode: Callable[[object], dict]
+    #: (table, hi, lo) -> None; sets the keys in place
+    insert: Callable
+    #: (table, hi, lo) -> (n,) bool membership
+    lookup: Callable
+    #: (table, hi, lo) -> keys removed; None for an append-only tier
+    delete: Callable | None = None
+
+
+def _bloom_geometry(per_shard: int, fpr: float = 0.01) -> dict:
+    m, k = bloom_params(per_shard, fpr)
+    return {"m_bits": m, "k": k}
+
+
+def _bloom_blank(geo: dict) -> tuple:
+    return np.zeros(geo["m_bits"] // 8, dtype=np.uint8), geo["m_bits"], geo["k"]
+
+
+def _bloom_decode(r) -> tuple:
+    bits = np.frombuffer(r["bloom"], dtype=np.uint8).copy()
+    return bits, int(r["m_bits"]), int(r["k"])
+
+
+def _bloom_encode(t: tuple) -> dict:
+    bits, m, k = t
+    return {"bloom": bits.tobytes(), "m_bits": m, "k": k}
+
+
+def _bloom_insert(t: tuple, hi: np.ndarray, lo: np.ndarray) -> None:
+    bits, m, k = t
+    _set_bits(bits, _positions(hi, lo, k, m))
+
+
+def _bloom_lookup(t: tuple, hi: np.ndarray, lo: np.ndarray) -> np.ndarray:
+    bits, m, k = t
+    return _test_bits(bits, _positions(hi, lo, k, m))
+
+
+def _ck_geometry(per_shard: int, load: float = 0.84) -> dict:
+    return {"n_buckets": cuckoo_params(per_shard, load), "slots": _CK_SLOTS}
+
+
+def _ck_blank(geo: dict) -> np.ndarray:
+    return np.zeros((geo["n_buckets"], _CK_SLOTS), dtype=np.uint16)
+
+
+def _ck_decode(r) -> np.ndarray:
+    table = np.frombuffer(r["ctable"], dtype=np.uint16).copy()
+    return table.reshape(int(r["n_buckets"]), _CK_SLOTS)
+
+
+def _ck_encode(table: np.ndarray) -> dict:
+    return {
+        "ctable": table.tobytes(), "n_buckets": table.shape[0],
+        "slots": _CK_SLOTS,
+    }
+
+
+BLOOM = _Tier(
+    BLOOM_SCHEMA, _bloom_geometry, _bloom_blank, _bloom_decode,
+    _bloom_encode, _bloom_insert, _bloom_lookup,
+)
+CUCKOO = _Tier(
+    CUCKOO_SCHEMA, _ck_geometry, _ck_blank, _ck_decode, _ck_encode,
+    _ck_insert_all, _ck_lookup, _ck_delete_keys,
+)
+
+
+def _tier_of(filt: DataFrame) -> _Tier:
+    """The tier of a filter table, from its schema (driver-side, no job)."""
+    return CUCKOO if "ctable" in filt.columns else BLOOM
+
+
+def _shard_row(tier: _Tier, shard: int, table, n_items: int, n_shards: int):
+    return pd.DataFrame([{
+        "shard": shard, **tier.encode(table), "n_items": n_items,
+        "n_shards": n_shards,
+    }])
+
+
+def _build(
+    keys: DataFrame, tier: _Tier, n_shards: int, per_shard: int | None, *knob
+) -> DataFrame:
+    """Build scaffold: one reduce task per shard inserts the shard's keys
+    into a blank table. ``per_shard=None`` sizes from the input count
+    (one count job); ``knob`` is the tier's sizing knob (fpr / load)."""
+    if per_shard is None:
+        per_shard = max(64, (2 * keys.count()) // max(1, n_shards))
+    geo = tier.geometry(per_shard, *knob)
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        table = tier.blank(geo)
+        tier.insert(
+            table, pdf["url_hash_hi"].to_numpy(), pdf["url_hash_lo"].to_numpy()
+        )
+        shard = int(pdf["shard"].iloc[0])
+        return _shard_row(tier, shard, table, len(pdf), n_shards)
+
+    return (
+        keys.select("url_hash_hi", "url_hash_lo")
+        .withColumn("shard", shard_expr(F.col("url_hash_hi"), n_shards))
+        .groupBy("shard")
+        .applyInPandas(build, tier.schema)
+    )
+
+
+def _grow(
+    filt: DataFrame, keys: DataFrame, tier: _Tier, n_shards: int,
+    per_shard: int, delete: bool = False,
+) -> DataFrame:
+    """Grow (or, for a deletable tier, shrink) scaffold: keys co-group
+    with their shard's standing row and are set straight into its table —
+    one Python stage, and the whole filter never rides one task or the
+    driver. The geometry is the caller's (the round loop's recorded
+    filter geometry), so no job reads it from the table: a shard with no
+    standing row starts blank at that geometry, and a standing row at any
+    other geometry raises."""
+    want = {"n_shards": n_shards, **tier.geometry(per_shard)}
+
+    def grow(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if right.empty:
+            table, n, shard = tier.blank(want), 0, int(left["__shard"].iloc[0])
+        else:
+            row = right.iloc[0]
+            got = {c: int(row[c]) for c in want}
+            if got != want:
+                raise ValueError(
+                    f"standing filter shard {int(row['shard'])} has geometry "
+                    f"{got}, not the {want} it is grown at"
+                )
+            table, n = tier.decode(row), int(row["n_items"])
+            shard = int(row["shard"])
+        if not left.empty:
+            hi = left["url_hash_hi"].to_numpy()
+            lo = left["url_hash_lo"].to_numpy()
+            if delete:
+                n -= tier.delete(table, hi, lo)
+            else:
+                tier.insert(table, hi, lo)
+                n += len(left)
+        return _shard_row(tier, shard, table, n, n_shards)
+
+    keyed = keys.select("url_hash_hi", "url_hash_lo").withColumn(
+        "__shard", shard_expr(F.col("url_hash_hi"), n_shards)
+    )
+    return (
+        keyed.groupBy("__shard")
+        .cogroup(filt.groupBy("shard"))
+        .applyInPandas(grow, tier.schema)
+    )
+
+
+def probe_with_broadcast(candidates: DataFrame, filt: DataFrame) -> DataFrame:
+    """Append ``maybe_seen`` by probing driver-collected, broadcast tables
+    of either tier: a shard->table dict, gathered per Arrow batch.
+
+    Best when the whole filter fits comfortably in memory (it does for
+    every local test/bench size). The UDF is one numpy gather per batch.
+    """
+    tier = _tier_of(filt)
+    spark = candidates.sparkSession
+    rows = filt.collect()
+    if not rows:
+        return candidates.withColumn("maybe_seen", F.lit(False))
+    n_shards = rows[0]["n_shards"]  # carried in the table; NEVER inferred
+    table = {r["shard"]: tier.decode(r) for r in rows}
+    bc = spark.sparkContext.broadcast(table)
+
+    @F.pandas_udf("boolean")
+    def probe(hi: pd.Series, lo: pd.Series, shard: pd.Series) -> pd.Series:
+        t = bc.value
+        out = np.zeros(len(hi), dtype=bool)
+        hiv, lov, sv = hi.to_numpy(), lo.to_numpy(), shard.to_numpy()
+        for s in np.unique(sv):
+            ent = t.get(int(s))
+            if ent is None:
+                continue
+            mask = sv == s
+            out[mask] = tier.lookup(ent, hiv[mask], lov[mask])
+        return pd.Series(out)
+
+    return candidates.withColumn(
+        "maybe_seen",
+        probe(
+            F.col("url_hash_hi"),
+            F.col("url_hash_lo"),
+            shard_expr(F.col("url_hash_hi"), n_shards),
+        ),
+    )
+
+
+def probe_cogrouped(
+    candidates: DataFrame, filt: DataFrame, n_shards: int
+) -> DataFrame:
+    """Append ``maybe_seen`` without broadcasting: co-group candidates with
+    their shard's table (either tier). The 10^10-URL path — per-task
+    memory is one table + one candidate partition, independent of total
+    filter size."""
+    tier = _tier_of(filt)
+    out_fields = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in candidates.schema.fields
+    )
+    schema = f"{out_fields}, maybe_seen boolean"
+    cols = [f.name for f in candidates.schema.fields]
+
+    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        res = left.drop(columns=["__shard"])
+        if right.empty or left.empty:
+            res["maybe_seen"] = False
+            return res
+        res["maybe_seen"] = tier.lookup(
+            tier.decode(right.iloc[0]),
+            left["url_hash_hi"].to_numpy(),
+            left["url_hash_lo"].to_numpy(),
+        )
+        return res
+
+    # geometry comes from the TABLE (the broadcast path's "carried in
+    # the table; NEVER inferred" contract): sharding candidates by a
+    # caller n_shards that drifted from the filter's build geometry
+    # (config change across a resume) would cogroup candidates with the
+    # wrong — usually absent — shard rows and report maybe_seen=False
+    # for seen urls: silent duplicate crawls. One bounded 1-row read of
+    # the column-pruned n_shards field; the caller value is only the
+    # empty-filter fallback (where every probe is False anyway).
+    geo = filt.select("n_shards").limit(1).collect()
+    if geo:
+        n_shards = int(geo[0]["n_shards"])
+    cand = candidates.withColumn("__shard", shard_expr(F.col("url_hash_hi"), n_shards))
+    return (
+        cand.groupBy("__shard")
+        .cogroup(filt.groupBy("shard"))
+        .applyInPandas(probe, schema)
+        .select(*cols, "maybe_seen")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Public lifecycle per tier: build, grow (bloom_union / cuckoo_insert),
+# cuckoo delete; then the tiered dedup.
+# ---------------------------------------------------------------------------
+
+
+def bloom_build(
+    keys: DataFrame,
+    n_shards: int = 32,
+    fpr: float = 0.01,
+    expected_per_shard: int | None = None,
+) -> DataFrame:
+    """Build the sharded Bloom table from (url_hash_hi, url_hash_lo) rows.
+
+    One reduce task per shard; inside the task everything is numpy.
+    ``expected_per_shard`` sizes the bitmaps; default assumes the input
+    count is representative (callers at scale pass their frontier-size
+    forecast so bitmaps don't need rebuilds as rounds append).
+    """
+    return _build(keys, BLOOM, n_shards, expected_per_shard, fpr)
+
+
+def bloom_union(
+    bloom: DataFrame, keys: DataFrame, n_shards: int, per_shard: int
+) -> DataFrame:
+    """Grow a bloom table by ``keys`` at its geometry (``n_shards``
+    shards sized for ``per_shard`` keys): each key's bits are set straight
+    into its shard's standing bitmap — the same bits as OR-ing in a delta
+    built at that geometry, in one cogrouped stage."""
+    return _grow(bloom, keys, BLOOM, n_shards, per_shard)
+
+
 def cuckoo_build(
     keys: DataFrame,
     n_shards: int = 32,
@@ -520,172 +570,61 @@ def cuckoo_build(
     """Build the sharded cuckoo table from (url_hash_hi, url_hash_lo)
     rows — same contract as :func:`bloom_build`, one reduce task per
     shard, numpy inside."""
-    if expected_per_shard is None:
-        total = keys.count()
-        expected_per_shard = max(64, (2 * total) // max(1, n_shards))
-        empty = total == 0
-    else:
-        empty = keys.isEmpty()
-    nb = cuckoo_params(expected_per_shard, load)
-    if empty:
-        # A zero-key build must still pin the shard geometry: an empty
-        # result frame would leave the next cuckoo_insert with no
-        # (n_shards, n_buckets) to honor (it now fails loud rather than
-        # inventing defaults). Emit one zeroed table per shard.
-        spark = keys.sparkSession
-        blank = np.zeros((nb, _CK_SLOTS), dtype=np.uint16).tobytes()
-        return spark.createDataFrame(
-            [(s, blank, 0, nb, _CK_SLOTS, n_shards) for s in range(n_shards)],
-            CUCKOO_SCHEMA,
-        )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        table = np.zeros((nb, _CK_SLOTS), dtype=np.uint16)
-        _ck_insert_all(
-            table, pdf["url_hash_hi"].to_numpy(), pdf["url_hash_lo"].to_numpy()
-        )
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "ctable": [table.tobytes()],
-                "n_items": [len(pdf)],
-                "n_buckets": [nb],
-                "slots": [_CK_SLOTS],
-                "n_shards": [n_shards],
-            }
-        )
-
-    return (
-        keys.select("url_hash_hi", "url_hash_lo")
-        .withColumn("shard", shard_expr(F.col("url_hash_hi"), n_shards))
-        .groupBy("shard")
-        .applyInPandas(build, CUCKOO_SCHEMA)
-    )
+    return _build(keys, CUCKOO, n_shards, expected_per_shard, load)
 
 
-def _ck_mutate(
-    cuckoo: DataFrame, keys: DataFrame, delete: bool
+def cuckoo_insert(
+    cuckoo: DataFrame, keys: DataFrame, n_shards: int, per_shard: int
 ) -> DataFrame:
-    """Shared cogrouped insert/delete: keys co-group with their shard's
-    table; the whole filter never rides one task or the driver."""
-    head = cuckoo.select("n_shards", "n_buckets").first()
-    if head is None:
-        # An EMPTY standing table carries no shard geometry. Silently
-        # inventing defaults (32/1024) would shard the new keys under a
-        # different pmod than the fleet's configured n_shards — later
-        # probes at the real n_shards would miss them (silent false
-        # negatives = duplicate crawls). Fail loud; the caller owns the
-        # geometry and should cuckoo_build() the first batch instead.
-        raise ValueError(
-            "cuckoo_insert/cuckoo_delete on an EMPTY standing table: shard "
-            "geometry (n_shards, n_buckets) is unknowable. Build the first "
-            "batch with cuckoo_build(keys, n_shards=...) instead."
-        )
-    n_shards = int(head[0])
-    global_nb = int(head[1])
-
-    def apply(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if right.empty:
-            if delete or left.empty:
-                return pd.DataFrame(
-                    columns=[
-                        "shard", "ctable", "n_items", "n_buckets", "slots",
-                        "n_shards",
-                    ]
-                )
-            # inserts into a shard the build never saw: start a fresh
-            # table at the fleet's bucket count (never drop keys)
-            table = np.zeros((global_nb, _CK_SLOTS), dtype=np.uint16)
-            _ck_insert_all(
-                table, left["url_hash_hi"].to_numpy(), left["url_hash_lo"].to_numpy()
-            )
-            return pd.DataFrame(
-                {
-                    "shard": [int(left["__shard"].iloc[0])],
-                    "ctable": [table.tobytes()],
-                    "n_items": [len(left)],
-                    "n_buckets": [global_nb],
-                    "slots": [_CK_SLOTS],
-                    "n_shards": [n_shards],
-                }
-            )
-        nb = int(right["n_buckets"].iloc[0])
-        table = (
-            np.frombuffer(right["ctable"].iloc[0], dtype=np.uint16)
-            .reshape(nb, _CK_SLOTS)
-            .copy()
-        )
-        n = int(right["n_items"].iloc[0])
-        if not left.empty:
-            hi = left["url_hash_hi"].to_numpy()
-            lo = left["url_hash_lo"].to_numpy()
-            if delete:
-                n -= _ck_delete_keys(table, hi, lo)
-            else:
-                _ck_insert_all(table, hi, lo)
-                n += len(left)
-        return pd.DataFrame(
-            {
-                "shard": [int(right["shard"].iloc[0])],
-                "ctable": [table.tobytes()],
-                "n_items": [n],
-                "n_buckets": [nb],
-                "slots": [_CK_SLOTS],
-                "n_shards": [int(right["n_shards"].iloc[0])],
-            }
-        )
-
-    keyed = keys.select("url_hash_hi", "url_hash_lo").withColumn(
-        "__shard", shard_expr(F.col("url_hash_hi"), n_shards)
-    )
-    return (
-        keyed.groupBy("__shard")
-        .cogroup(cuckoo.groupBy("shard"))
-        .applyInPandas(apply, CUCKOO_SCHEMA)
-    )
+    """Grow a cuckoo table by ``keys`` at its geometry — the same
+    cogrouped scaffold as :func:`bloom_union`; a cuckoo table absorbs the
+    key batch in place and stays deletable."""
+    return _grow(cuckoo, keys, CUCKOO, n_shards, per_shard)
 
 
-def cuckoo_insert(cuckoo: DataFrame, new_keys: DataFrame) -> DataFrame:
-    """Cross-round evolution: insert new keys into the standing filter
-    (the cuckoo analog of :func:`bloom_union` — tables can't be OR-merged,
-    they absorb key batches instead)."""
-    return _ck_mutate(cuckoo, new_keys, delete=False)
-
-
-def cuckoo_delete(cuckoo: DataFrame, purged_keys: DataFrame) -> DataFrame:
+def cuckoo_delete(
+    cuckoo: DataFrame, purged_keys: DataFrame, n_shards: int, per_shard: int
+) -> DataFrame:
     """Deletion — the capability the Bloom tier lacks: evict purged URLs
     (stale sweep D4, delete-by-facet D5) so the approximate tier stops
     claiming them. Safe only for keys that WERE inserted (the standard
     cuckoo precondition; deleting a never-inserted key can evict a
     colliding fingerprint and break no-false-negative for its owner)."""
-    return _ck_mutate(cuckoo, purged_keys, delete=True)
+    return _grow(cuckoo, purged_keys, CUCKOO, n_shards, per_shard, delete=True)
 
 
-def _ck_deserialize_row(r) -> np.ndarray:
-    return np.frombuffer(r["ctable"], dtype=np.uint16).reshape(
-        r["n_buckets"], _CK_SLOTS
-    )
-
-
-def _ck_deserialize_pdf(right: pd.DataFrame) -> np.ndarray:
-    return np.frombuffer(right["ctable"].iloc[0], dtype=np.uint16).reshape(
-        int(right["n_buckets"].iloc[0]), _CK_SLOTS
-    )
-
-
-def cuckoo_probe_broadcast(candidates: DataFrame, cuckoo: DataFrame) -> DataFrame:
-    """Append ``maybe_seen`` by probing driver-collected broadcast tables
-    (the local/small-filter path, mirroring :func:`probe_with_broadcast`)."""
-    return _probe_broadcast(
-        candidates, cuckoo, _ck_deserialize_row, _ck_lookup
-    )
-
-
-def cuckoo_probe_cogrouped(
-    candidates: DataFrame, cuckoo: DataFrame, n_shards: int
+def dedup_against_seen(
+    candidates: DataFrame,
+    seen_exact: DataFrame | None,
+    filt: DataFrame | None = None,
+    n_shards: int = 32,
+    broadcast: bool = True,
 ) -> DataFrame:
-    """The 10^10-URL probe: co-group candidates with their shard's table —
-    per-task memory is one shard table + one candidate partition."""
-    return _probe_cogrouped(
-        candidates, cuckoo, n_shards, _ck_deserialize_pdf, _ck_lookup
+    """Return only candidates NOT in the seen set (reference analog: the
+    unique-index upsert D1/D2 turning re-crawls into no-ops).
+
+    An approximate pre-filter ``filt`` (a bloom or cuckoo table; the tier
+    is read from its schema) splits candidates into definitely-new
+    (filter says no; no join at all — zero false negatives guarantee) and
+    maybe-seen, which alone pays the exact ``left_anti`` join. Without a
+    filter, plain anti.
+
+    An approximate tier WITHOUT an exact tier cannot prove membership —
+    treating its 'maybe' slice as seen would silently drop ~fpr of
+    genuinely-new URLs — so with ``seen_exact=None`` every candidate is
+    returned unfiltered.
+    """
+    if seen_exact is None:
+        return candidates
+    exact = seen_exact.select("url_hash_hi", "url_hash_lo")
+    key = ["url_hash_hi", "url_hash_lo"]
+    if filt is None:
+        return candidates.join(exact, key, "left_anti")
+    probed = (
+        probe_with_broadcast(candidates, filt)
+        if broadcast
+        else probe_cogrouped(candidates, filt, n_shards)
     )
+    definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+    return definitely_new.unionByName(maybe.join(exact, key, "left_anti"))

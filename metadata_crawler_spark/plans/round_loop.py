@@ -67,7 +67,8 @@ from ..operators.frontier import (  # noqa: F401
     valid_urls,
     with_politeness_schedule,
 )
-from ..operators.seen import (
+# the filter builds and grows are called through _FILTER_LIFECYCLE
+from ..operators.seen import (  # noqa: F401
     bloom_build,
     bloom_union,
     cuckoo_build,
@@ -165,13 +166,13 @@ class CrawlConfig:
     trap_min_urls: int = 50
     trap_max_novelty: float = 0.2
     #: approximate seen-set tier for filters this crawl BUILDS: "bloom"
-    #: (OR-union evolution, smallest bytes/key) or "cuckoo" (Fan et al.
-    #: 2014 — deletable, so facet purges / stale sweeps can evict keys;
-    #: evolves by absorbing each round's key batch via cuckoo_insert).
-    #: Same sharding, same no-false-negative contract, same broadcast vs
-    #: cogrouped probe switch. Capacity is never configured: it follows
-    #: the seen count (run_round's filter step); a resume under the other
-    #: tier rebuilds the filter.
+    #: (smallest bytes/key) or "cuckoo" (Fan et al. 2014 — deletable, so
+    #: facet purges / stale sweeps can evict keys). Both share one
+    #: lifecycle: same sharding, each round's keys set in place into the
+    #: standing shard tables, same no-false-negative contract, same
+    #: broadcast vs cogrouped probe switch. Capacity is never configured:
+    #: it follows the seen count (run_round's filter step); a resume
+    #: under the other tier rebuilds the filter.
     seen_filter: str = "bloom"
     #: per-host distinct-URL cardinality sketches (operators/sketches):
     #: when on, each round also commits one HLL sketch row per host over
@@ -198,6 +199,15 @@ BLOOM_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 #: smallest seen-filter capacity (keys per shard) a build uses; above it
 #: a build sizes for twice the seen count (see run_round's filter step)
 FILTER_MIN_PER_SHARD = 50_000
+
+#: each seen-filter tier's (build, grow) operators, by name: run_round
+#: looks them up in this module's namespace at call time, so wrappers
+#: installed on the module (perfbench/spans.py traces bloom_build and
+#: bloom_union by name) see the calls
+_FILTER_LIFECYCLE = {
+    "bloom": ("bloom_build", "bloom_union"),
+    "cuckoo": ("cuckoo_build", "cuckoo_insert"),
+}
 
 #: combined-score rounding — floating sums across shuffles are not
 #: bit-reproducible; 9 decimals makes ordering data-deterministic.
@@ -544,7 +554,6 @@ class Crawler:
             # this round dedups by the exact anti-join alone and builds a
             # fresh filter.
             standing = prev.get("seen_filter")
-        tier = standing["tier"] if standing else None
 
         frontier = frontier.persist()
         # r6: after round 0 the frontier size is ALREADY known exactly —
@@ -566,9 +575,8 @@ class Crawler:
         # neither its own persist nor a separate count job
         obs_dedup = Observation(f"dedup_{round_no}")
         new_urls = dedup_against_seen(
-            frontier, seen, bloom if tier == "bloom" else None, cfg.n_shards,
-            tier is not None and self.bloom_broadcast(standing),
-            cuckoo=bloom if tier == "cuckoo" else None,
+            frontier, seen, bloom if standing else None, cfg.n_shards,
+            standing is not None and self.bloom_broadcast(standing),
         ).observe(obs_dedup, F.count(F.lit(1)).alias("n"))
         # gates split from top-k so the carryover can be computed from the
         # ELIGIBLE set: URLs dropped by validity/robots are permanently
@@ -659,28 +667,23 @@ class Crawler:
 
         def _evolve_filter():
             # rebuild: the committed seen set plus this round's keys at
-            # the new geometry. Evolve — bloom: OR-in a same-geometry
-            # delta of this round's keys; cuckoo: absorb the key batch
-            # into the standing tables (insert-in-place, deletable later)
+            # the new geometry; otherwise grow the standing filter by
+            # this round's keys at its recorded geometry
+            build, grow = (globals()[f] for f in _FILTER_LIFECYCLE[geo["tier"]])
             round_keys = scheduled.select("url_hash_hi", "url_hash_lo")
-            cuckoo = geo["tier"] == "cuckoo"
             if rebuilt:
                 keys_df = round_keys if seen is None else seen.select(
                     "url_hash_hi", "url_hash_lo"
                 ).unionByName(round_keys)
-                build = cuckoo_build if cuckoo else bloom_build
-                new_bloom = build(
+                new_filter = build(
                     keys_df, geo["n_shards"],
                     expected_per_shard=geo["per_shard"],
                 )
-            elif cuckoo:
-                new_bloom = cuckoo_insert(bloom, round_keys)
             else:
-                new_bloom = bloom_union(bloom, bloom_build(
-                    round_keys, geo["n_shards"],
-                    expected_per_shard=geo["per_shard"],
-                ))
-            new_bloom.write.mode("overwrite").parquet(
+                new_filter = grow(
+                    bloom, round_keys, geo["n_shards"], geo["per_shard"]
+                )
+            new_filter.write.mode("overwrite").parquet(
                 self._table_path(round_no, "bloom")
             )
 
@@ -1150,9 +1153,11 @@ class Crawler:
         from ..plans.recrawl import checks_delta, recrawl_batch
 
         state = self.log.read() or {}
+        # committed crawl rounds only: a crashed round 0's orphan
+        # fetched table must not read as crawl data
         fetched_all = read_rounds(
             self.spark, self.checkpoint_dir, "fetched",
-            state.get("last_round", 0),
+            state.get("last_round", -1),
         )
         if fetched_all is None:
             raise ValueError(

@@ -8,7 +8,8 @@ here, over adversarial 128-bit key sets hypothesis gets to choose:
 
 - bloom: every inserted key tests positive (no false negatives, any
   (m, k) sizing, duplicate keys included);
-- bloom: union-by-OR preserves membership of both sides;
+- bloom: union-by-OR preserves membership of both sides, and setting
+  one side's keys into the other's bitmap gives the same bytes;
 - cuckoo: every inserted key looks up positive after the eviction
   cascade (or the documented "filter full" error is raised — never
   silent loss);
@@ -85,6 +86,11 @@ def test_bloom_or_union_preserves_membership(a, b):
     merged = bits_a | bits_b
     assert _test_bits(merged, _positions(*a, k, m)).all()
     assert _test_bits(merged, _positions(*b, k, m)).all()
+    # growing in place: setting b's positions into a copy of bits_a gives
+    # exactly the OR of the two bitmaps
+    grown = bits_a.copy()
+    _set_bits(grown, _positions(*b, k, m))
+    assert grown.tobytes() == merged.tobytes()
 
 
 @FUZZ

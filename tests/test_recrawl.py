@@ -505,3 +505,30 @@ def test_recrawl_rounds_match_independent_model(
         assert refreshed_k == {
             u for u, s in want.items() if s == "modified"
         }, f"seed={seed} pass={k}"
+
+
+def test_recrawl_refuses_uncommitted_round_zero(
+    spark, fixture_dir, tables, tmp_path
+):
+    """A crashed round 0 leaves its fetched table on disk without a
+    manifest entry: a recrawl pass must not read it as crawl data, and
+    must commit nothing."""
+    import os
+    from datetime import datetime
+
+    from metadata_crawler_spark.plans.round_loop import Crawler
+    from metadata_crawler_spark.sources.tables import write_round_table
+
+    ckpt = str(tmp_path / "ckpt")
+    orphan = spark.createDataFrame(
+        [("https://a.example.com/1", True, datetime(2024, 1, 1), "body")],
+        "url string, fetched boolean, warc_ts timestamp_ntz, text string",
+    )
+    write_round_table(orphan, ckpt, 0, "fetched")
+    c = Crawler(
+        spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
+        robots=tables["robots"], hosts=tables["hosts"], checkpoint_dir=ckpt,
+    )
+    with pytest.raises(ValueError, match="needs committed crawl rounds"):
+        c.recrawl_round(0, now_s=1_800_000_000.0)
+    assert "last_recrawl" not in (c.log.read() or {})

@@ -1,8 +1,11 @@
 """Seen-set tests: Bloom property tests (zero false negatives, bounded FPR),
-union evolution, cogrouped vs broadcast probe parity, tiered dedup equals
-plain anti-join (the reference's unique-index upsert semantics)."""
+in-place growth at explicit geometry, cogrouped vs broadcast probe
+parity, tiered dedup equals plain anti-join (the reference's unique-index
+upsert semantics)."""
 
 from __future__ import annotations
+
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -12,6 +15,7 @@ from metadata_crawler_spark.operators.seen import (
     bloom_build,
     bloom_params,
     bloom_union,
+    cuckoo_params,
     dedup_against_seen,
     probe_cogrouped,
     probe_with_broadcast,
@@ -53,16 +57,38 @@ def test_cogrouped_probe_matches_broadcast(spark, keys):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_bloom_union_is_or(spark, keys):
-    first = keys.filter(F.col("url_hash_lo") % 3 == 0)
-    second = keys.filter(F.col("url_hash_lo") % 3 == 1)
-    m_exp = 2 * 4000 // N_SHARDS
-    b1 = bloom_build(first, N_SHARDS, 0.01, expected_per_shard=m_exp)
-    b2 = bloom_build(second, N_SHARDS, 0.01, expected_per_shard=m_exp)
-    merged = bloom_union(b1, b2).cache()
-    both = first.unionByName(second)
-    missed = probe_with_broadcast(both, merged).filter(~F.col("maybe_seen")).count()
-    assert missed == 0
+def _pandas_nodes(df) -> list[str]:
+    """Python-worker nodes of a frame's optimized plan (no job runs)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.findall(r"\b\w+(?:InPandas|EvalPython)\b", plan)
+
+
+def _shard_rows(df) -> dict:
+    return {
+        r.shard: (bytes(r.bloom), r.n_items, r.m_bits, r.k, r.n_shards)
+        for r in df.collect()
+    }
+
+
+def test_bloom_union_is_or(spark, keys, tmp_path):
+    """Growing a bloom table by B's keys sets the same bits as building
+    A + B at the same geometry: per-shard rows are identical, for shards
+    in both, in A only and in B only — in one Python stage."""
+    shard = F.pmod("url_hash_hi", F.lit(N_SHARDS))
+    a = keys.filter((F.col("url_hash_lo") % 3 == 0) & (shard != 5))
+    b = keys.filter((F.col("url_hash_lo") % 3 == 1) & (shard != 6))
+    per_shard = 2 * 4000 // N_SHARDS
+    path = str(tmp_path / "bloom")
+    bloom_build(a, N_SHARDS, expected_per_shard=per_shard).write.parquet(path)
+    standing = spark.read.parquet(path)
+    grown = bloom_union(standing, b, N_SHARDS, per_shard)
+    assert _pandas_nodes(grown) == ["FlatMapCoGroupsInPandas"]
+    want = _shard_rows(
+        bloom_build(a.unionByName(b), N_SHARDS, expected_per_shard=per_shard)
+    )
+    got = _shard_rows(grown)
+    assert 5 not in _shard_rows(standing) and 5 in got
+    assert got == want and len(got) == N_SHARDS
 
 
 def test_dedup_tiers_equal_plain_antijoin(spark, keys):
@@ -93,13 +119,11 @@ def _cuckoo_imports():
         cuckoo_build,
         cuckoo_delete,
         cuckoo_insert,
-        cuckoo_probe_broadcast,
-        cuckoo_probe_cogrouped,
     )
 
     return (
         cuckoo_build, cuckoo_delete, cuckoo_insert,
-        cuckoo_probe_broadcast, cuckoo_probe_cogrouped,
+        probe_with_broadcast, probe_cogrouped,
     )
 
 
@@ -135,10 +159,10 @@ def test_cuckoo_cogrouped_matches_broadcast(spark, keys):
 
 def test_cuckoo_delete_evicts(spark, keys):
     build, delete, _, probe_b, _ = _cuckoo_imports()
-    ck = build(keys, n_shards=N_SHARDS)
+    ck = build(keys, n_shards=N_SHARDS, expected_per_shard=1000)
     purged = keys.filter(F.col("url").endswith("/p/7")).cache()
     kept = keys.subtract(purged)
-    ck2 = delete(ck, purged).cache()
+    ck2 = delete(ck, purged, N_SHARDS, 1000).cache()
     # kept keys: still zero false negatives
     assert probe_b(kept, ck2).filter(~F.col("maybe_seen")).count() == 0
     # purged keys: gone (16-bit fp collisions could leave stragglers, but
@@ -150,8 +174,8 @@ def test_cuckoo_insert_evolution(spark, keys):
     build, _, insert, probe_b, _ = _cuckoo_imports()
     old = keys.filter(F.col("url_hash_hi") % 2 == 0).cache()
     new = keys.subtract(old).cache()
-    ck = insert(build(old, n_shards=N_SHARDS,
-                      expected_per_shard=2000), new).cache()
+    ck = insert(build(old, n_shards=N_SHARDS, expected_per_shard=2000),
+                new, N_SHARDS, 2000).cache()
     assert probe_b(keys, ck).filter(~F.col("maybe_seen")).count() == 0
     # n_items accounting survives the round trip
     total = sum(r.n_items for r in ck.collect())
@@ -169,36 +193,47 @@ def test_cuckoo_dedup_matches_plain_antijoin(spark, keys):
         got = sorted(
             r.url
             for r in dedup_against_seen(
-                keys, seen, None, n_shards=N_SHARDS,
-                broadcast_bloom=broadcast, cuckoo=ck,
+                keys, seen, ck, N_SHARDS, broadcast
             ).collect()
         )
         assert got == want
 
 
 def test_cuckoo_empty_table_geometry(spark, keys):
-    """A zero-key build pins the shard geometry (one zeroed table per
-    shard), and mutating an EMPTY standing table — which carries no
-    geometry at all — fails loud instead of inventing 32/1024 defaults
-    that would mis-shard keys and yield silent false negatives."""
-    import pytest
-
+    """The caller owns the geometry: a zero-key build is an empty table,
+    and growing it at explicit geometry creates each shard's table at
+    that geometry, with no false negatives under either probe."""
     build, _, insert, probe_b, probe_c = _cuckoo_imports()
-    zero = keys.limit(0)
-    ck0 = build(zero, n_shards=N_SHARDS, expected_per_shard=2000).cache()
-    rows = ck0.collect()
+    ck0 = build(keys.limit(0), n_shards=N_SHARDS, expected_per_shard=2000)
+    assert ck0.count() == 0
+    ck1 = insert(ck0, keys, N_SHARDS, 2000).cache()
+    rows = ck1.collect()
     assert len(rows) == N_SHARDS
-    assert all(r.n_shards == N_SHARDS and r.n_items == 0 for r in rows)
-    # geometry survives: insert into the zero-key build, then probe at
-    # the fleet's real shard count — no false negatives
-    ck1 = insert(ck0, keys).cache()
+    assert {(r.n_shards, r.n_buckets) for r in rows} == {
+        (N_SHARDS, cuckoo_params(2000))
+    }
+    assert sum(r.n_items for r in rows) == keys.count()
     assert probe_b(keys, ck1).filter(~F.col("maybe_seen")).count() == 0
     assert (
         probe_c(keys, ck1, N_SHARDS).filter(~F.col("maybe_seen")).count() == 0
     )
-    # a truly EMPTY standing frame (no geometry to honor) refuses mutation
-    with pytest.raises(ValueError, match="EMPTY standing table"):
-        insert(ck0.limit(0), keys)
+
+
+@pytest.mark.parametrize("op", ["bloom_union", "cuckoo_insert", "cuckoo_delete"])
+def test_grow_refuses_other_geometry(spark, keys, op):
+    """Grow and delete take the filter's geometry from the caller, and
+    raise when a standing shard row was built at another shard count or
+    capacity (m_bits / n_buckets) — keys sharded or placed by a geometry
+    the table does not have would be silent false negatives."""
+    from metadata_crawler_spark.operators import seen
+
+    build = seen.cuckoo_build if op.startswith("cuckoo") else bloom_build
+    grow = getattr(seen, op)
+    standing = build(keys, N_SHARDS, expected_per_shard=1000).cache()
+    batch = keys.limit(200)
+    for n_shards, per_shard in ((2 * N_SHARDS, 1000), (N_SHARDS, 4000)):
+        with pytest.raises(Exception, match="standing filter shard"):
+            grow(standing, batch, n_shards, per_shard).collect()
 
 
 def test_cogrouped_probe_survives_geometry_drift(spark, keys):
