@@ -388,9 +388,21 @@ def mine_blocked_hosts(
     host = (
         F.col(host_col) if host_col is not None else host_expr(F.col(url_col))
     )
-    flagged = F.coalesce(F.col(flag_col), F.lit(False))
-    counts = (
-        df.select(host.alias("domain"), flagged.alias("_f"))
+    counts = host_flag_counts(df, F.col(flag_col), host)
+    return blocked_hosts_from_counts(counts, min_docs, max_flag_frac)
+
+
+def host_flag_counts(df: DataFrame, flagged: Column, host: Column) -> DataFrame:
+    """The counting half of :func:`mine_blocked_hosts`: per-host
+    (domain, n_docs, n_flagged) over ``df``'s rows. Rows without a host
+    are dropped; NULL flags count as not-flagged. The counts are
+    additive, so the crawl loop's blocklist sweep commits them per span
+    and sums them later."""
+    return (
+        df.select(
+            host.alias("domain"),
+            F.coalesce(flagged, F.lit(False)).alias("_f"),
+        )
         .where(F.col("domain").isNotNull() & (F.col("domain") != ""))
         .groupBy("domain")
         .agg(
@@ -398,7 +410,6 @@ def mine_blocked_hosts(
             F.sum(F.col("_f").cast("long")).alias("n_flagged"),
         )
     )
-    return blocked_hosts_from_counts(counts, min_docs, max_flag_frac)
 
 
 def blocked_hosts_from_counts(
@@ -407,7 +418,7 @@ def blocked_hosts_from_counts(
     """The support/threshold cut over per-host (domain, n_docs,
     n_flagged) counts — ONE shared rule, so the one-shot miner and the
     crawl loop's incremental host_quality partials (plans/round_loop.
-    _blocklist_sweep sums additive per-sweep tables) cannot drift.
+    Crawler._mine_host_cut sums additive per-sweep tables) cannot drift.
     Accepts pre-aggregated counts (sums them again, a no-op on already
     per-domain rows) and returns (domain, n_docs, flag_frac)."""
     return (

@@ -53,8 +53,17 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.quality import gopher_quality_flags
 from ..functions.text import _decode, _extract_text_batch, _HREF_RE, _META_LANG_RE
-from ..functions.urls import canonicalize_udf, with_canonical, with_url_hash
+from ..functions.urls import (
+    blocked_hosts_from_counts,
+    canonicalize_udf,
+    filter_blocked_hosts,
+    host_expr,
+    host_flag_counts,
+    with_canonical,
+    with_url_hash,
+)
 # per_host_topk and with_politeness_schedule are not called in this
 # module (schedule_eligible composes them); they stay module attributes
 # because perfbench/spans.py wraps them by name on this module.
@@ -62,6 +71,7 @@ from ..operators.frontier import (  # noqa: F401
     expand_outlinks,
     gate_frontier,
     per_host_topk,
+    rescore_frontier,
     schedule_eligible,
     small_enough_to_broadcast,
     valid_urls,
@@ -77,11 +87,14 @@ from ..operators.seen import (  # noqa: F401
     filter_bytes,
     filter_health,
 )
+from ..operators.traps import trap_hosts_from_partials, trap_partials
 from ..operators.versioning import latest_per_key
 from ..sources.tables import (
     ManifestLog,
     path_exists,
     read_rounds,
+    require_committed,
+    round_table_paths,
     write_round_table,
 )
 
@@ -130,9 +143,10 @@ class CrawlConfig:
     #: periodic PageRank frontier re-scoring (VERDICT r4 item 8): every k
     #: rounds the next frontier's OPIC scores are replaced by a fixed-
     #: iteration PageRank over the link graph accumulated in the committed
-    #: fetched tables (operators/frontier.rescore_frontier) — OPIC's local
-    #: cash-splitting keeps rounds cheap; the periodic global sweep
-    #: re-prioritizes by link authority. None/0 = off (default).
+    #: fetched tables (operators/frontier.rescore_frontier, at its default
+    #: iteration count) — OPIC's local cash-splitting keeps rounds cheap;
+    #: the periodic global sweep re-prioritizes by link authority.
+    #: None/0 = off (default).
     pagerank_every: int | None = None
     #: serialize fetch offsets across ALL subdomains of one registrable
     #: domain (PSL — operators/frontier.with_site): a thousand
@@ -143,28 +157,27 @@ class CrawlConfig:
     #: PSL rule overrides for site grouping (None = builtin subset;
     #: production passes the full downloaded public-suffix list)
     psl_rules: tuple | None = None
-    pagerank_iterations: int = 3
-    #: periodic host-blocklist mining (functions/urls.mine_blocked_hosts):
-    #: every N rounds, Gopher-flag the accumulated fetched text, mine
-    #: hosts whose documents are mostly junk (support-gated), commit the
+    #: periodic host-blocklist mining (functions/urls.mine_blocked_hosts'
+    #: counting and threshold rules, at its default support and flag-rate
+    #: thresholds): every N rounds, Gopher-flag the accumulated fetched
+    #: text, mine hosts whose documents are mostly junk, commit the
     #: candidates as this round's `blocklist` table, and drop their urls
     #: (incl. subdomains) from the next frontier — the RefinedWeb
-    #: host-level cut closing the loop corpus quality -> frontier. Off by
-    #: default; None mines never.
+    #: host-level cut closing the loop corpus quality -> frontier. Rounds
+    #: between sweeps apply the newest committed list as a standing gate.
+    #: Off by default; None mines never.
     blocklist_every: int | None = None
-    blocklist_min_docs: int = 20
-    blocklist_max_flag_frac: float = 0.5
-    #: periodic content-aware crawler-trap sweep (operators/traps): every
-    #: N rounds, mine hosts whose fetched slice shows novelty collapse
-    #: (many urls, few distinct bodies) or url-template dominance, commit
-    #: the report as this round's `trap_hosts` table, and drop their urls
-    #: from the next frontier. Incremental like the blocklist sweep:
-    #: additive (domain, template, n) partials + mergeable per-host HLL
-    #: novelty sketches, each sweep covering exactly its own span — never
-    #: a rescan of crawl history. Off by default.
+    #: periodic content-aware crawler-trap sweep (operators/traps, at
+    #: trap_hosts_from_partials' default thresholds): every N rounds,
+    #: mine hosts whose fetched slice shows novelty collapse (many urls,
+    #: few distinct bodies) or url-template dominance, commit the report
+    #: as this round's `trap_hosts` table, and drop their urls from the
+    #: next frontier. Incremental like the blocklist sweep, through the
+    #: same host-cut sweep (Crawler._mine_host_cut): additive (domain,
+    #: template, n) partials + mergeable per-host HLL novelty sketches,
+    #: each sweep covering exactly its own span — never a rescan of crawl
+    #: history. Off by default.
     trap_every: int | None = None
-    trap_min_urls: int = 50
-    trap_max_novelty: float = 0.2
     #: approximate seen-set tier for filters this crawl BUILDS: "bloom"
     #: (smallest bytes/key) or "cuckoo" (Fan et al. 2014 — deletable, so
     #: facet purges / stale sweeps can evict keys). Both share one
@@ -207,6 +220,30 @@ FILTER_MIN_PER_SHARD = 50_000
 _FILTER_LIFECYCLE = {
     "bloom": ("bloom_build", "bloom_union"),
     "cuckoo": ("cuckoo_build", "cuckoo_insert"),
+}
+
+#: the host cuts, in the order they apply to the next frontier: the
+#: partial tables a sweep commits for its span, the span -> partials
+#: step, and the verdict over ALL committed partials (at the operators'
+#: default thresholds). The verdict lambdas resolve their operator on
+#: this module at call time, so a caller can patch its thresholds here.
+_HOST_CUTS = {
+    "blocklist": (
+        ("host_quality",),
+        # per-host Gopher flag counts, by mine_blocked_hosts' counting rule
+        lambda ok: (host_flag_counts(
+            ok, gopher_quality_flags(F.col("text"))["flagged"],
+            host_expr(F.col("url")),
+        ),),
+        lambda counts: blocked_hosts_from_counts(counts),
+    ),
+    "trap_hosts": (
+        ("host_templates", "trap_content_hll"),
+        # one pass: both partials come off a shared checkpointed
+        # projection — the span's bodies are scanned + hashed once
+        trap_partials,
+        lambda tpl, hll: trap_hosts_from_partials(tpl, hll).filter("trap"),
+    ),
 }
 
 #: combined-score rounding — floating sums across shuffles are not
@@ -511,10 +548,12 @@ class Crawler:
         sketch tables ONLY (requires config.host_sketch). Work is
         O(hosts x rounds) sketch rows; the scheduled history is never
         re-read. Per-round sketch unioned == whole-history rebuild is
-        the tested HLL invariant (test_sketches.py)."""
+        the tested HLL invariant (test_sketches.py). ``upto`` must be
+        committed (ValueError otherwise): a crashed round's orphan
+        sketch is not read."""
         from ..operators.sketches import hll_estimates, hll_merge
-        from ..sources.tables import round_table_paths
 
+        require_committed(self.log, upto)
         paths = round_table_paths(self.checkpoint_dir, "host_sketch", upto)
         if not paths:
             raise ValueError(
@@ -826,12 +865,13 @@ class Crawler:
             # URLs are gone. The periodic sweeps below read COMMITTED
             # round tables (including this round's fetched dir), so a
             # sweep round first joins the fetched write.
-            sweep_round = bool(
-                (cfg.pagerank_every and round_no % cfg.pagerank_every == 0)
-                or (cfg.blocklist_every and round_no % cfg.blocklist_every == 0)
-                or (cfg.trap_every and round_no % cfg.trap_every == 0)
-            )
-            if sweep_round:
+            every = {
+                "pagerank": cfg.pagerank_every,
+                "blocklist": cfg.blocklist_every,
+                "trap_hosts": cfg.trap_every,
+            }
+            due = {n: bool(k) and round_no % k == 0 for n, k in every.items()}
+            if any(due.values()):
                 fut_fetch.result()
 
             carryover = gated.select(
@@ -865,37 +905,34 @@ class Crawler:
             ).select("url", "depth", "score", "url_hash_hi", "url_hash_lo")
             nxt = _combine_frontier(carryover.unionByName(children))
             # periodic global re-prioritization + host-level cuts.
-            # r6 (guide §2.6): the two sweep MININGS (blocklist span
-            # flags, trap partials) are independent scans of committed
-            # tables — they ride the pool while the main thread runs the
-            # PageRank re-score; the cheap cut APPLICATION (one
-            # suffix-aware anti join each) chains afterwards in the same
-            # order as before, so the resulting frontier is identical.
-            bl_sweep = bool(
-                cfg.blocklist_every and round_no % cfg.blocklist_every == 0
-            )
-            tr_sweep = bool(
-                cfg.trap_every and round_no % cfg.trap_every == 0
-            )
-            fut_bl = pool.submit(self._blocklist_mine, round_no) if bl_sweep else None
-            fut_tr = pool.submit(self._trap_mine, round_no) if tr_sweep else None
-            if cfg.pagerank_every and round_no % cfg.pagerank_every == 0:
+            # r6 (guide §2.6): the due cuts' MININGS are independent
+            # scans of committed tables — they ride the pool while the
+            # main thread runs the PageRank re-score; the cheap cut
+            # APPLICATION (one suffix-aware anti join each) chains
+            # afterwards in _HOST_CUTS order.
+            mined = {
+                n: pool.submit(self._mine_host_cut, n, every[n], round_no)
+                for n in _HOST_CUTS if due[n]
+            }
+            if due["pagerank"]:
                 nxt = self._pagerank_rescore(nxt, round_no)
-            # host-level quality cut: sweep rounds MINE (incremental
-            # partials) + commit + filter; every other round applies the
-            # latest committed list as a STANDING gate — without it, a
-            # blocked host's outlinked children re-enter via this round's
-            # `children` and keep being fetched until the next sweep
-            if bl_sweep:
-                nxt = self._apply_cut(nxt, fut_bl.result())
-            elif cfg.blocklist_every:
-                nxt = self._apply_committed_host_cut(nxt, "blocklist", round_no)
-            # crawler-trap cut: same sweep/standing-gate split for hosts
-            # whose URL space explodes without new content
-            if tr_sweep:
-                nxt = self._apply_cut(nxt, fut_tr.result())
-            elif cfg.trap_every:
-                nxt = self._apply_committed_host_cut(nxt, "trap_hosts", round_no)
+            for n in _HOST_CUTS:
+                if n in mined:
+                    nxt = self._apply_cut(nxt, mined[n].result())
+                elif every[n]:
+                    # between sweeps the NEWEST committed table is a
+                    # STANDING gate (each sweep rewrites the full
+                    # thresholded list from summed partials, so latest
+                    # wins, no union) — without it a cut host's outlinked
+                    # children re-enter via this round's `children` and
+                    # keep being fetched until the next sweep
+                    paths = round_table_paths(
+                        self.checkpoint_dir, n, round_no - 1
+                    )
+                    if paths:
+                        nxt = self._apply_cut(
+                            nxt, self.spark.read.parquet(paths[-1])
+                        )
             obs_next = Observation(f"next_{round_no}")
             nxt = nxt.observe(obs_next, F.count(F.lit(1)).alias("n"))
             write_round_table(nxt, self.checkpoint_dir, round_no, "frontier_next")
@@ -958,10 +995,6 @@ class Crawler:
         committed fetch's url -> canonicalized outlinks) applied to the
         next frontier's scores. Rounding to SCORE_DECIMALS keeps the
         combined ordering data-deterministic, same as OPIC scores."""
-        from ..functions.urls import with_canonical
-        from ..operators.frontier import rescore_frontier
-
-        cfg = self.config
         fetched_all = read_rounds(
             self.spark, self.checkpoint_dir, "fetched", upto
         )
@@ -972,142 +1005,50 @@ class Crawler:
             .select(F.col("url").alias("src"), F.explode("links").alias("dst"))
         )
         edges = with_canonical(edges, "dst")
-        out = rescore_frontier(frontier, edges, cfg.pagerank_iterations)
+        out = rescore_frontier(frontier, edges)
         return out.withColumn("score", F.round("score", SCORE_DECIMALS))
 
-    def _apply_committed_host_cut(
-        self, frontier: DataFrame, name: str, round_no: int
-    ) -> DataFrame:
-        """Standing between-sweeps gate: anti-join the NEWEST committed
-        host-cut table (`blocklist` / `trap_hosts` — each sweep rewrites
-        the full thresholded list from summed partials, so latest wins,
-        no union) out of the next frontier. One small-table read + the
-        suffix-aware single anti join of filter_blocked_hosts per
-        round; no mining happens here."""
-        from ..functions.urls import filter_blocked_hosts
-        from ..sources.tables import round_table_paths
-
-        paths = round_table_paths(
-            self.checkpoint_dir, name, round_no - 1
-        )
-        if not paths:
-            return frontier
-        cut = self.spark.read.parquet(paths[-1])
-        if not cut.take(1):
-            return frontier
-        return filter_blocked_hosts(frontier, cut.select("domain"))
-
     def _apply_cut(self, frontier: DataFrame, cut: DataFrame | None) -> DataFrame:
-        """Apply a mined host-cut table (or pass through on None/empty)."""
-        from ..functions.urls import filter_blocked_hosts
-
+        """Drop a host-cut table's domains (and their subdomains) from
+        the frontier with the suffix-aware single anti join of
+        filter_blocked_hosts; pass through on a None or empty table.
+        Serves both a sweep's fresh verdict and the standing gate
+        between sweeps."""
         if cut is None or not cut.take(1):
             return frontier
         return filter_blocked_hosts(frontier, cut.select("domain"))
 
-    def _blocklist_mine(self, upto: int) -> DataFrame | None:
-        """Mine junk-dominated hosts (Gopher rule flags -> per-host flag
-        rates, support-gated), commit the candidates as this round's
-        `blocklist` table, and return the committed cut table (None when
-        there is nothing to mine). The filter application lives in
-        :meth:`_apply_cut` so the mining can ride the round's thread
-        pool (r6).
+    def _mine_host_cut(self, name: str, every: int, upto: int) -> DataFrame | None:
+        """One host-cut sweep (a ``_HOST_CUTS`` entry: ``blocklist`` or
+        ``trap_hosts``): compute the span's partials, commit them, then
+        commit the verdict over ALL committed partials as this round's
+        ``name`` table and return it (None when no partials exist). The
+        cut's application lives in :meth:`_apply_cut`, so the mining can
+        ride the round's thread pool (r6).
 
-        INCREMENTAL: per-host (n_docs, n_flagged) counts are additive,
-        so each sweep flags only its own span of rounds — exactly
-        (upto - blocklist_every, upto], a pure function of the round
-        number, so a replayed sweep rewrites the identical partial — and
-        commits the O(hosts)-row partial as `host_quality`. The
-        blocklist then thresholds the SUM of all committed partials:
-        per-sweep work is O(span fetched text + hosts), never a rescan
-        of the whole crawl history."""
-        from ..functions.quality import gopher_quality_flags
-        from ..functions.urls import blocked_hosts_from_counts, host_expr
-
-        cfg = self.config
-        span_from = max(upto - (cfg.blocklist_every or 1) + 1, 0)
+        INCREMENTAL: the partials are additive counts or mergeable
+        sketches, so each sweep reads only its own span of fetched
+        rounds — exactly (upto - every, upto], a pure function of the
+        round number, so a replayed sweep rewrites the identical
+        partial. Per-sweep work is O(span fetched text + hosts), never a
+        rescan of the whole crawl history."""
+        tables, partials, verdict = _HOST_CUTS[name]
         span = read_rounds(
             self.spark, self.checkpoint_dir, "fetched", upto,
-            from_round=span_from,
-        )
-        if span is not None:
-            junk = F.coalesce(
-                gopher_quality_flags(F.col("text"))["flagged"], F.lit(False)
-            )
-            partial = (
-                span.filter(F.col("fetched") & F.col("text").isNotNull())
-                .select(host_expr(F.col("url")).alias("domain"), junk.alias("_f"))
-                .where(F.col("domain").isNotNull() & (F.col("domain") != ""))
-                .groupBy("domain")
-                .agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum(F.col("_f").cast("long")).alias("n_flagged"),
-                )
-            )
-            write_round_table(
-                partial, self.checkpoint_dir, upto, "host_quality"
-            )
-        totals = read_rounds(
-            self.spark, self.checkpoint_dir, "host_quality", upto
-        )
-        if totals is None:
-            return None
-        mined = blocked_hosts_from_counts(
-            totals, cfg.blocklist_min_docs, cfg.blocklist_max_flag_frac
-        )
-        path = write_round_table(mined, self.checkpoint_dir, upto, "blocklist")
-        return self.spark.read.parquet(path)
-
-    def _trap_mine(self, upto: int) -> DataFrame | None:
-        """Mine crawler-trap hosts (operators/traps: novelty collapse or
-        url-template dominance over fetched bodies), commit the report as
-        this round's `trap_hosts` table, and return it (None when no
-        partials exist). Application lives in :meth:`_apply_cut` (r6 —
-        pooled mining, see _blocklist_mine).
-
-        INCREMENTAL (the host_quality contract): each sweep writes its
-        own span's additive (domain, template, n) counts as
-        `host_templates` and its mergeable per-host content-HLL as
-        `trap_content_hll` — both pure functions of the round number, so
-        a replayed sweep rewrites identical partials. The verdict then
-        sums/unions ALL committed partials: per-sweep work is O(span
-        fetched text + hosts x templates), never a crawl-history rescan.
-        """
-        from ..operators.traps import (
-            trap_hosts_from_partials,
-            trap_partials,
-        )
-
-        cfg = self.config
-        span_from = max(upto - (cfg.trap_every or 1) + 1, 0)
-        span = read_rounds(
-            self.spark, self.checkpoint_dir, "fetched", upto,
-            from_round=span_from,
+            from_round=max(upto - every + 1, 0),
         )
         if span is not None:
             ok = span.filter(F.col("fetched") & F.col("text").isNotNull())
-            # one pass: both partials come off a shared checkpointed
-            # projection — the span's bodies are scanned + hashed once
-            tpl_p, hll_p = trap_partials(ok)
-            write_round_table(
-                tpl_p, self.checkpoint_dir, upto, "host_templates"
-            )
-            write_round_table(
-                hll_p, self.checkpoint_dir, upto, "trap_content_hll"
-            )
-        tpl = read_rounds(
-            self.spark, self.checkpoint_dir, "host_templates", upto
-        )
-        hll = read_rounds(
-            self.spark, self.checkpoint_dir, "trap_content_hll", upto
-        )
-        if tpl is None or hll is None:
+            for table, partial in zip(tables, partials(ok)):
+                write_round_table(partial, self.checkpoint_dir, upto, table)
+        totals = [
+            read_rounds(self.spark, self.checkpoint_dir, t, upto)
+            for t in tables
+        ]
+        if any(t is None for t in totals):
             return None
-        report = trap_hosts_from_partials(
-            tpl, hll, cfg.trap_min_urls, cfg.trap_max_novelty
-        )
         path = write_round_table(
-            report.filter("trap"), self.checkpoint_dir, upto, "trap_hosts"
+            verdict(*totals), self.checkpoint_dir, upto, name
         )
         return self.spark.read.parquet(path)
 

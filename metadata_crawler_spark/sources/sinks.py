@@ -25,13 +25,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.versioning import latest_per_key
-from .tables import read_rounds
+from .tables import ManifestLog, read_rounds, require_committed
 
 
 def read_catalogue(
     spark: SparkSession, checkpoint_dir: str, upto_round: int
 ) -> DataFrame:
-    """The ``files`` index: every committed fetched record."""
+    """The ``files`` index: every committed fetched record through round
+    ``upto_round``, which must be committed in the checkpoint's
+    manifest (ValueError otherwise)."""
+    require_committed(ManifestLog(checkpoint_dir), upto_round)
     df = read_rounds(spark, checkpoint_dir, "fetched", upto_round)
     if df is None:
         raise FileNotFoundError(f"no committed rounds under {checkpoint_dir}")

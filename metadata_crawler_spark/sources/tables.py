@@ -67,6 +67,20 @@ class ManifestLog:
         os.replace(tmp, self.path)
 
 
+def require_committed(log: ManifestLog, upto_round: int) -> None:
+    """Raise ValueError unless rounds through ``upto_round`` are
+    committed in ``log``'s manifest. A round that crashed after its
+    table writes but before its manifest flip left round dirs on disk;
+    a reader that probes paths up to a caller-given round would read
+    them as committed data."""
+    last = (log.read() or {}).get("last_round", -1)
+    if upto_round > last:
+        raise ValueError(
+            f"round {upto_round} is not committed under {log.root!r} "
+            f"(last committed round: {last})"
+        )
+
+
 def write_round_table(df: DataFrame, root: str, round_no: int, name: str) -> str:
     """Round-scoped parquet write (overwrite => replay-idempotent)."""
     path = os.path.join(root, f"round={round_no:05d}", name)

@@ -152,7 +152,10 @@ def test_push_catalogue_dual_index(spark, tmp_path):
     """files + latest dual-core push (reference's dual put): latest must
     carry exactly one record per url (the newest), files all of them."""
     from metadata_crawler_spark.sources.http_sink import push_catalogue
-    from metadata_crawler_spark.sources.tables import write_round_table
+    from metadata_crawler_spark.sources.tables import (
+        ManifestLog,
+        write_round_table,
+    )
 
     ck = str(tmp_path / "ck")
     for rnd in (0, 1):
@@ -163,6 +166,7 @@ def test_push_catalogue_dual_index(spark, tmp_path):
             "concat('body', id) AS text",
         )
         write_round_table(df, ck, rnd, "fetched")
+    ManifestLog(ck).commit({"last_round": 1})
     files_srv = _IndexServer(key="url")
     latest_srv = _IndexServer(key="url")
     try:

@@ -7,10 +7,14 @@ crawl ordering."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pyspark.sql.functions as F
 import pytest
 
+from metadata_crawler_spark.functions.urls import blocked_hosts_from_counts
+from metadata_crawler_spark.operators.frontier import rescore_frontier
+from metadata_crawler_spark.operators.traps import trap_hosts_from_partials
 from metadata_crawler_spark.plans import round_loop
 from metadata_crawler_spark.plans.round_loop import CrawlConfig, Crawler
 
@@ -565,16 +569,22 @@ def test_resume_after_compaction_equals_straight_run(
     assert [r["scheduled"] for r in res_a[3:]] == [r["scheduled"] for r in res_b]
 
 
-def test_pagerank_rescore_round(spark, fixture_dir, tables, tmp_path_factory):
+def test_pagerank_rescore_round(
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
+):
     """VERDICT r4 item 8 wiring: with pagerank_every=1 each round's next
     frontier carries PageRank-over-accumulated-links scores instead of
-    OPIC cash. The crawl still progresses, scores are valid positive
+    OPIC cash (2 iterations, patched onto the operator the round loop
+    calls). The crawl still progresses, scores are valid positive
     probabilities-ish (<=1), and at least one frontier url scores above
     the non-starving floor (i.e. the graph actually contributed)."""
+    monkeypatch.setattr(
+        round_loop, "rescore_frontier", partial(rescore_frontier, iterations=2)
+    )
     ckpt = str(tmp_path_factory.mktemp("ckpt_pr"))
     cfg = CrawlConfig(
         n_shards=8, salt_parts=4,
-        pagerank_every=1, pagerank_iterations=2,
+        pagerank_every=1,
     )
     c = Crawler(
         spark=spark,
@@ -733,6 +743,38 @@ def test_host_sketch_cardinalities(spark, fixture_dir, tables, tmp_path_factory)
         assert abs(est[h] - n) <= max(2, 0.05 * n)
 
 
+def test_host_cardinalities_refuses_uncommitted_round(
+    spark, fixture_dir, tables, tmp_path
+):
+    """host_cardinalities merges committed sketch tables only: a round
+    that crashed after writing its `host_sketch` but before its
+    manifest flip is refused, not merged in."""
+    from metadata_crawler_spark.operators.sketches import hll_sketches
+    from metadata_crawler_spark.sources.tables import (
+        ManifestLog,
+        write_round_table,
+    )
+
+    ckpt = str(tmp_path / "ckpt")
+    for rnd in (0, 1):  # round 1 is the crashed orphan
+        write_round_table(
+            hll_sketches(
+                spark.range(10 * (rnd + 1)).selectExpr(
+                    "'h.com' AS host", f"concat('https://h.com/{rnd}/', id) AS url"
+                ),
+                ["host"], "url",
+            ),
+            ckpt, rnd, "host_sketch",
+        )
+    ManifestLog(ckpt).commit({"last_round": 0})
+    c = _mk(spark, fixture_dir, tables, ckpt)
+    assert [(r.host, r.n_distinct) for r in c.host_cardinalities(0).collect()] == [
+        ("h.com", 10)
+    ]
+    with pytest.raises(ValueError, match="not committed"):
+        c.host_cardinalities(1)
+
+
 def test_host_sketch_off_raises(spark, fixture_dir, tables, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt_nosketch"))
     c = _mk(spark, fixture_dir, tables, ckpt)
@@ -741,7 +783,18 @@ def test_host_sketch_off_raises(spark, fixture_dir, tables, tmp_path_factory):
         c.host_cardinalities(0)
 
 
-def test_blocklist_sweep_round(spark, fixture_dir, tables, tmp_path_factory):
+def _patch_blocklist(monkeypatch, **thresholds):
+    """Set the blocklist sweep's thresholds on the operator the round
+    loop calls."""
+    monkeypatch.setattr(
+        round_loop, "blocked_hosts_from_counts",
+        partial(blocked_hosts_from_counts, **thresholds),
+    )
+
+
+def test_blocklist_sweep_round(
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
+):
     """blocklist_every wiring: the sweep commits a per-round `blocklist`
     table and junk-dominated hosts leave the next frontier. With an
     impossible flag threshold (>1.0 can never be exceeded) the sweep is
@@ -750,10 +803,11 @@ def test_blocklist_sweep_round(spark, fixture_dir, tables, tmp_path_factory):
     a candidate, and none of its urls survive into frontier_next."""
     from metadata_crawler_spark.functions.urls import host_expr
 
+    _patch_blocklist(monkeypatch, max_flag_frac=1.5)
     ckpt = str(tmp_path_factory.mktemp("ckpt_bl_off"))
     cfg = CrawlConfig(
         n_shards=8, salt_parts=4,
-        blocklist_every=1, blocklist_max_flag_frac=1.5,
+        blocklist_every=1,
     )
     c = Crawler(
         spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
@@ -766,11 +820,11 @@ def test_blocklist_sweep_round(spark, fixture_dir, tables, tmp_path_factory):
     assert bl.columns == ["domain", "n_docs", "flag_frac"]
     assert bl.count() == 0  # impossible threshold -> no candidates
 
+    _patch_blocklist(monkeypatch, min_docs=1, max_flag_frac=0.0)
     ckpt2 = str(tmp_path_factory.mktemp("ckpt_bl_on"))
     cfg2 = CrawlConfig(
         n_shards=8, salt_parts=4,
-        blocklist_every=1, blocklist_min_docs=1,
-        blocklist_max_flag_frac=0.0,
+        blocklist_every=1,
     )
     c2 = Crawler(
         spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
@@ -791,16 +845,16 @@ def test_blocklist_sweep_round(spark, fixture_dir, tables, tmp_path_factory):
 
 
 def test_blocklist_partials_resume_equals_straight_run(
-    spark, fixture_dir, tables, tmp_path_factory
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
 ):
     """The incremental host_quality partials are a pure function of the
     round number (each sweep covers exactly its own span), so a
     kill-after-round-1 resume rebuilds identical partials and blocklist
     totals to a straight run — the additive-counts contract."""
+    _patch_blocklist(monkeypatch, min_docs=1, max_flag_frac=0.0)
     cfg = lambda: CrawlConfig(
         n_shards=8, salt_parts=4,
-        blocklist_every=1, blocklist_min_docs=1,
-        blocklist_max_flag_frac=0.0,
+        blocklist_every=1,
     )
     seeds = tables["seeds"]
     ck_a = str(tmp_path_factory.mktemp("ckpt_bl_a"))
@@ -833,22 +887,30 @@ def test_blocklist_partials_resume_equals_straight_run(
             assert tb.exceptAll(ta).count() == 0, (r, name)
 
 
+@pytest.mark.parametrize("cut", ["blocklist", "trap_hosts"])
 def test_blocklist_standing_gate_between_sweeps(
-    spark, fixture_dir, tables, tmp_path_factory
+    cut, spark, fixture_dir, tables, tmp_path_factory, monkeypatch
 ):
-    """Non-sweep rounds apply the LATEST committed blocklist as a
-    standing gate: with blocklist_every=2, round 0 mines+commits and
+    """Non-sweep rounds apply the LATEST committed host cut as a
+    standing gate: with a cadence of 2, round 0 mines+commits and
     round 1 is not a sweep — but round 1's frontier_next must still
-    exclude the round-0 blocked hosts, or their outlinked children
-    re-enter and get fetched until the next sweep."""
+    exclude the round-0 cut hosts, or their outlinked children re-enter
+    and get fetched until the next sweep. Both cut kinds: the blocklist
+    at flag threshold 0, and the trap sweep with every supported host a
+    trap."""
     from metadata_crawler_spark.functions.urls import host_expr
 
-    ckpt = str(tmp_path_factory.mktemp("ckpt_bl_gate"))
-    cfg = CrawlConfig(
-        n_shards=8, salt_parts=4,
-        blocklist_every=2, blocklist_min_docs=1,
-        blocklist_max_flag_frac=0.0,
-    )
+    if cut == "blocklist":
+        _patch_blocklist(monkeypatch, min_docs=1, max_flag_frac=0.0)
+        cadence = {"blocklist_every": 2}
+    else:
+        monkeypatch.setattr(
+            round_loop, "trap_hosts_from_partials",
+            partial(trap_hosts_from_partials, min_urls=1, max_novelty=1.0),
+        )
+        cadence = {"trap_every": 2}
+    ckpt = str(tmp_path_factory.mktemp(f"ckpt_{cut}_gate"))
+    cfg = CrawlConfig(n_shards=8, salt_parts=4, **cadence)
     c = Crawler(
         spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
         robots=tables["robots"], hosts=tables["hosts"],
@@ -858,10 +920,12 @@ def test_blocklist_standing_gate_between_sweeps(
     blocked = {
         r.domain
         for r in spark.read.parquet(
-            os.path.join(ckpt, "round=00000", "blocklist")
+            os.path.join(ckpt, "round=00000", cut)
         ).collect()
     }
-    assert blocked  # threshold 0 flags every host with one flagged doc
+    assert blocked  # both forced thresholds cut every supported host
+    # round 1 is not a sweep: it commits no cut table of its own
+    assert not os.path.exists(os.path.join(ckpt, "round=00001", cut))
     for rnd in (0, 1):  # sweep round AND the standing-gate round
         nxt = (
             spark.read.parquet(

@@ -62,6 +62,38 @@ def test_latest_vs_files_semantics(spark, crawled):
     assert newer == 0  # nothing in files is newer than its latest row
 
 
+def test_catalogue_refuses_uncommitted_round(spark, tmp_path):
+    """Catalogue reads stop at the manifest's last committed round: a
+    round that crashed after writing `fetched` but before its manifest
+    flip left an orphan table that must not read as committed data —
+    through read_catalogue, index_catalogue and push_catalogue."""
+    from metadata_crawler_spark.sources.http_sink import push_catalogue
+    from metadata_crawler_spark.sources.tables import (
+        ManifestLog,
+        write_round_table,
+    )
+
+    ck = str(tmp_path / "ck")
+    for rnd, n in ((0, 30), (1, 7)):  # round 1 is the crashed orphan
+        write_round_table(
+            spark.range(n).selectExpr(
+                f"concat('https://r{rnd}.com/', id) AS url",
+                "true AS fetched",
+                "'en' AS lang",
+            ),
+            ck, rnd, "fetched",
+        )
+    ManifestLog(ck).commit({"last_round": 0})
+    assert read_catalogue(spark, ck, 0).count() == 30
+    with pytest.raises(ValueError, match="not committed"):
+        read_catalogue(spark, ck, 1)
+    with pytest.raises(ValueError, match="not committed"):
+        index_catalogue(spark, ck, 1, str(tmp_path / "out"))
+    assert not os.path.exists(tmp_path / "out" / "files")
+    with pytest.raises(ValueError, match="not committed"):
+        push_catalogue(spark, ck, 1, "http://127.0.0.1:9/update")
+
+
 def test_glob_to_regex_and_delete(spark):
     assert glob_to_regex("e*") == "^e.*$"
     assert glob_to_regex("a?c") == "^a.c$"

@@ -143,23 +143,36 @@ def test_partials_merge_equals_one_shot(spark, corpus):
         ), d
 
 
-def test_trap_sweep_in_crawl_loop(spark, fixture_dir, tables, tmp_path_factory):
+def test_trap_sweep_in_crawl_loop(
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
+):
     """trap_every wiring: the sweep commits host_templates +
     trap_content_hll partials and a trap_hosts verdict table; with an
     impossible support bar the frontier is untouched, with an
-    everything-is-a-trap bar every fetched host leaves frontier_next."""
+    everything-is-a-trap bar every fetched host leaves frontier_next.
+    The bars are set on the operator the round loop calls."""
     import os
+    from functools import partial
 
     from metadata_crawler_spark.functions.urls import host_expr
+    from metadata_crawler_spark.operators.traps import trap_hosts_from_partials
+    from metadata_crawler_spark.plans import round_loop
     from metadata_crawler_spark.plans.round_loop import CrawlConfig, Crawler
 
+    def bars(**thresholds):
+        monkeypatch.setattr(
+            round_loop, "trap_hosts_from_partials",
+            partial(trap_hosts_from_partials, **thresholds),
+        )
+
     common = dict(n_shards=8, salt_parts=4)
+    bars(min_urls=10**9)
     ckpt = str(tmp_path_factory.mktemp("ckpt_trap_off"))
     c = Crawler(
         spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
         robots=tables["robots"], hosts=tables["hosts"],
         checkpoint_dir=ckpt,
-        config=CrawlConfig(**common, trap_every=1, trap_min_urls=10**9),
+        config=CrawlConfig(**common, trap_every=1),
     )
     res = c.run(tables["seeds"], rounds=2)
     assert sum(r["scheduled"] for r in res) > 0
@@ -170,14 +183,13 @@ def test_trap_sweep_in_crawl_loop(spark, fixture_dir, tables, tmp_path_factory):
         os.path.join(ckpt, "round=00000", "trap_hosts")
     ).count() == 0  # impossible support bar -> no verdicts
 
+    bars(min_urls=1, max_novelty=1.0)
     ckpt2 = str(tmp_path_factory.mktemp("ckpt_trap_on"))
     c2 = Crawler(
         spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
         robots=tables["robots"], hosts=tables["hosts"],
         checkpoint_dir=ckpt2,
-        config=CrawlConfig(
-            **common, trap_every=1, trap_min_urls=1, trap_max_novelty=1.0
-        ),
+        config=CrawlConfig(**common, trap_every=1),
     )
     c2.run(tables["seeds"], rounds=1)
     trapped = {
