@@ -489,7 +489,9 @@ def probe_cogrouped(
     """Append ``maybe_seen`` without broadcasting: co-group candidates with
     their shard's table (either tier). The 10^10-URL path — per-task
     memory is one table + one candidate partition, independent of total
-    filter size."""
+    filter size. ``n_shards`` is the filter's recorded shard count; a
+    shard row built at another count raises at the action (candidates
+    sharded by the wrong count would report seen urls as new)."""
     tier = _tier_of(filt)
     out_fields = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in candidates.schema.fields
@@ -499,6 +501,11 @@ def probe_cogrouped(
 
     def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         res = left.drop(columns=["__shard"])
+        if not right.empty and int(right["n_shards"].iloc[0]) != n_shards:
+            raise ValueError(
+                f"filter shard {int(right['shard'].iloc[0])} was built with "
+                f"{int(right['n_shards'].iloc[0])} shards, not {n_shards}"
+            )
         if right.empty or left.empty:
             res["maybe_seen"] = False
             return res
@@ -509,17 +516,6 @@ def probe_cogrouped(
         )
         return res
 
-    # geometry comes from the TABLE (the broadcast path's "carried in
-    # the table; NEVER inferred" contract): sharding candidates by a
-    # caller n_shards that drifted from the filter's build geometry
-    # (config change across a resume) would cogroup candidates with the
-    # wrong — usually absent — shard rows and report maybe_seen=False
-    # for seen urls: silent duplicate crawls. One bounded 1-row read of
-    # the column-pruned n_shards field; the caller value is only the
-    # empty-filter fallback (where every probe is False anyway).
-    geo = filt.select("n_shards").limit(1).collect()
-    if geo:
-        n_shards = int(geo[0]["n_shards"])
     cand = candidates.withColumn("__shard", shard_expr(F.col("url_hash_hi"), n_shards))
     return (
         cand.groupBy("__shard")

@@ -102,7 +102,8 @@ def crawl_report(
 ) -> DataFrame:
     """The crawl run's release table — the crawl-side twin of
     :func:`corpus_report`, computed from the committed ``fetched``
-    per-round deltas (``sources.tables.read_rounds(..., "fetched")``),
+    per-round deltas (``sources.sinks.read_catalogue``: the rounds the
+    manifest names, read by ``sources.tables.read_rounds``),
     not from run counters (the reference's status display aggregates
     in-memory counters, utils/__init__.py:430-470 — numbers that die
     with the process; this recomputes them from the data, so a resumed
@@ -137,7 +138,7 @@ def crawl_report(
             raise ValueError(
                 "crawl_report(round_col=None) derives the round from the "
                 "file path, which needs a DIRECT scan of committed "
-                "round=NNNNN tables (sources.tables.read_rounds). This "
+                "round=NNNNN tables (sources.sinks.read_catalogue). This "
                 "DataFrame has no such path — pass round_col= instead."
             )
         rnd = F.regexp_extract(

@@ -18,17 +18,20 @@ One round here is ONE declarative DataFrame DAG:
 
 and the commit is: write round-scoped parquet for {scheduled (which IS
 the seen-delta: attempted = seen), fetched, frontier-delta, bloom,
-metrics}, then atomically flip the
-manifest pointer (sources/tables.ManifestLog). Kill the process anywhere
-before the flip and the round never happened; re-running overwrites the
-same round-scoped paths — idempotent replay (SURVEY §7 hard part d).
+metrics} and the config-gated tables, which its manifest entry lists
+(``optional_tables``), then atomically flip the manifest pointer
+(sources/tables.ManifestLog). Kill the process anywhere before the flip
+and the round never happened; re-running overwrites the same
+round-scoped paths — idempotent replay (SURVEY §7 hard part d).
 
 Resume is not a separate path: every round starts by reading the
 manifest and loading the previous round's committed tables by name
 (round 0 starts from the seeds), so a resumed round runs exactly the
-code a straight run does. A committed table that has gone missing fails
-that read: a lost frontier_next must not pass for an exhausted frontier,
-nor a lost scheduled delta for an empty one.
+code a straight run does. Every read names its tables from the manifest
+(sources/tables.committed_rounds), never by probing storage, so a lost
+committed table fails its read: a lost frontier_next must not pass for
+an exhausted frontier, nor a lost budget table or sweep partial for one
+never written.
 
 Scale notes (the 100 TB / 10^10-URL shape this is designed for):
 - the frontier delta is small relative to `pages`; Catalyst broadcasts it
@@ -46,9 +49,9 @@ Scale notes (the 100 TB / 10^10-URL shape this is designed for):
 from __future__ import annotations
 
 import math
-import os
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,10 +94,9 @@ from ..operators.traps import trap_hosts_from_partials, trap_partials
 from ..operators.versioning import latest_per_key
 from ..sources.tables import (
     ManifestLog,
-    path_exists,
+    committed_rounds,
     read_rounds,
-    require_committed,
-    round_table_paths,
+    table_path,
     write_round_table,
 )
 
@@ -118,12 +120,6 @@ class CrawlConfig:
     #: minimum total fetched after run() completes, else EmptyCrawl
     #: (reference --fail-under, run.py:510-515)
     fail_under: int | None = None
-    #: scheduled sets larger than this are NOT broadcast into the fetch
-    #: join (the observed count is known before the join is built); the
-    #: join falls back to a shuffle join — at cluster scale the right
-    #: answer is the bucketed/storage-partitioned pages table
-    #: (sources/tables.write_bucketed), which needs no broadcast either.
-    scheduled_broadcast_max_rows: int = 5_000_000
     #: name of a pre-ingested bucketed pages table — columns
     #: (page_url, warc_ts, html), bucketed+sorted BY page_url, already
     #: canonical+latest (see ingest_bucketed_pages). When set it replaces
@@ -131,15 +127,6 @@ class CrawlConfig:
     #: co-located join with NO Exchange on the 100 TB pages side (the
     #: Iceberg storage-partitioned-join analog).
     bucketed_pages_table: str | None = None
-    #: seen-set compaction cadence (Iceberg snapshot-expiry analog,
-    #: VERDICT r3 item 4): every k rounds the per-round scheduled deltas
-    #: are consolidated into ONE distinct (url_hash_hi, url_hash_lo)
-    #: parquet, and the manifest records seen_compacted_upto. Without it
-    #: the seen snapshot read unions EVERY prior round's scheduled dir —
-    #: at 10^3-10^4 rounds that is thousands of paths and a linearly
-    #: growing driver listing per round. With it the read touches
-    #: 1 + (rounds since last compaction) <= k+1 paths. None disables.
-    seen_compact_every: int | None = 64
     #: periodic PageRank frontier re-scoring (VERDICT r4 item 8): every k
     #: rounds the next frontier's OPIC scores are replaced by a fixed-
     #: iteration PageRank over the link graph accumulated in the committed
@@ -203,6 +190,20 @@ class CrawlConfig:
     #: stay the static table the caller provided.
     adapt_budgets: bool = False
 
+
+#: scheduled sets larger than this are NOT broadcast into the fetch join
+#: (the observed count is known before the join is built); the join falls
+#: back to a shuffle join — at cluster scale the right answer is the
+#: bucketed/storage-partitioned pages table (sources/tables.
+#: write_bucketed), which needs no broadcast either
+SCHEDULED_BROADCAST_MAX_ROWS = 5_000_000
+
+#: seen-set compaction cadence (Iceberg snapshot-expiry analog): every k
+#: rounds the per-round scheduled deltas are consolidated into ONE
+#: distinct (url_hash_hi, url_hash_lo) parquet, and the manifest records
+#: seen_compacted_upto. The seen snapshot read then touches
+#: 1 + (rounds since last compaction) <= k+1 paths, not one per round.
+SEEN_COMPACT_EVERY = 64
 
 #: auto-flip threshold for broadcasting the sharded bloom filter: above this
 #: the 10^10-URL cogrouped probe path is used (a 10-bits/key filter over
@@ -454,63 +455,54 @@ class Crawler:
         return self._pages_snapshot
 
     # -- state -------------------------------------------------------------
-    def _table_path(self, round_no: int, name: str) -> str:
-        return os.path.join(self.checkpoint_dir, f"round={round_no:05d}", name)
-
     def seen_input_paths(self, upto: int, state: dict | None = None) -> list[str]:
         """The parquet paths the seen-snapshot read touches: consolidated
         seen_compact (if ``state`` — the manifest when not given — records
         one at round c <= upto) plus only the scheduled deltas AFTER it.
         Every committed round wrote its scheduled delta, so the paths are
         named, not probed: a missing one fails the read. Factored out so
-        tests can assert the O(seen_compact_every) path bound without
+        tests can assert the O(SEEN_COMPACT_EVERY) path bound without
         instrumenting the reader."""
+        root = self.checkpoint_dir
         if state is None:
             state = self.log.read() or {}
         c = state.get("seen_compacted_upto", -1)
         paths: list[str] = []
         lo = 0
         if 0 <= c <= upto:
-            paths.append(self._table_path(c, "seen_compact"))
+            paths.append(table_path(root, c, "seen_compact"))
             lo = c + 1
         return paths + [
-            self._table_path(r, "scheduled") for r in range(lo, upto + 1)
+            table_path(root, r, "scheduled") for r in range(lo, upto + 1)
         ]
 
     def _read_seen(self, upto: int, state: dict | None = None) -> DataFrame:
         """Seen snapshot as (url_hash_hi, url_hash_lo), reading EXACTLY
         the paths :meth:`seen_input_paths` resolves — one source of
         truth for the compact/lo logic, so the tested
-        O(seen_compact_every) path bound and the real read can't drift.
+        O(SEEN_COMPACT_EVERY) path bound and the real read can't drift.
         The consolidated table and the scheduled deltas have different
         schemas, so each group is read separately and unioned on the
         two hash columns (parquet column pruning keeps the delta read
         2-column either way)."""
         paths = self.seen_input_paths(upto, state)
-        compact = [p for p in paths if p.endswith("seen_compact")]
         deltas = [p for p in paths if not p.endswith("seen_compact")]
-        parts: list[DataFrame] = [self.spark.read.parquet(p) for p in compact]
+        parts = [self.spark.read.parquet(p) for p in paths if p not in deltas]
         if deltas:
             parts.append(
                 self.spark.read.parquet(*deltas)
                 .select("url_hash_hi", "url_hash_lo")
             )
-        seen = parts[0]
-        for p in parts[1:]:
-            seen = seen.unionByName(p)
-        return seen
+        return reduce(lambda a, b: a.unionByName(b), parts)
 
     def _maybe_compact_seen(self, round_no: int, state: dict) -> dict:
-        """Consolidate the seen set every ``seen_compact_every`` rounds
+        """Consolidate the seen set every ``SEEN_COMPACT_EVERY`` rounds
         (called just before the manifest commit, so the pointer flip that
         publishes the round also publishes the compaction — crash between
         the parquet write and the commit leaves an invisible orphan dir
         that the idempotent re-run overwrites)."""
-        k = self.config.seen_compact_every
-        if not k:
-            return state
         c = state.get("seen_compacted_upto", -1)
-        if round_no - c < k:
+        if round_no - c < SEEN_COMPACT_EVERY:
             return state
         write_round_table(
             self._read_seen(round_no, state).distinct(), self.checkpoint_dir,
@@ -528,19 +520,23 @@ class Crawler:
         # no separate seen_delta table — parquet column pruning makes this
         # a 2-column read, and compaction bounds it to O(k) paths
         seen = self._read_seen(upto, state)
-        bloom = self.spark.read.parquet(self._table_path(upto, "bloom"))
-        frontier = self.spark.read.parquet(self._table_path(upto, "frontier_next"))
+        root = self.checkpoint_dir
+        bloom = self.spark.read.parquet(table_path(root, upto, "bloom"))
+        frontier = self.spark.read.parquet(table_path(root, upto, "frontier_next"))
         return seen, bloom, frontier
 
-    def _hosts_for_round(self, round_no: int) -> DataFrame:
+    def _hosts_for_round(self, round_no: int, state: dict) -> DataFrame:
         """The hosts/budget table this round gates with: the static caller
         table, or — with ``adapt_budgets`` — the previous round's evolved
         checkpoint (read from parquet so resume is byte-identical to a
-        straight run)."""
+        straight run), when its manifest entry records one."""
         if not self.config.adapt_budgets or round_no == 0:
             return self.hosts
-        path = self._table_path(round_no - 1, "hosts")
-        return self.spark.read.parquet(path) if path_exists(path) else self.hosts
+        evolved = read_rounds(
+            self.spark, self.checkpoint_dir, "hosts",
+            committed_rounds(state, "hosts", round_no - 1, round_no - 1),
+        )
+        return self.hosts if evolved is None else evolved
 
     def host_cardinalities(self, upto: int) -> DataFrame:
         """(host, n_distinct) estimated distinct URLs scheduled per host
@@ -549,19 +545,22 @@ class Crawler:
         O(hosts x rounds) sketch rows; the scheduled history is never
         re-read. Per-round sketch unioned == whole-history rebuild is
         the tested HLL invariant (test_sketches.py). ``upto`` must be
-        committed (ValueError otherwise): a crashed round's orphan
-        sketch is not read."""
+        committed and every round through it must have committed a
+        sketch (ValueError otherwise): a crashed round's orphan sketch is
+        not read, and a round without one would under-count."""
         from ..operators.sketches import hll_estimates, hll_merge
 
-        require_committed(self.log, upto)
-        paths = round_table_paths(self.checkpoint_dir, "host_sketch", upto)
-        if not paths:
+        rounds = committed_rounds(self.log.read() or {}, "host_sketch", upto)
+        unsketched = sorted(set(range(max(upto, 0) + 1)) - set(rounds))
+        if unsketched:
             raise ValueError(
-                "no host_sketch tables committed — enable CrawlConfig.host_sketch"
+                f"round {unsketched[0]} committed no host_sketch table "
+                "(enable CrawlConfig.host_sketch): counts would under-count"
             )
-        return hll_estimates(
-            hll_merge(self.spark.read.parquet(*paths), ["host"]), ["host"]
+        sketches = read_rounds(
+            self.spark, self.checkpoint_dir, "host_sketch", rounds
         )
+        return hll_estimates(hll_merge(sketches, ["host"]), ["host"])
 
     # -- one round ---------------------------------------------------------
     def run_round(self, round_no: int, seeds: DataFrame) -> dict:
@@ -614,14 +613,15 @@ class Crawler:
         # neither its own persist nor a separate count job
         obs_dedup = Observation(f"dedup_{round_no}")
         new_urls = dedup_against_seen(
-            frontier, seen, bloom if standing else None, cfg.n_shards,
+            frontier, seen, bloom if standing else None,
+            standing["n_shards"] if standing else cfg.n_shards,
             standing is not None and self.bloom_broadcast(standing),
         ).observe(obs_dedup, F.count(F.lit(1)).alias("n"))
         # gates split from top-k so the carryover can be computed from the
         # ELIGIBLE set: URLs dropped by validity/robots are permanently
         # blocked and must not ride the frontier forever (they would never
         # be scheduled, never enter seen, and re-pay the gates every round)
-        hosts_cur = self._hosts_for_round(round_no)
+        hosts_cur = self._hosts_for_round(round_no, state)
         gated = gate_frontier(
             new_urls, hosts_cur, self.robots, cfg.default_budget,
             self.robots_broadcast(), self.hosts_broadcast(),
@@ -687,21 +687,15 @@ class Crawler:
             geo["per_shard"] = standing["per_shard"]
 
         # r6 (guide §2.6 "overlap independent jobs"): a round's commit is
-        # latency-bound by its ACTION count, not its data volume, and
-        # four of the per-round jobs are mutually independent once the
-        # scheduled ROWS are materialized in the cache above — the
-        # scheduled parquet write itself, the fetch/extract join, the
-        # seen-filter evolution (reads only scheduled keys) and the host
-        # sketch. They now run as concurrent jobs from a small driver
-        # pool (FIFO scheduler back-fills the tail of each stage), with
-        # the critical path (fetch -> next frontier) staying on this
-        # thread. Each job's CONTENT is untouched — same writes, same
-        # paths, same Observations — so replay/commit semantics are
-        # byte-identical; .result() re-raises any worker failure before
-        # the manifest flip. The sweeps are the one consumer family that
-        # reads COMMITTED parquet mid-round — they read only `fetched`
-        # tables and explicitly join that write first (fut_fetch gate
-        # below); nothing in-round reads the scheduled parquet.
+        # latency-bound by its ACTION count, and once the scheduled ROWS
+        # are cached the scheduled write, the fetch/extract join, the
+        # seen-filter evolution and the host sketch are independent. They
+        # run as concurrent jobs from a small driver pool, the critical
+        # path (fetch -> next frontier) staying on this thread; the
+        # writes are unchanged, and .result() re-raises any worker
+        # failure before the manifest flip. Only the sweeps read this
+        # round's parquet mid-round (`fetched`, after joining its write:
+        # the fut_fetch gate below).
         from concurrent.futures import ThreadPoolExecutor
 
         def _evolve_filter():
@@ -722,8 +716,8 @@ class Crawler:
                 new_filter = grow(
                     bloom, round_keys, geo["n_shards"], geo["per_shard"]
                 )
-            new_filter.write.mode("overwrite").parquet(
-                self._table_path(round_no, "bloom")
+            write_round_table(
+                new_filter, self.checkpoint_dir, round_no, "bloom"
             )
 
         def _write_host_sketch():
@@ -743,6 +737,9 @@ class Crawler:
                 self.checkpoint_dir, round_no, "host_sketch",
             )
 
+        # the config-gated tables this round commits, recorded in its
+        # manifest entry: readers name them from there, never by probing
+        optional: list[str] = []
         pool = ThreadPoolExecutor(max_workers=3)
         try:
             # every job the manifest flip must wait for, except the
@@ -763,7 +760,7 @@ class Crawler:
             # misses (dead URLs) computed against the small hit set. The
             # broadcast is size-gated on the OBSERVED scheduled count — an
             # over-budget round falls back to a shuffle join (AQE plans it).
-            bcast_sched = scheduled_n <= cfg.scheduled_broadcast_max_rows
+            bcast_sched = scheduled_n <= SCHEDULED_BROADCAST_MAX_ROWS
             pages = self.pages_snapshot()
             sched_side = F.broadcast(scheduled) if bcast_sched else scheduled
             hits = pages.join(
@@ -822,6 +819,7 @@ class Crawler:
             t_fetch = time.time()
             if cfg.host_sketch:
                 barrier.append(pool.submit(_write_host_sketch))
+                optional.append("host_sketch")
 
             # AIMD budget evolution (config-gated): the round's fetch
             # outcomes feed back into per-host budgets; the evolved table
@@ -835,6 +833,7 @@ class Crawler:
                     update_host_budgets(hosts_cur, fetched_rows),
                     self.checkpoint_dir, round_no, "hosts",
                 ))
+                optional.append("hosts")
 
             # seen delta == this round's scheduled set (attempted = seen);
             # it lives in the already-written scheduled table — no extra
@@ -911,9 +910,13 @@ class Crawler:
             # APPLICATION (one suffix-aware anti join each) chains
             # afterwards in _HOST_CUTS order.
             mined = {
-                n: pool.submit(self._mine_host_cut, n, every[n], round_no)
+                n: pool.submit(
+                    self._mine_host_cut, n, every[n], round_no, state
+                )
                 for n in _HOST_CUTS if due[n]
             }
+            for n in mined:
+                optional += [*_HOST_CUTS[n][0], n]
             if due["pagerank"]:
                 nxt = self._pagerank_rescore(nxt, round_no)
             for n in _HOST_CUTS:
@@ -926,13 +929,11 @@ class Crawler:
                     # wins, no union) — without it a cut host's outlinked
                     # children re-enter via this round's `children` and
                     # keep being fetched until the next sweep
-                    paths = round_table_paths(
-                        self.checkpoint_dir, n, round_no - 1
-                    )
-                    if paths:
-                        nxt = self._apply_cut(
-                            nxt, self.spark.read.parquet(paths[-1])
-                        )
+                    newest = committed_rounds(state, n, round_no - 1)[-1:]
+                    if newest:
+                        nxt = self._apply_cut(nxt, read_rounds(
+                            self.spark, self.checkpoint_dir, n, newest
+                        ))
             obs_next = Observation(f"next_{round_no}")
             nxt = nxt.observe(obs_next, F.count(F.lit(1)).alias("n"))
             write_round_table(nxt, self.checkpoint_dir, round_no, "frontier_next")
@@ -958,6 +959,7 @@ class Crawler:
             "fetched": fetched_n,
             "frontier_next": frontier_next_n,
             "shuffle_partitions": width,
+            "optional_tables": sorted(optional),
             "wall_s": round(time.time() - t0, 3),
             # per-phase walls (wall-clock on the critical path —
             # overlapped jobs show up as barrier wait)
@@ -996,10 +998,8 @@ class Crawler:
         next frontier's scores. Rounding to SCORE_DECIMALS keeps the
         combined ordering data-deterministic, same as OPIC scores."""
         fetched_all = read_rounds(
-            self.spark, self.checkpoint_dir, "fetched", upto
+            self.spark, self.checkpoint_dir, "fetched", range(upto + 1)
         )
-        if fetched_all is None:
-            return frontier
         edges = (
             fetched_all.filter(F.col("fetched") & (F.size("links") > 0))
             .select(F.col("url").alias("src"), F.explode("links").alias("dst"))
@@ -1008,23 +1008,25 @@ class Crawler:
         out = rescore_frontier(frontier, edges)
         return out.withColumn("score", F.round("score", SCORE_DECIMALS))
 
-    def _apply_cut(self, frontier: DataFrame, cut: DataFrame | None) -> DataFrame:
+    def _apply_cut(self, frontier: DataFrame, cut: DataFrame) -> DataFrame:
         """Drop a host-cut table's domains (and their subdomains) from
         the frontier with the suffix-aware single anti join of
-        filter_blocked_hosts; pass through on a None or empty table.
+        filter_blocked_hosts; pass through on an empty table.
         Serves both a sweep's fresh verdict and the standing gate
         between sweeps."""
-        if cut is None or not cut.take(1):
+        if not cut.take(1):
             return frontier
         return filter_blocked_hosts(frontier, cut.select("domain"))
 
-    def _mine_host_cut(self, name: str, every: int, upto: int) -> DataFrame | None:
+    def _mine_host_cut(
+        self, name: str, every: int, upto: int, state: dict
+    ) -> DataFrame:
         """One host-cut sweep (a ``_HOST_CUTS`` entry: ``blocklist`` or
-        ``trap_hosts``): compute the span's partials, commit them, then
-        commit the verdict over ALL committed partials as this round's
-        ``name`` table and return it (None when no partials exist). The
-        cut's application lives in :meth:`_apply_cut`, so the mining can
-        ride the round's thread pool (r6).
+        ``trap_hosts``) in round ``upto``: compute the span's partials,
+        write them, then write the verdict over these and every partial
+        the manifest ``state`` records as this round's ``name`` table and
+        return it. The cut's application lives in :meth:`_apply_cut`, so
+        the mining can ride the round's thread pool (r6).
 
         INCREMENTAL: the partials are additive counts or mergeable
         sketches, so each sweep reads only its own span of fetched
@@ -1034,19 +1036,19 @@ class Crawler:
         rescan of the whole crawl history."""
         tables, partials, verdict = _HOST_CUTS[name]
         span = read_rounds(
-            self.spark, self.checkpoint_dir, "fetched", upto,
-            from_round=max(upto - every + 1, 0),
+            self.spark, self.checkpoint_dir, "fetched",
+            range(max(upto - every + 1, 0), upto + 1),
         )
-        if span is not None:
-            ok = span.filter(F.col("fetched") & F.col("text").isNotNull())
-            for table, partial in zip(tables, partials(ok)):
-                write_round_table(partial, self.checkpoint_dir, upto, table)
+        ok = span.filter(F.col("fetched") & F.col("text").isNotNull())
+        for table, partial in zip(tables, partials(ok)):
+            write_round_table(partial, self.checkpoint_dir, upto, table)
         totals = [
-            read_rounds(self.spark, self.checkpoint_dir, t, upto)
+            read_rounds(
+                self.spark, self.checkpoint_dir, t,
+                committed_rounds(state, t, upto - 1) + [upto],
+            )
             for t in tables
         ]
-        if any(t is None for t in totals):
-            return None
         path = write_round_table(
             verdict(*totals), self.checkpoint_dir, upto, name
         )
@@ -1094,11 +1096,9 @@ class Crawler:
         from ..plans.recrawl import checks_delta, recrawl_batch
 
         state = self.log.read() or {}
-        # committed crawl rounds only: a crashed round 0's orphan
-        # fetched table must not read as crawl data
         fetched_all = read_rounds(
             self.spark, self.checkpoint_dir, "fetched",
-            state.get("last_round", -1),
+            committed_rounds(state, "fetched", state.get("last_round", -1)),
         )
         if fetched_all is None:
             raise ValueError(
@@ -1108,31 +1108,23 @@ class Crawler:
             fetched_all.filter(F.col("fetched") & F.col("text").isNotNull()),
             "url", "warc_ts", tiebreak="url",
         ).select("url", "text")
-        # COMMITTED passes only: bound every recrawl read by the
-        # manifest's last_recrawl, not by path existence — a pass that
-        # crashed after write_round_table but before log.commit left
-        # round dirs on disk that must stay invisible (tables.py
-        # contract) until its replay rewrites and commits them
         last_rc = state.get("last_recrawl", -1)
         if recrawl_no != last_rc + 1:
-            # passes are STRICTLY sequential: skipping ahead would
-            # silently bless any crashed pass's orphan round dirs in
-            # between, and re-running a pass <= last_recrawl would
-            # rewrite committed history with a different now_s AND
-            # regress last_recrawl, demoting later committed passes to
-            # invisible orphans. The one legitimate replay — a pass
-            # that crashed before its manifest commit — is exactly
-            # last_recrawl + 1.
+            # passes are STRICTLY sequential: skipping ahead would name a
+            # crashed pass's orphan tables as committed, and re-running a
+            # committed pass would rewrite its history with another
+            # now_s. The one legitimate replay — a pass that crashed
+            # before its manifest commit — is last_recrawl + 1.
             raise ValueError(
                 f"recrawl pass {recrawl_no} out of sequence / skips "
                 f"committed history (last committed pass: {last_rc}; "
                 f"next allowed: {last_rc + 1})"
             )
-        upto = last_rc
         refreshed = read_rounds(
-            self.spark, self.checkpoint_dir, "recrawl_refreshed", upto,
+            self.spark, self.checkpoint_dir, "recrawl_refreshed",
+            committed_rounds(state, "recrawl_refreshed", last_rc),
             merge_schema=True,
-        ) if upto >= 0 else None
+        )
         if refreshed is not None:
             # overlay: text refreshed in pass k supersedes the crawl text
             # (and earlier passes') for every later comparison — without
@@ -1166,8 +1158,9 @@ class Crawler:
             ).unionByName(delta)
         due = prior.select("url")
         checks = read_rounds(
-            self.spark, self.checkpoint_dir, "recrawl_checks", upto,
-        ) if upto >= 0 else None
+            self.spark, self.checkpoint_dir, "recrawl_checks",
+            committed_rounds(state, "recrawl_checks", last_rc),
+        )
         if checks is not None:
             sched = revisit_schedule(
                 estimate_change_rate(checks),

@@ -59,17 +59,25 @@ def ship_package(spark: SparkSession) -> SparkSession:
     ``spark-submit --py-files mcs.zip`` (north rule); here we zip the
     package once per session and ``addPyFile`` it, which covers
     driver-owned sessions (e.g. the grading harness) whose CWD/PYTHONPATH
-    we don't control.
+    we don't control. The zip lives in a directory private to the
+    session, so concurrent drivers never overwrite each other's zip.
     """
-    if getattr(spark, "_mcs_shipped", False):
+    sc = spark.sparkContext
+    # marked per context: its file server refuses a second zip of the
+    # same name from another directory
+    if getattr(sc, "_mcs_shipped", False):
         return spark
+    import atexit
+    import shutil
     import tempfile
 
+    zdir = tempfile.mkdtemp(prefix="mcs_pyfiles_")
+    atexit.register(shutil.rmtree, zdir, True)
     zpath = build_pyfiles_zip(
-        os.path.join(tempfile.gettempdir(), "metadata_crawler_spark_pyfiles.zip")
+        os.path.join(zdir, "metadata_crawler_spark_pyfiles.zip")
     )
-    spark.sparkContext.addPyFile(zpath)
-    spark._mcs_shipped = True
+    sc.addPyFile(zpath)
+    sc._mcs_shipped = True
     return spark
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.versioning import latest_per_key
-from .tables import ManifestLog, read_rounds, require_committed
+from .tables import ManifestLog, committed_rounds, read_rounds
 
 
 def read_catalogue(
@@ -34,8 +34,11 @@ def read_catalogue(
     """The ``files`` index: every committed fetched record through round
     ``upto_round``, which must be committed in the checkpoint's
     manifest (ValueError otherwise)."""
-    require_committed(ManifestLog(checkpoint_dir), upto_round)
-    df = read_rounds(spark, checkpoint_dir, "fetched", upto_round)
+    state = ManifestLog(checkpoint_dir).read() or {}
+    df = read_rounds(
+        spark, checkpoint_dir, "fetched",
+        committed_rounds(state, "fetched", upto_round),
+    )
     if df is None:
         raise FileNotFoundError(f"no committed rounds under {checkpoint_dir}")
     return df

@@ -12,7 +12,10 @@ per-round plus ONE manifest JSON whose atomic rename is the commit point
 (os.replace). Replays are safe because every round's writes land under
 round-scoped paths and the manifest pointer flips last — an uncommitted
 round is invisible, an idempotent re-run overwrites the same paths
-(SURVEY §7 hard part d).
+(SURVEY §7 hard part d). Like an Iceberg snapshot, the manifest also
+lists WHICH tables are committed (:func:`committed_rounds`): storage is
+never probed, so orphan tables stay invisible and a lost committed table
+fails its read.
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Any
+from typing import Any, Sequence
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,78 +70,73 @@ class ManifestLog:
         os.replace(tmp, self.path)
 
 
-def require_committed(log: ManifestLog, upto_round: int) -> None:
-    """Raise ValueError unless rounds through ``upto_round`` are
-    committed in ``log``'s manifest. A round that crashed after its
-    table writes but before its manifest flip left round dirs on disk;
-    a reader that probes paths up to a caller-given round would read
-    them as committed data."""
-    last = (log.read() or {}).get("last_round", -1)
-    if upto_round > last:
+#: tables every committed crawl round / recrawl pass writes; any other
+#: round table is config-gated, listed in its round's ``optional_tables``
+REQUIRED_TABLES = ("scheduled", "bloom", "fetched", "metrics", "frontier_next")
+RECRAWL_TABLES = ("recrawl_checks", "recrawl_refreshed", "recrawl_report")
+
+
+def table_path(root: str, round_no: int, name: str) -> str:
+    """THE checkpoint layout: round ``round_no``'s table ``name``."""
+    return os.path.join(root, f"round={round_no:05d}", name)
+
+
+def committed_rounds(
+    state: dict[str, Any], name: str, upto: int, from_round: int = 0
+) -> list[int]:
+    """The rounds in [from_round, upto] whose table ``name`` the manifest
+    ``state`` names as committed. ``upto`` past ``last_recrawl`` (recrawl
+    tables) or ``last_round`` raises ValueError: a round that crashed
+    before its manifest flip left orphan tables, not data. An optional
+    table is named where its round's ``optional_tables`` lists it; an
+    entry without that record (written before it existed) raises."""
+    bound = "last_recrawl" if name in RECRAWL_TABLES else "last_round"
+    if upto > state.get(bound, -1):
         raise ValueError(
-            f"round {upto_round} is not committed under {log.root!r} "
-            f"(last committed round: {last})"
+            f"round {upto} of {name!r} is not committed ({bound}: "
+            f"{state.get(bound, -1)})"
         )
+    rounds = range(max(from_round, 0), upto + 1)
+    if name in REQUIRED_TABLES + RECRAWL_TABLES:
+        return list(rounds)
+    named = []
+    for r in rounds:
+        tables = state.get(f"r{r}", {}).get("optional_tables")
+        if tables is None:
+            raise ValueError(
+                f"round {r}'s manifest entry has no optional_tables record "
+                f"(written before it existed): its {name!r} table is unknown"
+            )
+        if name in tables:
+            named.append(r)
+    return named
 
 
 def write_round_table(df: DataFrame, root: str, round_no: int, name: str) -> str:
     """Round-scoped parquet write (overwrite => replay-idempotent)."""
-    path = os.path.join(root, f"round={round_no:05d}", name)
+    path = table_path(root, round_no, name)
     df.write.mode("overwrite").parquet(path)
     return path
 
 
-def path_exists(p: str) -> bool:
-    """Existence check that works wherever the WRITES work: driver-local
-    os.path for plain paths, the Hadoop FileSystem API for any
-    scheme-qualified root (hdfs://, s3a://, file://...) — os.path.exists
-    on an object-store URI is silently always-False, which would make
-    every committed round read back as 'no data' (the micro_batch
-    _list_epoch_dirs lesson, ADVICE r2)."""
-    if "://" not in p:
-        return os.path.exists(p)
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise ValueError(
-            f"existence check on {p!r} needs an active SparkSession "
-            "(Hadoop FileSystem API)"
-        )
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-def round_table_paths(
-    root: str, name: str, upto_round: int, from_round: int = 0
-) -> list[str]:
-    """Existing per-round paths of a table in [from_round, upto_round]."""
-    return [
-        os.path.join(root, f"round={r:05d}", name)
-        for r in range(from_round, upto_round + 1)
-        if path_exists(os.path.join(root, f"round={r:05d}", name))
-    ]
-
-
 def read_rounds(
-    spark: SparkSession, root: str, name: str, upto_round: int,
-    from_round: int = 0,
+    spark: SparkSession, root: str, name: str, rounds: Sequence[int],
     merge_schema: bool = False,
 ) -> DataFrame | None:
-    """Union of a table's committed per-round deltas (snapshot read).
-    ``from_round`` lets a compacted reader skip already-consolidated
-    rounds (snapshot-expiry analog, VERDICT r3 item 4).
+    """Union of table ``name``'s deltas for exactly ``rounds`` (from
+    :func:`committed_rounds`), None for no rounds; a missing one fails
+    the read (Spark's PATH_NOT_FOUND names it).
     ``merge_schema`` is for tables whose schema gained columns across
     engine versions (e.g. recrawl_refreshed's recrawl_pass): without it
     Spark infers the union's schema from ONE footer, so a mixed old/new
     checkpoint would silently drop the new column (or read old rounds'
     values as garbage) depending on which file it sampled."""
-    paths = round_table_paths(root, name, upto_round, from_round)
-    if not paths:
+    if not rounds:
         return None
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*paths)
+    return reader.parquet(*(table_path(root, r, name) for r in rounds))
 
 
 def write_bucketed(

@@ -33,7 +33,7 @@ def fetched_rounds(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("crawlrep"))
     write_round_table(spark.createDataFrame(ROWS_R0, SCHEMA), root, 0, "fetched")
     write_round_table(spark.createDataFrame(ROWS_R1, SCHEMA), root, 1, "fetched")
-    return read_rounds(spark, root, "fetched", 1)
+    return read_rounds(spark, root, "fetched", [0, 1])
 
 
 def test_crawl_report_hand_counted(fetched_rounds):

@@ -302,7 +302,9 @@ def test_size_based_switches(spark, tmp_path):
     assert crawler.robots_broadcast() is True
 
 
-def test_fetch_join_broadcast_gate(spark, fixture_dir, tables, tmp_path_factory):
+def test_fetch_join_broadcast_gate(
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
+):
     """The scheduled set only broadcasts into the fetch join while it is
     provably small (the observed count gates it); a tiny forced threshold
     must still produce identical round results via the shuffle join."""
@@ -319,7 +321,8 @@ def test_fetch_join_broadcast_gate(spark, fixture_dir, tables, tmp_path_factory)
     ck_a = str(tmp_path_factory.mktemp("ck_bcast"))
     ck_b = str(tmp_path_factory.mktemp("ck_shuffle"))
     a = run(CrawlConfig(), ck_a)
-    b = run(CrawlConfig(scheduled_broadcast_max_rows=0), ck_b)
+    monkeypatch.setattr(round_loop, "SCHEDULED_BROADCAST_MAX_ROWS", 0)
+    b = run(CrawlConfig(), ck_b)
     assert [(r["scheduled"], r["fetched"], r["frontier_next"]) for r in a] == [
         (r["scheduled"], r["fetched"], r["frontier_next"]) for r in b
     ]
@@ -420,7 +423,9 @@ def test_shuffle_width_adapts_per_round(spark, fixture_dir, tables, tmp_path_fac
     assert _round_width(10**12, cores) == MAX_SHUFFLE_PARTITIONS == 32_768
 
 
-def test_bucketed_pages_fetch_join(spark, fixture_dir, tables, tmp_path_factory):
+def test_bucketed_pages_fetch_join(
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
+):
     """CrawlConfig.bucketed_pages_table: the over-broadcast fallback joins
     against the bucketed pages table with NO Exchange on the pages side
     (VERDICT r2 item 6), and the crawl result is identical to the
@@ -438,14 +443,16 @@ def test_bucketed_pages_fetch_join(spark, fixture_dir, tables, tmp_path_factory)
         cfg = CrawlConfig(
             n_shards=8, salt_parts=4,
             bucketed_pages_table="pages_bucketed_rl",
-            scheduled_broadcast_max_rows=0,  # force the fallback join
         )
         cb = Crawler(
             spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
             robots=tables["robots"], hosts=tables["hosts"],
             checkpoint_dir=ck_b, config=cfg,
         )
-        res_b = cb.run(seeds, rounds=2)
+        with monkeypatch.context() as m:
+            # force the fallback join
+            m.setattr(round_loop, "SCHEDULED_BROADCAST_MAX_ROWS", 0)
+            res_b = cb.run(seeds, rounds=2)
         res_p = _mk(spark, fixture_dir, tables, ck_p).run(seeds, rounds=2)
         for rb, rp in zip(res_b, res_p):
             for field in ("frontier_in", "scheduled", "fetched", "frontier_next"):
@@ -473,18 +480,18 @@ def test_bucketed_pages_fetch_join(spark, fixture_dir, tables, tmp_path_factory)
         spark.sql("DROP TABLE IF EXISTS pages_bucketed_rl")
 
 
-def test_seen_compaction_path_bound(spark, fixture_dir, tables, tmp_path_factory):
+def test_seen_compaction_path_bound(
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
+):
     """VERDICT r3 item 4: after thousands of tiny rounds the seen read
-    must touch O(seen_compact_every) paths, not one per round, and the
+    must touch O(SEEN_COMPACT_EVERY) paths, not one per round, and the
     compacted snapshot must equal the full union of all deltas."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     ckpt = str(tmp_path_factory.mktemp("ckpt_compact"))
-    cfg = CrawlConfig(
-        n_shards=8, salt_parts=4,
-        seen_compact_every=256,
-    )
+    monkeypatch.setattr(round_loop, "SEEN_COMPACT_EVERY", 256)
+    cfg = CrawlConfig(n_shards=8, salt_parts=4)
     crawler = Crawler(
         spark=spark,
         pages_path=os.path.join(fixture_dir, "pages.parquet"),
@@ -527,15 +534,13 @@ def test_seen_compaction_path_bound(spark, fixture_dir, tables, tmp_path_factory
 
 
 def test_resume_after_compaction_equals_straight_run(
-    spark, fixture_dir, tables, tmp_path_factory
+    spark, fixture_dir, tables, tmp_path_factory, monkeypatch
 ):
     """Crash-restart AFTER a compaction committed must resume from the
     consolidated seen + tail deltas and produce the same crawl as an
     uninterrupted run."""
-    cfg = CrawlConfig(
-        n_shards=8, salt_parts=4,
-        seen_compact_every=2,
-    )
+    monkeypatch.setattr(round_loop, "SEEN_COMPACT_EVERY", 2)
+    cfg = CrawlConfig(n_shards=8, salt_parts=4)
 
     def mk(ckpt):
         return Crawler(
@@ -766,7 +771,9 @@ def test_host_cardinalities_refuses_uncommitted_round(
             ),
             ckpt, rnd, "host_sketch",
         )
-    ManifestLog(ckpt).commit({"last_round": 0})
+    ManifestLog(ckpt).commit(
+        {"last_round": 0, "r0": {"optional_tables": ["host_sketch"]}}
+    )
     c = _mk(spark, fixture_dir, tables, ckpt)
     assert [(r.host, r.n_distinct) for r in c.host_cardinalities(0).collect()] == [
         ("h.com", 10)
@@ -961,3 +968,170 @@ def test_resume_refuses_foreign_hash_version(crawl, spark, fixture_dir, tables, 
     stale = _mk(spark, fixture_dir, tables, ckpt2)
     with pytest.raises(ValueError, match="url-hash formula"):
         stale.run(tables["seeds"], rounds=4)
+
+
+#: every config-gated table on: budgets, sketches, and all three sweeps
+#: (due in rounds 0 and 2, a standing gate in round 1)
+GATED_CFG = CrawlConfig(
+    n_shards=8, salt_parts=4, adapt_budgets=True, host_sketch=True,
+    blocklist_every=2, trap_every=2, pagerank_every=2,
+)
+REQUIRED = {"scheduled", "bloom", "fetched", "metrics", "frontier_next"}
+
+
+@pytest.fixture(scope="module")
+def gated_crawl(spark, fixture_dir, tables, tmp_path_factory):
+    ckpt = str(tmp_path_factory.mktemp("ckpt_gated"))
+    c = Crawler(
+        spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
+        robots=tables["robots"], hosts=tables["hosts"],
+        checkpoint_dir=ckpt, config=GATED_CFG,
+    )
+    c.run(tables["seeds"], rounds=3)
+    return ckpt
+
+
+def test_manifest_records_optional_tables(gated_crawl):
+    """Each round's manifest entry names exactly the config-gated tables
+    the round committed: the record readers resolve them from."""
+    import json
+
+    with open(os.path.join(gated_crawl, "manifest.json")) as fh:
+        state = json.load(fh)
+    assert state["last_round"] == 2
+    sweep = {
+        "hosts", "host_sketch", "host_quality", "blocklist",
+        "host_templates", "trap_content_hll", "trap_hosts",
+    }
+    assert state["r1"]["optional_tables"] == ["host_sketch", "hosts"]
+    for r, want in ((0, sweep), (1, {"hosts", "host_sketch"}), (2, sweep)):
+        on_disk = set(os.listdir(os.path.join(gated_crawl, f"round={r:05d}")))
+        assert set(state[f"r{r}"]["optional_tables"]) == want == (
+            on_disk - REQUIRED
+        ), r
+
+
+def _edit_manifest(ck, edit):
+    import json
+
+    mpath = os.path.join(ck, "manifest.json")
+    with open(mpath) as fh:
+        state = json.load(fh)
+    edit(state)
+    with open(mpath, "w") as fh:
+        json.dump(state, fh)
+
+
+def _gated_copy(gated_crawl, tmp_path, edit=None):
+    """A copy of the gated checkpoint, its manifest passed through
+    ``edit``."""
+    import shutil
+
+    ck = str(tmp_path / "ck")
+    shutil.copytree(gated_crawl, ck)
+    if edit is not None:
+        _edit_manifest(ck, edit)
+    return ck
+
+
+def _rewind_to_round_1(state):
+    """Round 2 crashed before its manifest flip: its replay re-runs the
+    sweeps."""
+    state["last_round"] = 1
+    del state["r2"]
+
+
+@pytest.mark.parametrize("lost,rewind,rounds", [
+    # a lost budget table must not reset budgets to the static table
+    ("round=00001/hosts", True, 3),
+    # a lost newest verdict must not fall back to round 0's as the
+    # standing gate of round 3
+    ("round=00002/blocklist", False, 4),
+    # a lost partial must not drop out of the sweep's sums
+    ("round=00000/host_quality", True, 3),
+    # a lost fetched round must not drop out of PageRank's link graph
+    ("round=00001/fetched", True, 3),
+])
+def test_lost_recorded_table_fails_the_crawl(
+    gated_crawl, spark, fixture_dir, tables, tmp_path, lost, rewind, rounds
+):
+    """A committed table the manifest names is read by name: losing it
+    fails the round that reads it, naming the path, instead of reading
+    as a table that was never written."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    ck = _gated_copy(gated_crawl, tmp_path, _rewind_to_round_1 if rewind else None)
+    shutil.rmtree(os.path.join(ck, lost))
+    c = Crawler(
+        spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
+        robots=tables["robots"], hosts=tables["hosts"],
+        checkpoint_dir=ck, config=GATED_CFG,
+    )
+    with pytest.raises(AnalysisException, match=lost):
+        c.run(tables["seeds"], rounds=rounds)
+
+
+def test_lost_fetched_or_sketch_fails_the_readers(
+    gated_crawl, spark, fixture_dir, tables, tmp_path
+):
+    """The catalogue, the recrawl pass and host_cardinalities read the
+    rounds the manifest names: a lost `fetched` or `host_sketch` round
+    fails them, naming the path, and a round that committed no sketch
+    is refused by number rather than under-counted."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    from metadata_crawler_spark.sources.sinks import read_catalogue
+
+    ck = _gated_copy(gated_crawl, tmp_path)
+    c = Crawler(
+        spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
+        robots=tables["robots"], hosts=tables["hosts"],
+        checkpoint_dir=ck, config=GATED_CFG,
+    )
+    shutil.rmtree(os.path.join(ck, "round=00001", "fetched"))
+    with pytest.raises(AnalysisException, match="round=00001/fetched"):
+        read_catalogue(spark, ck, 2)
+    with pytest.raises(AnalysisException, match="round=00001/fetched"):
+        c.recrawl_round(0, now_s=1_800_000_000.0)
+    assert "last_recrawl" not in c.log.read()
+    assert c.host_cardinalities(0).count() > 0
+    shutil.rmtree(os.path.join(ck, "round=00001", "host_sketch"))
+    with pytest.raises(AnalysisException, match="round=00001/host_sketch"):
+        c.host_cardinalities(2)
+    # as if round 1 had run with host_sketch off
+    _edit_manifest(
+        ck, lambda state: state["r1"]["optional_tables"].remove("host_sketch")
+    )
+    with pytest.raises(ValueError, match="round 1 committed no host_sketch"):
+        c.host_cardinalities(2)
+
+
+def test_unrecorded_optional_tables_refuse_to_resolve(
+    gated_crawl, spark, fixture_dir, tables, tmp_path
+):
+    """A manifest written before rounds recorded their optional tables
+    still resolves the required ones, so it resumes under the default
+    config; a sweep's standing gate over it raises, naming the round,
+    instead of probing storage."""
+    def strip(state):
+        for r in range(3):
+            state[f"r{r}"].pop("optional_tables", None)
+
+    ck = _gated_copy(gated_crawl, tmp_path, strip)
+
+    def mk(cfg):
+        return Crawler(
+            spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
+            robots=tables["robots"], hosts=tables["hosts"],
+            checkpoint_dir=ck, config=cfg,
+        )
+
+    with pytest.raises(ValueError, match="round 0's manifest entry"):
+        mk(CrawlConfig(n_shards=8, salt_parts=4, blocklist_every=2)).run(
+            tables["seeds"], rounds=4
+        )
+    assert [r["round"] for r in mk(CFG).run(tables["seeds"], rounds=4)] == [3]

@@ -236,14 +236,27 @@ def test_grow_refuses_other_geometry(spark, keys, op):
             grow(standing, batch, n_shards, per_shard).collect()
 
 
-def test_cogrouped_probe_survives_geometry_drift(spark, keys):
-    """The no-false-negative contract under config drift: a resume that
-    changes CrawlConfig.n_shards must not shard candidates by the NEW
-    count against a filter built with the OLD one — the probe reads the
-    geometry from the table (the broadcast path's 'carried in the
-    table, never inferred' rule), so the caller's stale value is only
-    an empty-filter fallback."""
+def test_cogrouped_probe_refuses_geometry_drift(spark, keys):
+    """The cogrouped probe shards candidates by the shard count the
+    caller passes (the round loop's recorded filter geometry), so
+    planning it submits no job. A filter built with another shard count
+    raises at the action: candidates sharded by the wrong count would
+    cogroup with the wrong shard rows and report seen urls as new."""
     inserted = keys.limit(1500)
     bloom = bloom_build(inserted, N_SHARDS, fpr=0.01).cache()
-    drifted = probe_cogrouped(inserted, bloom, N_SHARDS * 4)
-    assert drifted.filter(~F.col("maybe_seen")).count() == 0
+    sc = spark.sparkContext
+    group = "test_cogrouped_probe_plan"
+    sc.setJobGroup(group, "plan the cogrouped probe")
+    try:
+        planned = dedup_against_seen(
+            inserted, inserted, bloom, N_SHARDS, broadcast=False
+        )
+        drifted = dedup_against_seen(
+            inserted, inserted, bloom, N_SHARDS * 4, broadcast=False
+        )
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert planned.count() == 0
+    with pytest.raises(Exception, match=f"built with {N_SHARDS} shards"):
+        drifted.count()

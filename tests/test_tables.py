@@ -56,12 +56,17 @@ def test_manifest_rejects_remote_root(tmp_path, monkeypatch):
 
 
 def test_round_tables(spark, tmp_path):
+    """read_rounds reads exactly the rounds it is given; it never probes,
+    so a listed table that has gone missing fails the read."""
+    from pyspark.errors import AnalysisException
+
     df = spark.range(10).toDF("id")
     root = str(tmp_path)
     write_round_table(df, root, 0, "t")
     write_round_table(df, root, 1, "t")
-    both = read_rounds(spark, root, "t", 1)
+    both = read_rounds(spark, root, "t", [0, 1])
     assert both.count() == 20
-    only0 = read_rounds(spark, root, "t", 0)
+    only0 = read_rounds(spark, root, "t", [0])
     assert only0.count() == 10
-    assert read_rounds(spark, root, "missing", 1) is None
+    with pytest.raises(AnalysisException, match="round=00002/t"):
+        read_rounds(spark, root, "t", [0, 1, 2])
