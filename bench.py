@@ -81,7 +81,7 @@ def _crawl_throughput(spark, fx_paths: dict[str, str], rounds: int = 2) -> dict:
             robots=spark.read.parquet(fx_paths["robots"]),
             hosts=spark.read.parquet(fx_paths["hosts"]),
             checkpoint_dir=ckpt,
-            config=CrawlConfig(n_shards=CPUS, salt_parts=8),
+            config=CrawlConfig(n_shards=CPUS),
         )
         t0 = time.time()
         results = crawler.run(seeds, rounds=rounds)

@@ -6,7 +6,7 @@ gone classification to prioritize re-fetches)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -97,6 +97,18 @@ def estimate_change_rate(
     )
 
 
+def checks_delta(classified: DataFrame, now_s: float) -> DataFrame:
+    """The rows a recrawl pass appends to the visit-check history that
+    feeds :func:`estimate_change_rate`: one (url, ts, changed) row per
+    completed content comparison. ``new``/``gone`` rows are excluded —
+    a first fetch has no previous content to differ from, and a dead
+    url yielded no content at all (keeping them would bias lambda_hat
+    toward 0)."""
+    return classified.filter(F.col("changed").isNotNull()).select(
+        "url", F.lit(float(now_s)).alias("ts"), "changed"
+    )
+
+
 def revisit_schedule(
     rates: DataFrame,
     min_interval_s: float = 3600.0,
@@ -178,7 +190,7 @@ def classify_refetch(
     p = prior.select(
         F.col(url_col).alias("url"),
         (F.col(etag_col) if etag_col else F.md5(F.col(pcc))).alias("_etag"),
-        F.coalesce(F.octet_length(F.col(pcc)).cast("long"), F.lit(0).cast("long")).alias("_pbytes"),
+        stored_bytes(F.col(pcc)).alias("_pbytes"),
     )
     f = fetched.select(
         F.col(url_col).alias("url"),
@@ -188,18 +200,10 @@ def classify_refetch(
         f = f.localCheckpoint(eager=False)
         fetched_broadcast = small_enough_to_broadcast(f)
     f_side = F.broadcast(f) if fetched_broadcast else f
-    hits = p.join(f_side, "url", "inner")
-    not_mod = F.col("_etag").eqNullSafe(F.col("_new_hash"))
-    classified_hits = hits.select(
+    classified_hits = p.join(f_side, "url", "inner").select(
         "url",
-        F.when(not_mod, F.lit("not_modified"))
-        .otherwise(F.lit("modified"))
-        .alias("status"),
-        (~not_mod).alias("changed"),
-        (~not_mod).alias("store_row"),
-        F.when(not_mod, F.col("_pbytes"))
-        .otherwise(F.lit(0).cast("long"))
-        .alias("bytes_saved"),
+        *revalidate(F.lit(True), F.col("_etag"), F.col("_new_hash"),
+                    F.col("_pbytes")),
     )
     # bounded by the batch; checkpointed so its two consumers (the union
     # branch and the hit_urls anti-join build) share ONE scan of the
@@ -217,8 +221,44 @@ def classify_refetch(
         F.lit(True).alias("store_row"),
         F.lit(0).cast("long").alias("bytes_saved"),
     )
-    cols = ["url", "status", "changed", "store_row", "bytes_saved"]
-    return classified_hits.select(*cols).unionByName(new_rows.select(*cols))
+    return classified_hits.unionByName(new_rows)
+
+
+def stored_bytes(content: Column) -> Column:
+    """The body bytes a 304 saves re-transferring: the stored content's
+    length in bytes, 0 for NULL content (nothing was stored)."""
+    return F.coalesce(
+        F.octet_length(content).cast("long"), F.lit(0).cast("long")
+    )
+
+
+def revalidate(
+    hit: Column, etag: Column, new_hash: Column, pbytes: Column
+) -> list[Column]:
+    """THE conditional-fetch (HTTP 304) decision for a stored url, as the
+    (status, changed, store_row, bytes_saved) columns.
+
+    ``hit`` is the explicit presence flag of the re-fetch: NULL (no
+    re-fetch row) makes the url ``gone``, with ``changed`` NULL (a dead
+    url yields no change observation) and nothing stored. Presence is
+    never read from content nullness: a page whose re-fetch extracts to
+    NULL is still a hit. A hit is ``not_modified`` when the stored
+    validator ``etag`` equals the re-fetched content's ``new_hash``
+    (NULL == NULL included; ``bytes_saved`` = the stored body's
+    ``pbytes``), else ``modified`` (re-store the body)."""
+    gone = hit.isNull()
+    not_mod = etag.eqNullSafe(new_hash)
+    return [
+        F.when(gone, F.lit("gone"))
+        .when(not_mod, F.lit("not_modified"))
+        .otherwise(F.lit("modified"))
+        .alias("status"),
+        F.when(~gone, ~not_mod).alias("changed"),
+        (~gone & ~not_mod).alias("store_row"),
+        F.when(~gone & not_mod, pbytes)
+        .otherwise(F.lit(0).cast("long"))
+        .alias("bytes_saved"),
+    ]
 
 
 def revalidation_stats(classified: DataFrame) -> DataFrame:

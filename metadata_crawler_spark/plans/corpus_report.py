@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quality import gopher_quality_flags, pii_counts
 from ..functions.text import lang_id_expr, ws_token_count
+from ..sources.tables import file_round
 
 #: percentiles reported for the token-length distribution
 REPORT_PERCENTILES = (0.1, 0.5, 0.9, 0.99)
@@ -111,9 +112,10 @@ def crawl_report(
 
     Slices: (overall), (round), (depth), readable from NULL group
     columns + ``grouping_id``. ``round_col=None`` derives the round from
-    the committed file path (``round=NNNNN`` directories) — zero cost,
-    no schema change. Same plan contract as corpus_report: ONE scan, ONE
-    grouping-sets Expand + partial-agg exchange; politeness-wall
+    the committed file path (``sources.tables.file_round``) — zero cost,
+    no schema change, no probe job; input with no round table behind it
+    fails when the report runs. Same plan contract as corpus_report: ONE
+    scan, ONE grouping-sets Expand + partial-agg exchange; politeness-wall
     percentiles ride mergeable ``percentile_approx`` sketches; host
     cardinality is ``approx_count_distinct`` (a per-slice exact distinct
     would multiply the Expand by |hosts|).
@@ -121,29 +123,7 @@ def crawl_report(
     Columns per slice: n_scheduled, n_fetched, fetch_rate, n_hosts_approx,
     mean_depth, max_depth, p_planned_ms, mean_outlinks, empty_text_frac.
     """
-    if round_col:
-        rnd = F.col(round_col)
-    else:
-        # fail fast instead of silently reporting one round=NULL slice:
-        # input_file_name() is "" behind createDataFrame / a cache / any
-        # shuffle, and "round=NNNNN" only appears on direct scans of the
-        # committed round tables. Bounded 1-row probe (the
-        # small_enough_to_broadcast pattern), not a full pass.
-        import re as _re
-
-        probe = (
-            fetched.select(F.input_file_name().alias("f")).limit(1).collect()
-        )
-        if probe and not _re.search(r"round=\d+", probe[0]["f"] or ""):
-            raise ValueError(
-                "crawl_report(round_col=None) derives the round from the "
-                "file path, which needs a DIRECT scan of committed "
-                "round=NNNNN tables (sources.sinks.read_catalogue). This "
-                "DataFrame has no such path — pass round_col= instead."
-            )
-        rnd = F.regexp_extract(
-            F.input_file_name(), r"round=(\d+)", 1
-        ).cast("int")
+    rnd = F.col(round_col) if round_col else file_round()
     fetched_i = F.col("fetched").cast("int")
     proj = fetched.select(
         rnd.alias("round"),

@@ -112,7 +112,6 @@ class CrawlConfig:
     #: round, or a rebuild). A standing filter keeps the shard count it
     #: was built with; resuming under a different value rebuilds it.
     n_shards: int = 32
-    salt_parts: int = 8
     default_budget: int = 8
     #: cap on URLs scheduled per round (the MDC_MAX_FILES test valve,
     #: reference data_collector.py:87,131-136); None = unlimited
@@ -197,6 +196,11 @@ class CrawlConfig:
 #: bucketed/storage-partitioned pages table (sources/tables.
 #: write_bucketed), which needs no broadcast either
 SCHEDULED_BROADCAST_MAX_ROWS = 5_000_000
+
+#: salt tasks per host in the per-host top-k (operators/frontier.
+#: per_host_topk): spreads a hot host over this many tasks. The schedule
+#: does not depend on it, only the top-k's task balance does.
+SALT_PARTS = 8
 
 #: seen-set compaction cadence (Iceberg snapshot-expiry analog): every k
 #: rounds the per-round scheduled deltas are consolidated into ONE
@@ -627,7 +631,7 @@ class Crawler:
             self.robots_broadcast(), self.hosts_broadcast(),
         ).persist()
         scheduled = schedule_eligible(
-            gated, cfg.salt_parts, cfg.site_politeness, cfg.psl_rules
+            gated, SALT_PARTS, cfg.site_politeness, cfg.psl_rules
         )
         if cfg.max_urls_per_round is not None:
             # deterministic valve: global order, not task order
@@ -1054,46 +1058,66 @@ class Crawler:
         )
         return self.spark.read.parquet(path)
 
-    def recrawl_round(
-        self,
-        recrawl_no: int,
-        now_s: float,
-        max_urls: int | None = None,
-        min_interval_s: float = 3600.0,
-        max_interval_s: float = 30 * 24 * 3600.0,
-    ) -> dict:
-        """One freshness pass over the committed crawl (the revalidation
-        loop of plans/recrawl.py run against this crawler's own state —
-        the subsystem the BFS loop deliberately lacks: its seen-set
-        blocks re-fetches by design).
+    def recrawl_round(self, recrawl_no: int, now_s: float) -> dict:
+        """One freshness pass over the committed crawl — the subsystem the
+        BFS loop deliberately lacks (its seen-set blocks re-fetches by
+        design; the reference re-stamps ``_crawl_epoch`` on upsert
+        instead of re-reading, api/stores/base.py:411-425). The pass
+        closes the cycle
 
-        Due set: every url the crawl fetched, minus urls whose
-        Cho-GM/revisit schedule (built from PRIOR passes' committed
-        ``recrawl_checks``) says next_due > ``now_s`` — pass 0 revisits
-        everything once, then unchanged urls drift to the slow lane.
-        Each pass commits under ``round={recrawl_no}``:
+            check history -> estimate_change_rate -> revisit_schedule
+                -> due set -> conditional fetch -> revalidate
+                -> checks delta (back into the history) + store delta
 
-        - ``recrawl_checks`` — (url, ts, changed) delta feeding the next
-          pass's estimator (append-only history, the crawl-round
-          contract: replay rewrites the identical table),
-        - ``recrawl_refreshed`` — modified/new urls' re-extracted text
-          (the store delta; not_modified bodies are never re-stored),
-        - ``recrawl_report`` — per-status counts + bytes_saved.
+        so a standing corpus stays fresh at a bandwidth cost proportional
+        to what changed: ``not_modified`` rows (the HTTP-304 analog)
+        never re-enter the store, and their body bytes are the saved
+        transfer the report counts.
 
         The comparison prior is the LATEST text per url across the crawl
         AND all committed ``recrawl_refreshed`` deltas — a url refreshed
         in pass k compares against its refreshed body from pass k+1 on,
         so an unchanged-since-refresh page is ``not_modified`` (never
         re-stored) instead of mismatching its stale crawl text forever.
+        It is built once per pass, as (url, md5, byte length) only:
+        stored bodies never move.
 
-        Re-fetched html flows through the SAME byte-identical extraction
-        as the crawl (applied to the BOUNDED hits set, never the full
-        snapshot), so an unchanged page hashes equal to its stored text.
-        ``now_s`` is explicit — determinism and replay over wall clocks.
+        Due set: every url of the prior, minus urls whose Cho-GM/revisit
+        schedule (``revisit_schedule`` at its default clamp, built from
+        PRIOR passes' committed ``recrawl_checks``) says next_due >
+        ``now_s`` — pass 0 revisits everything once, then unchanged urls
+        drift to the slow lane. The due set is checkpointed once and
+        size-probed for the fetch join. Its hits re-fetch from the pages
+        snapshot through the SAME byte-identical extraction as the crawl
+        (applied to the bounded hits, never the full snapshot), so an
+        unchanged page hashes equal to its stored text; one left join
+        of the due set with its hits classifies every due url
+        ``not_modified`` | ``modified`` | ``gone`` (absent from the
+        snapshot). Every due url has a prior, so ``new`` cannot occur.
+
+        Each pass commits under ``round={recrawl_no}``:
+
+        - ``recrawl_checks`` — (url, ts, changed) delta feeding the next
+          pass's estimator (append-only history, the crawl-round
+          contract: replay rewrites the identical table),
+        - ``recrawl_refreshed`` — modified urls' re-extracted text (the
+          store delta; not_modified bodies are never re-stored),
+        - ``recrawl_report`` — per-status counts + bytes_saved.
+
+        Passes are strictly sequential (``recrawl_no`` must be the
+        manifest's ``last_recrawl + 1``). ``now_s`` is explicit —
+        determinism and replay over wall clocks. Returns
+        {status: (n_urls, bytes_saved)}.
         """
         from ..functions.text import extract_text_udf
-        from ..operators.changes import estimate_change_rate, revisit_schedule
-        from ..plans.recrawl import checks_delta, recrawl_batch
+        from ..operators.changes import (
+            checks_delta,
+            estimate_change_rate,
+            revalidate,
+            revalidation_stats,
+            revisit_schedule,
+            stored_bytes,
+        )
 
         state = self.log.read() or {}
         fetched_all = read_rounds(
@@ -1104,10 +1128,6 @@ class Crawler:
             raise ValueError(
                 "recrawl_round needs committed crawl rounds (run() first)"
             )
-        prior = latest_per_key(
-            fetched_all.filter(F.col("fetched") & F.col("text").isNotNull()),
-            "url", "warc_ts", tiebreak="url",
-        ).select("url", "text")
         last_rc = state.get("last_recrawl", -1)
         if recrawl_no != last_rc + 1:
             # passes are STRICTLY sequential: skipping ahead would name a
@@ -1120,69 +1140,66 @@ class Crawler:
                 f"committed history (last committed pass: {last_rc}; "
                 f"next allowed: {last_rc + 1})"
             )
+
+        def versions(df: DataFrame, recrawl_pass, warc_ts) -> DataFrame:
+            # a stored version of a url's text, hashed before the window
+            # so only (url, md5, bytes) shuffle; newer passes outrank the
+            # crawl (pass -1), then the newer fetch wins within the crawl
+            return df.select(
+                "url",
+                F.md5("text").alias("_etag"),
+                stored_bytes(F.col("text")).alias("_pbytes"),
+                F.struct(
+                    recrawl_pass.cast("int").alias("recrawl_pass"),
+                    warc_ts.alias("warc_ts"),
+                ).alias("_version"),
+            )
+
+        stored = versions(
+            fetched_all.filter(F.col("fetched") & F.col("text").isNotNull()),
+            F.lit(-1), F.col("warc_ts"),
+        )
         refreshed = read_rounds(
             self.spark, self.checkpoint_dir, "recrawl_refreshed",
             committed_rounds(state, "recrawl_refreshed", last_rc),
-            merge_schema=True,
         )
         if refreshed is not None:
-            # overlay: text refreshed in pass k supersedes the crawl text
-            # (and earlier passes') for every later comparison — without
-            # this a once-modified url re-classifies modified (and
-            # re-stores its body) on EVERY subsequent pass. Pre-r5
-            # checkpoints wrote (url, text) without recrawl_pass: treat
-            # those deltas as pass 0 (above the crawl, below any pass
-            # that recorded its number).
-            if "recrawl_pass" in refreshed.columns:
-                refreshed = refreshed.withColumn(
-                    "recrawl_pass",
-                    F.coalesce(
-                        F.col("recrawl_pass").cast("int"), F.lit(0)
-                    ),
-                )
-            else:
-                refreshed = refreshed.withColumn(
-                    "recrawl_pass", F.lit(0).cast("int")
-                )
-            # window ONLY the bounded deltas (modified rows per pass),
-            # never the full store: the newest delta per url wins, then
-            # overlays the crawl prior via anti-join + union — the
-            # 10^10-row prior is streamed once with the small delta set
-            # as the build side, not re-sorted under a second window
-            delta = latest_per_key(
-                refreshed.select("url", "text", "recrawl_pass"),
-                "url", "recrawl_pass", tiebreak="url",
-            ).select("url", "text").localCheckpoint(eager=False)
-            prior = prior.join(
-                delta.select("url"), "url", "left_anti"
-            ).unionByName(delta)
-        due = prior.select("url")
+            stored = stored.unionByName(versions(
+                refreshed, F.col("recrawl_pass"),
+                F.lit(None).cast(fetched_all.schema["warc_ts"].dataType),
+            ))
+        due = latest_per_key(
+            stored, "url", "_version", tiebreak="url"
+        ).drop("_version")
         checks = read_rounds(
             self.spark, self.checkpoint_dir, "recrawl_checks",
             committed_rounds(state, "recrawl_checks", last_rc),
         )
         if checks is not None:
-            sched = revisit_schedule(
-                estimate_change_rate(checks),
-                min_interval_s=min_interval_s,
-                max_interval_s=max_interval_s,
-            )
-            not_due = sched.filter(
+            not_due = revisit_schedule(estimate_change_rate(checks)).filter(
                 F.col("next_due_ts").cast("double") > float(now_s)
             ).select("url")
             due = due.join(not_due, "url", "left_anti")
-        if max_urls is not None:
-            due = due.orderBy("url").limit(int(max_urls))
-        out = recrawl_batch(
-            due,
-            self.pages_snapshot(),
-            prior,
-            page_url_col="page_url",
-            page_content_col="html",
-            transform=lambda h: h.select(
-                "url", extract_text_udf(F.col("_content")).alias("_content")
-            ),
-            keep_content=True,
+        due = due.localCheckpoint(eager=False)
+        due_urls = due.select(F.col("url").alias("_due_url"))
+        if small_enough_to_broadcast(due):
+            due_urls = F.broadcast(due_urls)
+        # inner join streams the big pages side; the due set is the build
+        pages = self.pages_snapshot()
+        hits = pages.join(
+            due_urls, pages["page_url"] == due_urls["_due_url"], "inner"
+        ).select(
+            F.col("page_url").alias("url"),
+            extract_text_udf(F.col("html")).alias("content"),
+            F.lit(True).alias("_hit"),
+        )
+        # checkpointed: the three commits below read the classified due
+        # set, not three re-fetches
+        out = due.join(hits, "url", "left").select(
+            "url",
+            *revalidate(F.col("_hit"), F.col("_etag"), F.md5("content"),
+                        F.col("_pbytes")),
+            "content",
         ).localCheckpoint(eager=False)
         write_round_table(
             checks_delta(out, now_s), self.checkpoint_dir, recrawl_no,
@@ -1196,12 +1213,9 @@ class Crawler:
             ),
             self.checkpoint_dir, recrawl_no, "recrawl_refreshed",
         )
-        report = out.groupBy("status").agg(
-            F.count("*").alias("n_urls"),
-            F.sum("bytes_saved").alias("bytes_saved"),
-        )
         path = write_round_table(
-            report, self.checkpoint_dir, recrawl_no, "recrawl_report"
+            revalidation_stats(out), self.checkpoint_dir, recrawl_no,
+            "recrawl_report",
         )
         counts = {
             r["status"]: (r["n_urls"], r["bytes_saved"])

@@ -32,7 +32,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--n-shards", type=int, default=32)
-    ap.add_argument("--salt-parts", type=int, default=8)
     ap.add_argument("--max-urls-per-round", type=int, default=None)
     ap.add_argument("--fail-under", type=int, default=None)
     ap.add_argument(
@@ -68,7 +67,6 @@ def main(argv: list[str] | None = None) -> int:
         checkpoint_dir=args.checkpoint,
         config=CrawlConfig(
             n_shards=args.n_shards,
-            salt_parts=args.salt_parts,
             max_urls_per_round=args.max_urls_per_round,
             fail_under=args.fail_under,
         ),

@@ -66,18 +66,22 @@ def index_catalogue(
     its partition; ``partitionBy`` gives the reader partition pruning on
     the facet (the reference's per-core routing, A6).
     """
+    from pyspark.sql import Observation
+
     files = read_catalogue(spark, checkpoint_dir, upto_round)
-    latest = latest_view(files)
-    (files.write.mode("overwrite").partitionBy(partition_by)
-     .format(fmt).save(os.path.join(out_dir, "files")))
-    (latest.write.mode("overwrite").partitionBy(partition_by)
-     .format(fmt).save(os.path.join(out_dir, "latest")))
+    # each count rides its own write (an Observation bound to that
+    # action): the descriptor re-runs neither the catalogue read nor the
+    # latest window
+    counts = {}
+    for name, df in (("files", files), ("latest", latest_view(files))):
+        obs = Observation(f"catalogue_{name}")
+        (df.observe(obs, F.count(F.lit(1)).alias("n")).write
+         .mode("overwrite").partitionBy(partition_by)
+         .format(fmt).save(os.path.join(out_dir, name)))
+        counts[name] = obs.get["n"]
     descriptor = {
         "schema": files.schema.jsonValue(),
-        "counts": {
-            "files": files.count(),
-            "latest": latest.count(),
-        },
+        "counts": counts,
         "upto_round": upto_round,
         "partition_by": partition_by,
         "format": fmt,

@@ -26,7 +26,8 @@ import time
 from typing import Any, Sequence
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 class ManifestLog:
@@ -81,6 +82,22 @@ def table_path(root: str, round_no: int, name: str) -> str:
     return os.path.join(root, f"round={round_no:05d}", name)
 
 
+def file_round() -> Column:
+    """:func:`table_path`'s inverse, as a column: the round of the round
+    table each row was scanned from (``input_file_name()``). A row with
+    no round table directly behind it (``createDataFrame``, a cache, or
+    anything past a shuffle reads an empty file name) fails the query
+    when it is evaluated, instead of reading as round NULL."""
+    captured = F.regexp_extract(F.input_file_name(), r"/round=(\d+)/", 1)
+    return F.when(
+        captured == "",
+        F.raise_error(F.lit(
+            "row is not from a direct scan of committed round=NNNNN "
+            "tables (sources.tables.read_rounds): its round is unknown"
+        )),
+    ).otherwise(captured.cast("int"))
+
+
 def committed_rounds(
     state: dict[str, Any], name: str, upto: int, from_round: int = 0
 ) -> list[int]:
@@ -120,23 +137,17 @@ def write_round_table(df: DataFrame, root: str, round_no: int, name: str) -> str
 
 
 def read_rounds(
-    spark: SparkSession, root: str, name: str, rounds: Sequence[int],
-    merge_schema: bool = False,
+    spark: SparkSession, root: str, name: str, rounds: Sequence[int]
 ) -> DataFrame | None:
     """Union of table ``name``'s deltas for exactly ``rounds`` (from
     :func:`committed_rounds`), None for no rounds; a missing one fails
-    the read (Spark's PATH_NOT_FOUND names it).
-    ``merge_schema`` is for tables whose schema gained columns across
-    engine versions (e.g. recrawl_refreshed's recrawl_pass): without it
-    Spark infers the union's schema from ONE footer, so a mixed old/new
-    checkpoint would silently drop the new column (or read old rounds'
-    values as garbage) depending on which file it sampled."""
+    the read (Spark's PATH_NOT_FOUND names it). Spark infers the
+    union's schema from one footer: every round of a checkpoint is
+    written by one engine version (old checkpoints do not outlive an
+    engine change)."""
     if not rounds:
         return None
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*(table_path(root, r, name) for r in rounds))
+    return spark.read.parquet(*(table_path(root, r, name) for r in rounds))
 
 
 def write_bucketed(

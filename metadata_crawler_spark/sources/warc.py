@@ -613,7 +613,7 @@ def write_warc_segments(
     zero-payload WARC ``revisit`` records (identical-payload-digest
     profile) carrying ``digest_col`` + ``refers_ts_col`` instead of a
     duplicate body — the recrawl not_modified path
-    (plans/recrawl.recrawl_batch) lands in the archive without
+    (Crawler.recrawl_round) lands in the archive without
     re-storing bytes, exactly as Heritrix/Common Crawl recrawls do.
     With the flag column the returned index gains a ``kind`` column
     (response | revisit); without it schema and bytes are unchanged."""

@@ -5,7 +5,6 @@ tables (round derived from the round=NNNNN path), rate math, plan shape
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from metadata_crawler_spark.plans.corpus_report import crawl_report, host_report
@@ -106,16 +105,20 @@ def test_host_report_topk_deterministic(fetched_rounds):
 
 def test_crawl_report_rejects_pathless_input(spark):
     """round_col=None derives the round from the committed file path;
-    a DataFrame with no round=NNNNN scan behind it must fail fast, not
-    silently report one round=NULL slice."""
-    import pytest
-
-    from metadata_crawler_spark.plans.corpus_report import crawl_report
-
+    a DataFrame with no round=NNNNN scan behind it must fail when the
+    report runs, not silently report one round=NULL slice — and planning
+    the report submits no probe job."""
     df = spark.createDataFrame(
         [("https://a/1", "h1", 0, True, 0, ["x"], "t")],
         "url string, host string, depth int, fetched boolean,"
         " planned_ms long, links array<string>, text string",
     )
-    with pytest.raises(ValueError, match="round_col"):
-        crawl_report(df)
+    sc = spark.sparkContext
+    sc.setJobGroup("crawl_report_plan", "plan only")
+    try:
+        rep = crawl_report(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("crawl_report_plan") == []
+    with pytest.raises(Exception, match="not from a direct scan"):
+        rep.collect()

@@ -238,7 +238,7 @@ def test_crawl_loop_site_politeness(spark, fixture_dir, tables, tmp_path_factory
         hosts=tables["hosts"],
         checkpoint_dir=ckpt,
         config=CrawlConfig(
-            n_shards=8, salt_parts=4,
+            n_shards=8,
             site_politeness=True,
         ),
     )

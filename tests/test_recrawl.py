@@ -1,5 +1,6 @@
-"""Revalidation-aware recrawl: classify_refetch / recrawl_batch /
-checks_delta — the conditional-fetch (HTTP 304 analog) freshness loop."""
+"""Revalidation-aware recrawl: revalidate / classify_refetch /
+checks_delta / Crawler.recrawl_round — the conditional-fetch (HTTP 304
+analog) freshness loop."""
 
 from __future__ import annotations
 
@@ -7,15 +8,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from metadata_crawler_spark.operators.changes import (
+    checks_delta,
     classify_refetch,
     estimate_change_rate,
+    revalidate,
     revalidation_stats,
     revisit_schedule,
-)
-from metadata_crawler_spark.plans.recrawl import (
-    checks_delta,
-    due_for_revisit,
-    recrawl_batch,
+    stored_bytes,
 )
 
 
@@ -97,46 +96,53 @@ def test_classify_refetch_broadcast_paths_agree(spark, stores):
     assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, sh.collect()))
 
 
-def test_recrawl_batch_end_to_end(spark, stores):
-    prior, pages = stores
-    due = _df(
+def test_revalidate_presence_from_flag(spark):
+    """The 304 decision reads presence from the explicit hit flag, never
+    from content nullness: a hit whose re-fetch extracts to NULL is
+    compared (NULL == NULL is not_modified), and only a url with no
+    re-fetch row is gone."""
+    df = _df(
         spark,
-        [(u,) for u in (
-            "https://a/1", "https://a/2", "https://a/4",
-            "https://a/gone", "https://a/new",
-        )],
-        "url string",
+        [
+            ("same", True, "body", "body"),
+            ("diff", True, "body", "body v2"),
+            ("null_both", True, None, None),
+            ("null_new", True, "body", None),
+            ("gone", None, "body", None),
+        ],
+        "url string, _hit boolean, stored string, content string",
     )
-    out = _status_map(recrawl_batch(due, pages, prior))
-    assert out["https://a/1"][0] == "not_modified"
-    assert out["https://a/2"][0] == "modified"
-    assert out["https://a/4"][0] == "not_modified"
-    assert out["https://a/gone"] == ("gone", None, False, 0)
-    assert out["https://a/new"][0] == "new"
-    # /3 was not due -> absent
-    assert "https://a/3" not in out
+    classified = df.select(
+        "url",
+        *revalidate(
+            F.col("_hit"), F.md5("stored"), F.md5("content"),
+            stored_bytes(F.col("stored")),
+        ),
+    )
+    out = _status_map(classified)
+    assert out["same"] == ("not_modified", False, False, len("body"))
+    assert out["diff"] == ("modified", True, True, 0)
+    assert out["null_both"] == ("not_modified", False, False, 0)
+    assert out["null_new"] == ("modified", True, True, 0)
+    assert out["gone"] == ("gone", None, False, 0)
     stats = {
         r["status"]: (r["n_urls"], r["bytes_saved"])
-        for r in revalidation_stats(recrawl_batch(due, pages, prior)).collect()
+        for r in revalidation_stats(classified).collect()
     }
-    assert stats["not_modified"] == (2, len("alpha body"))
-    assert stats["modified"] == (1, 0)
-    assert stats["gone"] == (1, 0)
-    assert stats["new"] == (1, 0)
+    assert stats == {
+        "not_modified": (2, len("body")), "modified": (2, 0), "gone": (1, 0),
+    }
 
 
 def test_checks_delta_feeds_estimator(spark, stores):
     """The loop closes: recrawl checks append to the history and move
-    the Cho & Garcia-Molina estimate; new/gone rows stay out."""
+    the Cho & Garcia-Molina estimate; rows with no comparison (here a
+    first fetch, ``new``) stay out."""
     prior, pages = stores
-    due = _df(
-        spark,
-        [(u,) for u in (
-            "https://a/1", "https://a/2", "https://a/gone", "https://a/new",
-        )],
-        "url string",
+    fetched = pages.select(F.col("page_url").alias("url"), "text").filter(
+        F.col("url").isin("https://a/1", "https://a/2", "https://a/new")
     )
-    classified = recrawl_batch(due, pages, prior)
+    classified = classify_refetch(fetched, prior)
     delta = checks_delta(classified, now_s=2_000_000.0)
     rows = {r["url"]: r["changed"] for r in delta.collect()}
     assert rows == {"https://a/1": False, "https://a/2": True}
@@ -159,16 +165,6 @@ def test_checks_delta_feeds_estimator(spark, stores):
         for r in revisit_schedule(rates).collect()
     }
     assert sched["https://a/2"] < sched["https://a/1"]
-
-
-def test_due_for_revisit_filter(spark):
-    sched = _df(
-        spark,
-        [("u1", 100.0), ("u2", 500.0)],
-        "url string, next_due_ts double",
-    ).withColumn("next_due_ts", F.timestamp_seconds("next_due_ts"))
-    due = due_for_revisit(sched, now_s=200.0)
-    assert [r["url"] for r in due.collect()] == ["u1"]
 
 
 def test_prior_never_hash_build_side(spark, stores):
@@ -208,7 +204,7 @@ def test_crawler_recrawl_round_e2e(spark, fixture_dir, tables, tmp_path_factory)
         robots=tables["robots"], hosts=tables["hosts"],
         checkpoint_dir=ckpt,
         config=CrawlConfig(
-            n_shards=8, salt_parts=4
+            n_shards=8
         ),
     )
     pages_path = os.path.join(fixture_dir, "pages.parquet")
@@ -224,7 +220,27 @@ def test_crawler_recrawl_round_e2e(spark, fixture_dir, tables, tmp_path_factory)
     assert n_fetched_urls > 0
 
     t0 = 1_800_000_000.0
+    # the pass builds its comparison prior once: exactly one SQL
+    # execution scans the committed fetched tables. The status store
+    # keeps a bounded, id-ordered window of executions, so the pass's
+    # executions are found by id, newest first, once the listener bus
+    # that fills it has drained.
+    status = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    execs = status.executionsList()
+    last_id = execs.last().executionId() if execs.size() else -1
     counts0 = c.recrawl_round(0, now_s=t0)
+    fetched_dir = os.path.join(ckpt, "round=00000", "fetched")
+    bus.waitUntilEmpty()
+    execs = status.executionsList()
+    pass_execs = []
+    for i in reversed(range(execs.size())):
+        if execs.apply(i).executionId() <= last_id:
+            break
+        pass_execs.append(execs.apply(i).physicalPlanDescription())
+    assert pass_execs
+    assert sum(fetched_dir in plan for plan in pass_execs) == 1
     assert set(counts0) == {"not_modified"}
     assert counts0["not_modified"][0] == n_fetched_urls
     assert counts0["not_modified"][1] > 0  # bytes a 304 saved
@@ -291,11 +307,7 @@ def test_crawler_recrawl_round_e2e(spark, fixture_dir, tables, tmp_path_factory)
     # is REPLAYED (the recovery path: replay overwrites the orphans)
     from metadata_crawler_spark.sources.tables import write_round_table
 
-    pass2_rows = [
-        (r["url"], r["text"])
-        for r in refreshed2.select("url", "text").collect()
-    ]
-    victim = min(u for u, _ in pass2_rows)
+    victim = min(r["url"] for r in refreshed2.select("url").collect())
     write_round_table(
         spark.createDataFrame(
             [(victim, "orphan junk body", 4)],
@@ -322,22 +334,9 @@ def test_crawler_recrawl_round_e2e(spark, fixture_dir, tables, tmp_path_factory)
     with pytest.raises(ValueError, match="skips committed history"):
         c2.recrawl_round(6, now_s=t0 + 161 * 24 * 3600.0)
 
-    # pre-r5 checkpoints wrote recrawl_refreshed WITHOUT recrawl_pass:
-    # rewrite the committed pass-2 delta in the old (url, text) schema
-    # and confirm the overlay still holds (treated as pass 0, which
-    # still supersedes the crawl text here)
-    spark.createDataFrame(
-        pass2_rows, "url string, text string"
-    ).write.mode("overwrite").parquet(
-        os.path.join(ckpt, "round=00002", "recrawl_refreshed")
-    )
-    counts5 = c2.recrawl_round(5, now_s=t0 + 320 * 24 * 3600.0)
-    assert set(counts5) == {"not_modified"}
-    assert counts5["not_modified"][0] == n_fetched_urls
-
     # re-running a pass <= last_recrawl is rejected too: it would
     # rewrite committed history with a different now_s and regress
-    # last_recrawl, demoting passes 4-5 to invisible orphans
+    # last_recrawl, demoting pass 4 to an invisible orphan
     with pytest.raises(ValueError, match="out of sequence"):
         c2.recrawl_round(3, now_s=t0 + 321 * 24 * 3600.0)
 
@@ -346,6 +345,7 @@ def _model_recrawl_pass(
     history: dict,
     stored: dict,
     live: dict,
+    deleted: set,
     now: float,
     min_i: float = 3600.0,
     max_i: float = 30 * 24 * 3600.0,
@@ -353,8 +353,9 @@ def _model_recrawl_pass(
 ):
     """Independent pure-Python model of one Crawler.recrawl_round pass:
     Cho-GM estimator + clamp schedule decide the due set from the check
-    history; due urls classify modified/not_modified against the live
-    web; modified urls update the stored overlay and every due url
+    history; due urls missing from the live web (``deleted``) are gone,
+    the rest classify modified/not_modified against it; modified urls
+    update the stored overlay and every due url that was not gone
     appends a check observation. Returns {url: status} for the pass."""
     import math
 
@@ -376,6 +377,11 @@ def _model_recrawl_pass(
         due.append(u)
     statuses = {}
     for u in due:
+        if u in deleted:
+            # no content, so no change observation and the stored text
+            # stays the comparison prior
+            statuses[u] = "gone"
+            continue
         if live[u] != stored[u]:
             statuses[u] = "modified"
             stored[u] = live[u]
@@ -390,12 +396,13 @@ def test_recrawl_rounds_match_independent_model(
     spark, fixture_dir, tables, tmp_path_factory, seed
 ):
     """Model-based check of the whole freshness state machine: random
-    per-pass page mutations + random pass spacings, engine passes vs the
+    per-pass page mutations and deletions + random pass spacings, engine passes vs the
     pure-Python simulator above — per-pass due sets, per-url statuses,
     the re-store set, and the appended check observations must all
     agree. Exercises the estimator/schedule/overlay interplay the
     deterministic e2e test can't (multi-mutation urls, urls drifting in
-    and out of the due set, refreshed-overlay supersession chains)."""
+    and out of the due set, refreshed-overlay supersession chains, gone
+    urls that come back)."""
     import os
     import random
 
@@ -410,9 +417,7 @@ def test_recrawl_rounds_match_independent_model(
             spark=spark, pages_path=pages,
             robots=tables["robots"], hosts=tables["hosts"],
             checkpoint_dir=ckpt,
-            config=CrawlConfig(
-                n_shards=8, salt_parts=4
-            ),
+            config=CrawlConfig(n_shards=8),
         )
 
     mk(pages_path).run(tables["seeds"], rounds=1)
@@ -439,46 +444,43 @@ def test_recrawl_rounds_match_independent_model(
         muts = [u for u in fetched_urls if rng.random() < 0.3]
         for u in muts:
             live[u] += 1
+        # ~8% of fetched urls are missing from this pass's snapshot
+        deleted = {u for u in fetched_urls if rng.random() < 0.08}
         mut_map = spark.createDataFrame(
             [(u, v) for u, v in live.items() if v > 0],
             "m_url string, m_ver int",
-        ) if any(live.values()) else None
+        )
         pages_k = os.path.join(mut_dir, f"pages_{k}.parquet")
-        pages_df = base_pages
-        if mut_map is not None:
-            # the crawler keys its snapshot by CANONICAL url
-            # (pages_snapshot latest_per_key on url_canon), so the
-            # mutation must land on every raw row of the canonical
-            # group the fetched url names
-            from metadata_crawler_spark.functions.urls import (
-                canonicalize_udf,
-            )
+        # the crawler keys its snapshot by CANONICAL url (pages_snapshot
+        # latest_per_key on url_canon), so a mutation or deletion must
+        # land on every raw row of the canonical group the fetched url
+        # names
+        from metadata_crawler_spark.functions.urls import canonicalize_udf
 
-            pages_df = base_pages.withColumn(
-                "_canon", canonicalize_udf("url")
-            ).join(
-                mut_map, F.col("_canon") == mut_map["m_url"], "left"
-            ).withColumn(
-                "html",
-                F.when(
-                    F.col("m_ver").isNotNull(),
-                    F.concat(
-                        "html",
-                        F.encode(
-                            F.concat(
-                                F.lit("<p>mutation v"),
-                                F.col("m_ver").cast("string"),
-                                F.lit(" of "), F.col("url"),
-                                F.lit("</p>"),
-                            ),
-                            "UTF-8",
+        base_pages.withColumn("_canon", canonicalize_udf("url")).filter(
+            ~F.col("_canon").isin(sorted(deleted))
+        ).join(
+            mut_map, F.col("_canon") == mut_map["m_url"], "left"
+        ).withColumn(
+            "html",
+            F.when(
+                F.col("m_ver").isNotNull(),
+                F.concat(
+                    "html",
+                    F.encode(
+                        F.concat(
+                            F.lit("<p>mutation v"),
+                            F.col("m_ver").cast("string"),
+                            F.lit(" of "), F.col("url"),
+                            F.lit("</p>"),
                         ),
+                        "UTF-8",
                     ),
-                ).otherwise(F.col("html")),
-            ).drop("m_url", "m_ver", "_canon")
-        pages_df.write.parquet(pages_k)
+                ),
+            ).otherwise(F.col("html")),
+        ).drop("m_url", "m_ver", "_canon").write.parquet(pages_k)
 
-        want = _model_recrawl_pass(history, stored, live, t)
+        want = _model_recrawl_pass(history, stored, live, deleted, t)
         got_counts = mk(pages_k).recrawl_round(k, now_s=t)
 
         want_counts = {}
@@ -494,7 +496,7 @@ def test_recrawl_rounds_match_independent_model(
             ).collect()
         }
         assert checks_k == {
-            (u, s == "modified") for u, s in want.items()
+            (u, s == "modified") for u, s in want.items() if s != "gone"
         }, f"seed={seed} pass={k}"
         refreshed_k = {
             r["url"]

@@ -136,7 +136,7 @@ def sim_and_engine(spark, tmp_path_factory):
         robots=spark.read.parquet(os.path.join(d, "robots.parquet")),
         hosts=spark.read.parquet(os.path.join(d, "hosts.parquet")),
         checkpoint_dir=ck,
-        config=CrawlConfig(n_shards=8, salt_parts=4),
+        config=CrawlConfig(n_shards=8),
     )
     crawler.run(spark.read.parquet(os.path.join(d, "seeds.parquet")), rounds=ROUNDS)
     return sim_seen, sim_sched, ck

@@ -18,7 +18,7 @@ from metadata_crawler_spark.operators.traps import trap_hosts_from_partials
 from metadata_crawler_spark.plans import round_loop
 from metadata_crawler_spark.plans.round_loop import CrawlConfig, Crawler
 
-CFG = CrawlConfig(n_shards=8, salt_parts=4)
+CFG = CrawlConfig(n_shards=8)
 
 
 def _mk(spark, fixture_dir, tables, ckpt) -> Crawler:
@@ -234,7 +234,7 @@ def test_max_urls_valve_and_fail_under(spark, fixture_dir, tables, tmp_path_fact
 
     ck = str(tmp_path_factory.mktemp("ckpt_valve"))
     cfg = CrawlConfig(
-        n_shards=8, salt_parts=4,
+        n_shards=8,
         max_urls_per_round=5, fail_under=10_000,
     )
     c = Crawler(
@@ -441,7 +441,7 @@ def test_bucketed_pages_fetch_join(
     )
     try:
         cfg = CrawlConfig(
-            n_shards=8, salt_parts=4,
+            n_shards=8,
             bucketed_pages_table="pages_bucketed_rl",
         )
         cb = Crawler(
@@ -491,7 +491,7 @@ def test_seen_compaction_path_bound(
 
     ckpt = str(tmp_path_factory.mktemp("ckpt_compact"))
     monkeypatch.setattr(round_loop, "SEEN_COMPACT_EVERY", 256)
-    cfg = CrawlConfig(n_shards=8, salt_parts=4)
+    cfg = CrawlConfig(n_shards=8)
     crawler = Crawler(
         spark=spark,
         pages_path=os.path.join(fixture_dir, "pages.parquet"),
@@ -540,7 +540,7 @@ def test_resume_after_compaction_equals_straight_run(
     consolidated seen + tail deltas and produce the same crawl as an
     uninterrupted run."""
     monkeypatch.setattr(round_loop, "SEEN_COMPACT_EVERY", 2)
-    cfg = CrawlConfig(n_shards=8, salt_parts=4)
+    cfg = CrawlConfig(n_shards=8)
 
     def mk(ckpt):
         return Crawler(
@@ -588,7 +588,7 @@ def test_pagerank_rescore_round(
     )
     ckpt = str(tmp_path_factory.mktemp("ckpt_pr"))
     cfg = CrawlConfig(
-        n_shards=8, salt_parts=4,
+        n_shards=8,
         pagerank_every=1,
     )
     c = Crawler(
@@ -628,7 +628,7 @@ def test_cuckoo_seen_filter_crawl_equivalence(
         checkpoint_dir=ck_b, config=CFG,
     ).run(seeds, rounds=3)
     cfg_c = CrawlConfig(
-        n_shards=8, salt_parts=4,
+        n_shards=8,
         seen_filter="cuckoo",
     )
     c1 = Crawler(
@@ -672,7 +672,7 @@ def test_adapt_budgets_crawl_and_resume(spark, fixture_dir, tables, tmp_path_fac
     (the evolved table reloads from parquet, not driver state)."""
     seeds = tables["seeds"]
     cfg = CrawlConfig(
-        n_shards=8, salt_parts=4,
+        n_shards=8,
         adapt_budgets=True,
     )
 
@@ -717,7 +717,7 @@ def test_host_sketch_cardinalities(spark, fixture_dir, tables, tmp_path_factory)
     counts within the lgk error band, without re-reading history."""
     ckpt = str(tmp_path_factory.mktemp("ckpt_sketch"))
     cfg = CrawlConfig(
-        n_shards=8, salt_parts=4,
+        n_shards=8,
         host_sketch=True,
     )
     c = Crawler(
@@ -813,7 +813,7 @@ def test_blocklist_sweep_round(
     _patch_blocklist(monkeypatch, max_flag_frac=1.5)
     ckpt = str(tmp_path_factory.mktemp("ckpt_bl_off"))
     cfg = CrawlConfig(
-        n_shards=8, salt_parts=4,
+        n_shards=8,
         blocklist_every=1,
     )
     c = Crawler(
@@ -830,7 +830,7 @@ def test_blocklist_sweep_round(
     _patch_blocklist(monkeypatch, min_docs=1, max_flag_frac=0.0)
     ckpt2 = str(tmp_path_factory.mktemp("ckpt_bl_on"))
     cfg2 = CrawlConfig(
-        n_shards=8, salt_parts=4,
+        n_shards=8,
         blocklist_every=1,
     )
     c2 = Crawler(
@@ -860,7 +860,7 @@ def test_blocklist_partials_resume_equals_straight_run(
     totals to a straight run — the additive-counts contract."""
     _patch_blocklist(monkeypatch, min_docs=1, max_flag_frac=0.0)
     cfg = lambda: CrawlConfig(
-        n_shards=8, salt_parts=4,
+        n_shards=8,
         blocklist_every=1,
     )
     seeds = tables["seeds"]
@@ -917,7 +917,7 @@ def test_blocklist_standing_gate_between_sweeps(
         )
         cadence = {"trap_every": 2}
     ckpt = str(tmp_path_factory.mktemp(f"ckpt_{cut}_gate"))
-    cfg = CrawlConfig(n_shards=8, salt_parts=4, **cadence)
+    cfg = CrawlConfig(n_shards=8, **cadence)
     c = Crawler(
         spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
         robots=tables["robots"], hosts=tables["hosts"],
@@ -973,7 +973,7 @@ def test_resume_refuses_foreign_hash_version(crawl, spark, fixture_dir, tables, 
 #: every config-gated table on: budgets, sketches, and all three sweeps
 #: (due in rounds 0 and 2, a standing gate in round 1)
 GATED_CFG = CrawlConfig(
-    n_shards=8, salt_parts=4, adapt_budgets=True, host_sketch=True,
+    n_shards=8, adapt_budgets=True, host_sketch=True,
     blocklist_every=2, trap_every=2, pagerank_every=2,
 )
 REQUIRED = {"scheduled", "bloom", "fetched", "metrics", "frontier_next"}
@@ -1131,7 +1131,7 @@ def test_unrecorded_optional_tables_refuse_to_resolve(
         )
 
     with pytest.raises(ValueError, match="round 0's manifest entry"):
-        mk(CrawlConfig(n_shards=8, salt_parts=4, blocklist_every=2)).run(
+        mk(CrawlConfig(n_shards=8, blocklist_every=2)).run(
             tables["seeds"], rounds=4
         )
     assert [r["round"] for r in mk(CFG).run(tables["seeds"], rounds=4)] == [3]

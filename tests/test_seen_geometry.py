@@ -25,7 +25,7 @@ def _crawler(spark, fixture_dir, tables, ckpt, **cfg) -> Crawler:
         robots=tables["robots"],
         hosts=tables["hosts"],
         checkpoint_dir=ckpt,
-        config=CrawlConfig(salt_parts=4, **cfg),
+        config=CrawlConfig(**cfg),
     )
 
 

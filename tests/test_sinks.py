@@ -29,7 +29,7 @@ def crawled(spark, fixture_dir, tables, tmp_path_factory):
         robots=tables["robots"],
         hosts=tables["hosts"],
         checkpoint_dir=ck,
-        config=CrawlConfig(n_shards=8, salt_parts=4),
+        config=CrawlConfig(n_shards=8),
     )
     c.run(tables["seeds"], rounds=2)
     return ck
@@ -50,6 +50,38 @@ def test_index_catalogue(spark, crawled, tmp_path):
     assert len(langs) >= 2
     # descriptor schema matches what reads back
     assert json.loads(json.dumps(desc["schema"]))["type"] == "struct"
+
+
+def test_index_catalogue_counts_ride_the_writes(
+    spark, crawled, tmp_path, monkeypatch
+):
+    """The descriptor's counts are the rows the two index writes wrote,
+    observed on those writes: no job runs after the second write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    group = "index_catalogue_jobs"
+    after_write: list[set] = []
+    save = DataFrameWriter.save
+
+    def tracked_save(self, *args, **kwargs):
+        save(self, *args, **kwargs)
+        after_write.append(set(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(DataFrameWriter, "save", tracked_save)
+    out = str(tmp_path / "index_out")
+    sc.setJobGroup(group, "index_catalogue")
+    try:
+        desc = index_catalogue(spark, crawled, 1, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(after_write) == 2
+    assert set(sc.statusTracker().getJobIdsForGroup(group)) == after_write[-1]
+    monkeypatch.undo()
+    assert desc["counts"] == {
+        name: spark.read.parquet(os.path.join(out, name)).count()
+        for name in ("files", "latest")
+    }
 
 
 def test_latest_vs_files_semantics(spark, crawled):

@@ -271,7 +271,7 @@ def test_sitemap_seeds_drive_a_crawl_round(spark, fixture_dir, tables,
         robots=tables["robots"],
         hosts=tables["hosts"],
         checkpoint_dir=str(tmp_path_factory.mktemp("ckpt_sm")),
-        config=CrawlConfig(n_shards=8, salt_parts=4),
+        config=CrawlConfig(n_shards=8),
     )
     results = c.run(seeds, rounds=1)
     assert results[0]["scheduled"] > 0

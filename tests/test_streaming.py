@@ -191,7 +191,7 @@ def test_stream_rounds_schedule_like_crawler(spark, fixture_dir, tables, tmp_pat
         spark=spark, pages_path=os.path.join(fixture_dir, "pages.parquet"),
         robots=tables["robots"], hosts=tables["hosts"],
         checkpoint_dir=crawl_ck,
-        config=CrawlConfig(n_shards=8, salt_parts=4),
+        config=CrawlConfig(n_shards=8),
     ).run(tables["seeds"], rounds=1)
     want = sorted(spark.read.parquet(
         os.path.join(crawl_ck, "round=00000", "scheduled")
@@ -210,7 +210,7 @@ def test_stream_rounds_schedule_like_crawler(spark, fixture_dir, tables, tmp_pat
         out = str(tmp_path / f"{name}_out")
         q = start(
             spark, src, tables["robots"], tables["hosts"], out,
-            str(tmp_path / f"{name}_ck"), name, salt_parts=8,
+            str(tmp_path / f"{name}_ck"), name, salt_parts=4,
         )
         try:
             q.processAllAvailable()

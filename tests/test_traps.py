@@ -165,7 +165,7 @@ def test_trap_sweep_in_crawl_loop(
             partial(trap_hosts_from_partials, **thresholds),
         )
 
-    common = dict(n_shards=8, salt_parts=4)
+    common = dict(n_shards=8)
     bars(min_urls=10**9)
     ckpt = str(tmp_path_factory.mktemp("ckpt_trap_off"))
     c = Crawler(
