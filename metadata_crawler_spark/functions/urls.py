@@ -17,7 +17,11 @@ Three tiers, fastest first:
 2. ``canonicalize_udf``    — Arrow-batched pandas UDF: vectorized fast-path
    detection (regex mask over the whole batch); only the messy minority
    (%-escapes, dot-segments, mixed case, ports) falls through to the
-   pure-Python reference canonicalizer.
+   pure-Python reference canonicalizer. Its batch body ``_canon_batch``
+   also canonicalizes a crawl round's outlinks inside the fetch batch
+   that extracts them (plans/round_loop._fetch_batches), so outlinks
+   never pass through ``with_canonical``: the split-union serves seed
+   frontiers and PageRank edges.
 3. ``canon_url_py``        — the pure-Python reference implementation
    (single URL). Source of truth for tests and fixture generation.
 """
@@ -173,11 +177,12 @@ def with_canonical(df: DataFrame, url_col: str = "url",
     (%-escapes, dot segments, ports, uppercase, userinfo, NULLs) pays the
     Arrow transfer + pandas UDF.
 
-    This is the throughput-critical operator of the whole engine (the
-    north metric starts with canonicalize); the split typically removes
-    ~90% of Python work. Row ORDER is not preserved across the union —
-    every caller aggregates or joins downstream, and crawl ordering is a
-    pure function of the data, never of row order (SURVEY §7a).
+    Seed frontiers and PageRank link edges go through it (a crawl
+    round's outlinks are canonicalized in their fetch batch instead);
+    the split typically removes ~90% of Python work. Row ORDER is not
+    preserved across the union — every caller aggregates or joins
+    downstream, and crawl ordering is a pure function of the data,
+    never of row order (SURVEY §7a).
     """
     out_col = out_col or url_col
     u = F.col(url_col)

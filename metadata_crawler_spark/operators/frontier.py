@@ -243,6 +243,27 @@ def small_enough_to_broadcast(
     return df.limit(max_rows + 1).count() <= max_rows
 
 
+def small_by_estimate(
+    df: DataFrame, max_rows: int = ROBOTS_BROADCAST_MAX_ROWS
+) -> bool:
+    """The same switch from the optimizer's row estimate, read from the
+    plan's statistics on the driver (no job): the row count where the
+    plan knows it (catalog statistics), else its size estimate over the
+    plan's default row width (8 bytes of row overhead plus each column's
+    default size, Spark's own estimation rule). A plan that carries no
+    estimate (an RDD-backed frame reads as spark.sql.defaultSizeInBytes)
+    takes :func:`small_enough_to_broadcast`'s bounded probe."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    rows = stats.rowCount()
+    if rows.isDefined():
+        return int(str(rows.get())) <= max_rows
+    size = int(str(stats.sizeInBytes()))
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if size >= conf.defaultSizeInBytes():
+        return small_enough_to_broadcast(df, max_rows)
+    return size <= max_rows * (8 + df._jdf.schema().defaultSize())
+
+
 def gate_frontier(
     frontier: DataFrame,
     hosts: DataFrame,

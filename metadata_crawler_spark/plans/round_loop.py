@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from ..functions.quality import gopher_quality_flags
 from ..functions.text import _decode, _extract_text_batch, _HREF_RE, _META_LANG_RE
 from ..functions.urls import (
+    _canon_batch,
     blocked_hosts_from_counts,
     canonicalize_udf,
     filter_blocked_hosts,
@@ -71,12 +72,13 @@ from ..functions.urls import (
 # module (schedule_eligible composes them); they stay module attributes
 # because perfbench/spans.py wraps them by name on this module.
 from ..operators.frontier import (  # noqa: F401
+    ROBOTS_BROADCAST_MAX_ROWS,
     expand_outlinks,
     gate_frontier,
     per_host_topk,
     rescore_frontier,
     schedule_eligible,
-    small_enough_to_broadcast,
+    small_by_estimate,
     valid_urls,
     with_politeness_schedule,
 )
@@ -97,6 +99,7 @@ from ..sources.tables import (
     committed_rounds,
     read_rounds,
     table_path,
+    table_schema,
     write_round_table,
 )
 
@@ -285,12 +288,15 @@ FETCH_SCHEMA = (
     "crawl_delay_ms long, fetch_offset_ms long, url_hash_hi long, "
     "url_hash_lo long, fetched boolean, warc_ts timestamp_ntz, "
     "text string, lang string, links array<string>, planned_ms long, "
-    "batch_id long"
+    "batch_id long, links_canon array<string>"
 )
 
-#: hoisted once (VERDICT r2): fromDDL parses per call — not per round
+#: the committed fetched table's columns: FETCH_SCHEMA less the in-round
+#: ``links_canon`` (the table keeps the raw links). Hoisted once
+#: (VERDICT r2): fromDDL parses per call — not per round
 _FETCH_COLS: tuple[str, ...] = tuple(
-    f.split(" ")[0] for f in FETCH_SCHEMA.split(", ")
+    c for c in (f.split(" ")[0] for f in FETCH_SCHEMA.split(", "))
+    if c != "links_canon"
 )
 
 
@@ -300,7 +306,13 @@ def _fetch_batches(it):
     offsets rank*crawl_delay; no sleeping, the offset schedule and the
     per-batch planned wall (max offset) are emitted as metrics. Extraction
     is the same vectorized pandas pipeline the UDF tier uses, so ``text``
-    stays byte-identical per url."""
+    stays byte-identical per url.
+
+    Outlinks are canonicalized here, where they are extracted (the
+    reference names a discovered object in the worker that lists it):
+    ``links_canon[i]`` is ``canon_url_py(links[i])``, each distinct href
+    of the batch canonicalized once by ``canonicalize_udf``'s batch body,
+    so the next-frontier chain runs no Python stage of its own."""
     from pyspark import TaskContext
 
     # the FETCH-time batch identity, stamped into the rows: the metrics
@@ -320,7 +332,12 @@ def _fetch_batches(it):
         html = pdf["html"].where(has_html, b"")
         text = _extract_text_batch(html)
         dec = _decode(html)
-        links = dec.str.findall(_HREF_RE)
+        links = dec.str.findall(_HREF_RE).where(has_html, None)
+        hrefs = links.explode().dropna().drop_duplicates()
+        canon = dict(zip(hrefs, _canon_batch(hrefs)))
+        links_canon = links.map(
+            lambda hs: [canon[h] for h in hs], na_action="ignore"
+        )
         lang = dec.str.extract(_META_LANG_RE, expand=False).fillna("unknown").str.lower()
         planned = (
             pdf.groupby("host")["fetch_offset_ms"].transform("max").astype("int64")
@@ -329,9 +346,10 @@ def _fetch_batches(it):
             fetched=has_html,
             text=text.where(has_html, None),
             lang=lang.where(has_html, None),
-            links=links.where(has_html, None),
+            links=links,
             planned_ms=planned,
             batch_id=batch_id,
+            links_canon=links_canon,
         )
         yield out
 
@@ -379,6 +397,31 @@ def _combine_frontier(df: DataFrame) -> DataFrame:
     )
 
 
+def _outlink_children(hits: DataFrame) -> DataFrame:
+    """A round's discoveries from its fetched pages (``_fetch_batches``
+    rows): OPIC-split outlinks -> schedulable canonical urls -> 128-bit
+    key, one row per distinct raw url, ready for ``_combine_frontier``.
+    Each outlink is a (raw, canonical) pair: ``_fetch_batches``
+    canonicalized it where it was extracted, so this chain runs no
+    Python stage.
+
+    The pre-combine on the RAW url (partial agg absorbs duplicate links
+    map-side; the canonical url rides along, a function of the raw one)
+    fixes how scores are summed: per raw url first, then the hash-keyed
+    combine sums those sums across raw variants of one canonical url.
+    Merging the two into one combine regroups the float sums and moves
+    committed scores at the SCORE_DECIMALS digit."""
+    children = expand_outlinks(
+        hits.withColumn("links", F.arrays_zip("links", "links_canon")),
+        "links", "score", "depth",
+    ).groupBy(
+        F.col("url.links").alias("raw"), F.col("url.links_canon").alias("url")
+    ).agg(F.min("depth").alias("depth"), F.sum("score").alias("score"))
+    return with_url_hash(valid_urls(children)).select(
+        "url", "depth", "score", "url_hash_hi", "url_hash_lo"
+    )
+
+
 def frontier_delta(df: DataFrame) -> DataFrame:
     """The frontier prelude every scheduling entry point shares: raw
     ``(url, depth, score)`` discoveries -> canonical url -> schedulable
@@ -404,22 +447,20 @@ class Crawler:
         self._hosts_broadcast: bool | None = None
 
     def robots_broadcast(self) -> bool:
-        """Size-based robots join switch, decided once per Crawler: a
-        bounded limit-probe (scans at most MAX+1 rows) — broadcast small
-        rules tables, shuffle-join the 10^8-host ones."""
+        """Size-based robots join switch, decided once per Crawler from
+        the optimizer's row estimate on the driver (``small_by_estimate``:
+        no job for a table scan) — broadcast small rules tables,
+        shuffle-join the 10^8-host ones."""
         if self._robots_broadcast is None:
-            self._robots_broadcast = small_enough_to_broadcast(
-                self.robots.select("host")
-            )
+            self._robots_broadcast = small_by_estimate(self.robots)
         return self._robots_broadcast
 
     def hosts_broadcast(self) -> bool:
-        """Same switch for the hosts budget table — at 10^8 hosts it has
-        the same cardinality as robots (ADVICE r2)."""
+        """Same switch, from the same estimate, for the hosts budget
+        table — at 10^8 hosts it has the same cardinality as robots
+        (ADVICE r2)."""
         if self._hosts_broadcast is None:
-            self._hosts_broadcast = small_enough_to_broadcast(
-                self.hosts.select("host")
-            )
+            self._hosts_broadcast = small_by_estimate(self.hosts)
         return self._hosts_broadcast
 
     def bloom_broadcast(self, geometry: dict) -> bool:
@@ -486,16 +527,22 @@ class Crawler:
         truth for the compact/lo logic, so the tested
         O(SEEN_COMPACT_EVERY) path bound and the real read can't drift.
         The consolidated table and the scheduled deltas have different
-        schemas, so each group is read separately and unioned on the
-        two hash columns (parquet column pruning keeps the delta read
-        2-column either way)."""
+        schemas, so each group is read separately, with its recorded
+        schema, and unioned on the two hash columns (parquet column
+        pruning keeps the delta read 2-column either way)."""
+        if state is None:
+            state = self.log.read() or {}
         paths = self.seen_input_paths(upto, state)
         deltas = [p for p in paths if not p.endswith("seen_compact")]
-        parts = [self.spark.read.parquet(p) for p in paths if p not in deltas]
+        parts = [
+            self.spark.read.schema(table_schema(state, "seen_compact"))
+            .parquet(p)
+            for p in paths if p not in deltas
+        ]
         if deltas:
             parts.append(
-                self.spark.read.parquet(*deltas)
-                .select("url_hash_hi", "url_hash_lo")
+                self.spark.read.schema(table_schema(state, "scheduled"))
+                .parquet(*deltas).select("url_hash_hi", "url_hash_lo")
             )
         return reduce(lambda a, b: a.unionByName(b), parts)
 
@@ -510,7 +557,7 @@ class Crawler:
             return state
         write_round_table(
             self._read_seen(round_no, state).distinct(), self.checkpoint_dir,
-            round_no, "seen_compact",
+            round_no, "seen_compact", state,
         )
         state["seen_compacted_upto"] = round_no
         return state
@@ -518,15 +565,18 @@ class Crawler:
     def _load_state(self, upto: int, state: dict):
         """Round ``upto + 1``'s committed inputs: the seen set through
         ``upto``, round ``upto``'s seen filter and its ``frontier_next``.
-        Every committed round writes all three, so they are read by name:
-        a missing table fails here (Spark's PATH_NOT_FOUND names it)."""
+        Every committed round writes all three, so they are read by name,
+        with their recorded schemas (no job while planning): a missing
+        table fails here (Spark's PATH_NOT_FOUND names it)."""
         # the seen set IS the union of scheduled sets (attempted = seen):
         # no separate seen_delta table — parquet column pruning makes this
         # a 2-column read, and compaction bounds it to O(k) paths
         seen = self._read_seen(upto, state)
-        root = self.checkpoint_dir
-        bloom = self.spark.read.parquet(table_path(root, upto, "bloom"))
-        frontier = self.spark.read.parquet(table_path(root, upto, "frontier_next"))
+        bloom, frontier = (
+            self.spark.read.schema(table_schema(state, name))
+            .parquet(table_path(self.checkpoint_dir, upto, name))
+            for name in ("bloom", "frontier_next")
+        )
         return seen, bloom, frontier
 
     def _hosts_for_round(self, round_no: int, state: dict) -> DataFrame:
@@ -539,6 +589,7 @@ class Crawler:
         evolved = read_rounds(
             self.spark, self.checkpoint_dir, "hosts",
             committed_rounds(state, "hosts", round_no - 1, round_no - 1),
+            state,
         )
         return self.hosts if evolved is None else evolved
 
@@ -554,7 +605,8 @@ class Crawler:
         not read, and a round without one would under-count."""
         from ..operators.sketches import hll_estimates, hll_merge
 
-        rounds = committed_rounds(self.log.read() or {}, "host_sketch", upto)
+        state = self.log.read() or {}
+        rounds = committed_rounds(state, "host_sketch", upto)
         unsketched = sorted(set(range(max(upto, 0) + 1)) - set(rounds))
         if unsketched:
             raise ValueError(
@@ -562,7 +614,7 @@ class Crawler:
                 "(enable CrawlConfig.host_sketch): counts would under-count"
             )
         sketches = read_rounds(
-            self.spark, self.checkpoint_dir, "host_sketch", rounds
+            self.spark, self.checkpoint_dir, "host_sketch", rounds, state
         )
         return hll_estimates(hll_merge(sketches, ["host"]), ["host"])
 
@@ -721,7 +773,7 @@ class Crawler:
                     bloom, round_keys, geo["n_shards"], geo["per_shard"]
                 )
             write_round_table(
-                new_filter, self.checkpoint_dir, round_no, "bloom"
+                new_filter, self.checkpoint_dir, round_no, "bloom", state
             )
 
         def _write_host_sketch():
@@ -738,7 +790,7 @@ class Crawler:
 
             write_round_table(
                 hll_sketches(scheduled, ["host"], "url"),
-                self.checkpoint_dir, round_no, "host_sketch",
+                self.checkpoint_dir, round_no, "host_sketch", state,
             )
 
         # the config-gated tables this round commits, recorded in its
@@ -752,7 +804,7 @@ class Crawler:
             barrier = [
                 pool.submit(
                     write_round_table, scheduled, self.checkpoint_dir,
-                    round_no, "scheduled",
+                    round_no, "scheduled", state,
                 ),
                 pool.submit(_evolve_filter),
             ]
@@ -813,7 +865,7 @@ class Crawler:
             # whichever job reaches a partition first.
             def _write_fetched() -> int:
                 write_round_table(
-                    fetched, self.checkpoint_dir, round_no, "fetched"
+                    fetched, self.checkpoint_dir, round_no, "fetched", state
                 )
                 return int(obs_fetch.get["n_fetched"] or 0)
 
@@ -835,7 +887,7 @@ class Crawler:
                 barrier.append(pool.submit(
                     write_round_table,
                     update_host_budgets(hosts_cur, fetched_rows),
-                    self.checkpoint_dir, round_no, "hosts",
+                    self.checkpoint_dir, round_no, "hosts", state,
                 ))
                 optional.append("hosts")
 
@@ -860,7 +912,7 @@ class Crawler:
             )
             barrier.append(pool.submit(
                 write_round_table, metrics, self.checkpoint_dir, round_no,
-                "metrics",
+                "metrics", state,
             ))
 
             # next frontier: over-budget carryover (eligible but not
@@ -887,25 +939,7 @@ class Crawler:
             # children come from the PERSISTED hits: rows with
             # fetched=true are exactly the hits slice (misses are all
             # false), so this reads the cache instead of the parquet
-            children = expand_outlinks(
-                fetched_hits.filter(F.col("fetched")), "links", "score", "depth"
-            )
-            # r6 (guide §2.3 "aggregate before you shuffle", applied to
-            # CPU): popular pages are linked many times per round, so the
-            # exploded edge list carries far more rows than distinct
-            # targets. Pre-combine on the RAW url first (partial agg
-            # absorbs duplicates map-side) so canonicalize + the 128-bit
-            # hash run once per distinct raw url, not once per link; the
-            # hash-keyed combine below still merges raw variants that
-            # canonicalize to the same url. Score addition regroups
-            # (sum-of-sums), which stays inside the documented round-to-
-            # SCORE_DECIMALS float tolerance.
-            children = children.groupBy("url").agg(
-                F.min("depth").alias("depth"), F.sum("score").alias("score")
-            )
-            children = with_url_hash(
-                valid_urls(with_canonical(children, "url"))
-            ).select("url", "depth", "score", "url_hash_hi", "url_hash_lo")
+            children = _outlink_children(fetched_hits.filter(F.col("fetched")))
             nxt = _combine_frontier(carryover.unionByName(children))
             # periodic global re-prioritization + host-level cuts.
             # r6 (guide §2.6): the due cuts' MININGS are independent
@@ -922,7 +956,7 @@ class Crawler:
             for n in mined:
                 optional += [*_HOST_CUTS[n][0], n]
             if due["pagerank"]:
-                nxt = self._pagerank_rescore(nxt, round_no)
+                nxt = self._pagerank_rescore(nxt, round_no, state)
             for n in _HOST_CUTS:
                 if n in mined:
                     nxt = self._apply_cut(nxt, mined[n].result())
@@ -936,11 +970,13 @@ class Crawler:
                     newest = committed_rounds(state, n, round_no - 1)[-1:]
                     if newest:
                         nxt = self._apply_cut(nxt, read_rounds(
-                            self.spark, self.checkpoint_dir, n, newest
+                            self.spark, self.checkpoint_dir, n, newest, state
                         ))
             obs_next = Observation(f"next_{round_no}")
             nxt = nxt.observe(obs_next, F.count(F.lit(1)).alias("n"))
-            write_round_table(nxt, self.checkpoint_dir, round_no, "frontier_next")
+            write_round_table(
+                nxt, self.checkpoint_dir, round_no, "frontier_next", state
+            )
             frontier_next_n = int(obs_next.get["n"])
             t_next = time.time()
 
@@ -996,13 +1032,15 @@ class Crawler:
         self.log.commit(state)
         return counts
 
-    def _pagerank_rescore(self, frontier: DataFrame, upto: int) -> DataFrame:
+    def _pagerank_rescore(
+        self, frontier: DataFrame, upto: int, state: dict
+    ) -> DataFrame:
         """PageRank sweep over the accumulated link graph (edges = each
         committed fetch's url -> canonicalized outlinks) applied to the
         next frontier's scores. Rounding to SCORE_DECIMALS keeps the
         combined ordering data-deterministic, same as OPIC scores."""
         fetched_all = read_rounds(
-            self.spark, self.checkpoint_dir, "fetched", range(upto + 1)
+            self.spark, self.checkpoint_dir, "fetched", range(upto + 1), state
         )
         edges = (
             fetched_all.filter(F.col("fetched") & (F.size("links") > 0))
@@ -1041,22 +1079,24 @@ class Crawler:
         tables, partials, verdict = _HOST_CUTS[name]
         span = read_rounds(
             self.spark, self.checkpoint_dir, "fetched",
-            range(max(upto - every + 1, 0), upto + 1),
+            range(max(upto - every + 1, 0), upto + 1), state,
         )
         ok = span.filter(F.col("fetched") & F.col("text").isNotNull())
         for table, partial in zip(tables, partials(ok)):
-            write_round_table(partial, self.checkpoint_dir, upto, table)
+            write_round_table(partial, self.checkpoint_dir, upto, table, state)
         totals = [
             read_rounds(
                 self.spark, self.checkpoint_dir, t,
-                committed_rounds(state, t, upto - 1) + [upto],
+                committed_rounds(state, t, upto - 1) + [upto], state,
             )
             for t in tables
         ]
-        path = write_round_table(
-            verdict(*totals), self.checkpoint_dir, upto, name
+        write_round_table(
+            verdict(*totals), self.checkpoint_dir, upto, name, state
         )
-        return self.spark.read.parquet(path)
+        return read_rounds(
+            self.spark, self.checkpoint_dir, name, [upto], state
+        )
 
     def recrawl_round(self, recrawl_no: int, now_s: float) -> dict:
         """One freshness pass over the committed crawl — the subsystem the
@@ -1086,8 +1126,9 @@ class Crawler:
         schedule (``revisit_schedule`` at its default clamp, built from
         PRIOR passes' committed ``recrawl_checks``) says next_due >
         ``now_s`` — pass 0 revisits everything once, then unchanged urls
-        drift to the slow lane. The due set is checkpointed once and
-        size-probed for the fetch join. Its hits re-fetch from the pages
+        drift to the slow lane. The due set is checkpointed once; its size,
+        observed on that checkpoint's job, gates its broadcast into the
+        fetch join. Its hits re-fetch from the pages
         snapshot through the SAME byte-identical extraction as the crawl
         (applied to the bounded hits, never the full snapshot), so an
         unchanged page hashes equal to its stored text; one left join
@@ -1102,19 +1143,21 @@ class Crawler:
           contract: replay rewrites the identical table),
         - ``recrawl_refreshed`` — modified urls' re-extracted text (the
           store delta; not_modified bodies are never re-stored),
-        - ``recrawl_report`` — per-status counts + bytes_saved.
+        - ``recrawl_report`` — per-status counts + bytes_saved, observed
+          on the checks write and written from the driver's values.
 
         Passes are strictly sequential (``recrawl_no`` must be the
         manifest's ``last_recrawl + 1``). ``now_s`` is explicit —
         determinism and replay over wall clocks. Returns
         {status: (n_urls, bytes_saved)}.
         """
+        from pyspark.sql import Observation
+
         from ..functions.text import extract_text_udf
         from ..operators.changes import (
             checks_delta,
             estimate_change_rate,
             revalidate,
-            revalidation_stats,
             revisit_schedule,
             stored_bytes,
         )
@@ -1123,6 +1166,7 @@ class Crawler:
         fetched_all = read_rounds(
             self.spark, self.checkpoint_dir, "fetched",
             committed_rounds(state, "fetched", state.get("last_round", -1)),
+            state,
         )
         if fetched_all is None:
             raise ValueError(
@@ -1161,7 +1205,7 @@ class Crawler:
         )
         refreshed = read_rounds(
             self.spark, self.checkpoint_dir, "recrawl_refreshed",
-            committed_rounds(state, "recrawl_refreshed", last_rc),
+            committed_rounds(state, "recrawl_refreshed", last_rc), state,
         )
         if refreshed is not None:
             stored = stored.unionByName(versions(
@@ -1173,16 +1217,22 @@ class Crawler:
         ).drop("_version")
         checks = read_rounds(
             self.spark, self.checkpoint_dir, "recrawl_checks",
-            committed_rounds(state, "recrawl_checks", last_rc),
+            committed_rounds(state, "recrawl_checks", last_rc), state,
         )
         if checks is not None:
             not_due = revisit_schedule(estimate_change_rate(checks)).filter(
                 F.col("next_due_ts").cast("double") > float(now_s)
             ).select("url")
             due = due.join(not_due, "url", "left_anti")
-        due = due.localCheckpoint(eager=False)
+        # the due-set size rides the checkpoint's own job (not
+        # operators.common.checkpoint_observed: the corpus stages own
+        # that name)
+        obs_due = Observation(f"recrawl_due_{recrawl_no}")
+        due = due.observe(obs_due, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
         due_urls = due.select(F.col("url").alias("_due_url"))
-        if small_enough_to_broadcast(due):
+        if obs_due.get["n"] <= ROBOTS_BROADCAST_MAX_ROWS:
             due_urls = F.broadcast(due_urls)
         # inner join streams the big pages side; the due set is the build
         pages = self.pages_snapshot()
@@ -1201,9 +1251,22 @@ class Crawler:
                         F.col("_pbytes")),
             "content",
         ).localCheckpoint(eager=False)
+        # the per-status report (operators.changes.revalidation_stats'
+        # rows, over revalidate's three statuses) rides the checks write,
+        # observed BELOW its `changed IS NOT NULL` filter so gone urls
+        # count
+        statuses = ("gone", "modified", "not_modified")
+        obs_report = Observation(f"recrawl_report_{recrawl_no}")
+        observed = out.observe(obs_report, *(
+            m for s in statuses for m in (
+                F.count(F.when(F.col("status") == s, 1)).alias(f"{s}_n"),
+                F.sum(F.when(F.col("status") == s, F.col("bytes_saved")))
+                .alias(f"{s}_bytes"),
+            )
+        ))
         write_round_table(
-            checks_delta(out, now_s), self.checkpoint_dir, recrawl_no,
-            "recrawl_checks",
+            checks_delta(observed, now_s), self.checkpoint_dir, recrawl_no,
+            "recrawl_checks", state,
         )
         write_round_table(
             out.filter(F.col("store_row")).select(
@@ -1211,16 +1274,28 @@ class Crawler:
                 F.col("content").alias("text"),
                 F.lit(int(recrawl_no)).cast("int").alias("recrawl_pass"),
             ),
-            self.checkpoint_dir, recrawl_no, "recrawl_refreshed",
+            self.checkpoint_dir, recrawl_no, "recrawl_refreshed", state,
         )
-        path = write_round_table(
-            revalidation_stats(out), self.checkpoint_dir, recrawl_no,
-            "recrawl_report",
-        )
+        got = obs_report.get
         counts = {
-            r["status"]: (r["n_urls"], r["bytes_saved"])
-            for r in self.spark.read.parquet(path).collect()
+            s: (got[f"{s}_n"], got[f"{s}_bytes"])
+            for s in statuses if got[f"{s}_n"]
         }
+        # written from the driver's values through a JVM-only literal
+        # frame: no job beyond the write, no Python worker
+        report = self.spark.range(1).select(F.inline(F.array(*(
+            F.struct(
+                F.lit(s).alias("status"),
+                F.lit(n).cast("long").alias("n_urls"),
+                F.lit(b).cast("long").alias("bytes_saved"),
+            )
+            for s, (n, b) in counts.items()
+        )).cast(
+            "array<struct<status:string,n_urls:bigint,bytes_saved:bigint>>"
+        )))
+        write_round_table(
+            report, self.checkpoint_dir, recrawl_no, "recrawl_report", state
+        )
         # committed from the manifest read at the start of the pass: a
         # pass is the only writer of its checkpoint's recrawl state
         state.pop("committed_at", None)

@@ -37,7 +37,7 @@ def read_catalogue(
     state = ManifestLog(checkpoint_dir).read() or {}
     df = read_rounds(
         spark, checkpoint_dir, "fetched",
-        committed_rounds(state, "fetched", upto_round),
+        committed_rounds(state, "fetched", upto_round), state,
     )
     if df is None:
         raise FileNotFoundError(f"no committed rounds under {checkpoint_dir}")

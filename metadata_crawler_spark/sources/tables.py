@@ -15,7 +15,9 @@ round is invisible, an idempotent re-run overwrites the same paths
 (SURVEY §7 hard part d). Like an Iceberg snapshot, the manifest also
 lists WHICH tables are committed (:func:`committed_rounds`): storage is
 never probed, so orphan tables stay invisible and a lost committed table
-fails its read.
+fails its read. It also records each table's schema
+(:func:`table_schema`), so a read never infers one from parquet footers
+(a Spark job per read).
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ManifestLog:
@@ -129,25 +132,51 @@ def committed_rounds(
     return named
 
 
-def write_round_table(df: DataFrame, root: str, round_no: int, name: str) -> str:
-    """Round-scoped parquet write (overwrite => replay-idempotent)."""
+def write_round_table(
+    df: DataFrame, root: str, round_no: int, name: str,
+    state: dict[str, Any] | None = None,
+) -> str:
+    """Round-scoped parquet write (overwrite => replay-idempotent). The
+    written schema is recorded in the manifest ``state`` the write is
+    committed by, once per table name (from ``df.schema`` on the
+    driver: no job); None for a write no manifest will name."""
     path = table_path(root, round_no, name)
+    if state is not None:
+        state.setdefault("schemas", {})[name] = df.schema.jsonValue()
     df.write.mode("overwrite").parquet(path)
     return path
 
 
+def table_schema(state: dict[str, Any], name: str) -> StructType:
+    """The schema the manifest ``state`` records for table ``name``, as
+    its newest write recorded it. One record per name serves a read of
+    several rounds: every round of a checkpoint is written by one engine
+    version (old checkpoints do not outlive an engine change), and the
+    seen filter, whose schema follows its tier, is only read at its
+    newest round. A table without a record raises ValueError: there is
+    no inference fallback."""
+    recorded = state.get("schemas", {}).get(name)
+    if recorded is None:
+        raise ValueError(
+            f"the manifest records no schema for table {name!r} "
+            "(written before schemas were recorded, or not by the engine)"
+        )
+    return StructType.fromJson(recorded)
+
+
 def read_rounds(
-    spark: SparkSession, root: str, name: str, rounds: Sequence[int]
+    spark: SparkSession, root: str, name: str, rounds: Sequence[int],
+    state: dict[str, Any],
 ) -> DataFrame | None:
     """Union of table ``name``'s deltas for exactly ``rounds`` (from
     :func:`committed_rounds`), None for no rounds; a missing one fails
-    the read (Spark's PATH_NOT_FOUND names it). Spark infers the
-    union's schema from one footer: every round of a checkpoint is
-    written by one engine version (old checkpoints do not outlive an
-    engine change)."""
+    the read (Spark's PATH_NOT_FOUND names it). Read with the schema the
+    manifest ``state`` records (:func:`table_schema`): no footer job."""
     if not rounds:
         return None
-    return spark.read.parquet(*(table_path(root, r, name) for r in rounds))
+    return spark.read.schema(table_schema(state, name)).parquet(
+        *(table_path(root, r, name) for r in rounds)
+    )
 
 
 def write_bucketed(

@@ -30,9 +30,14 @@ SCHEMA = (
 @pytest.fixture(scope="module")
 def fetched_rounds(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("crawlrep"))
-    write_round_table(spark.createDataFrame(ROWS_R0, SCHEMA), root, 0, "fetched")
-    write_round_table(spark.createDataFrame(ROWS_R1, SCHEMA), root, 1, "fetched")
-    return read_rounds(spark, root, "fetched", [0, 1])
+    state: dict = {}
+    write_round_table(
+        spark.createDataFrame(ROWS_R0, SCHEMA), root, 0, "fetched", state
+    )
+    write_round_table(
+        spark.createDataFrame(ROWS_R1, SCHEMA), root, 1, "fetched", state
+    )
+    return read_rounds(spark, root, "fetched", [0, 1], state)
 
 
 def test_crawl_report_hand_counted(fetched_rounds):

@@ -158,6 +158,7 @@ def test_push_catalogue_dual_index(spark, tmp_path):
     )
 
     ck = str(tmp_path / "ck")
+    state = {"last_round": 1}
     for rnd in (0, 1):
         df = spark.range(40).selectExpr(
             "concat('https://c.com/', id % 20) AS url",
@@ -165,8 +166,8 @@ def test_push_catalogue_dual_index(spark, tmp_path):
             "true AS fetched",
             "concat('body', id) AS text",
         )
-        write_round_table(df, ck, rnd, "fetched")
-    ManifestLog(ck).commit({"last_round": 1})
+        write_round_table(df, ck, rnd, "fetched", state)
+    ManifestLog(ck).commit(state)
     files_srv = _IndexServer(key="url")
     latest_srv = _IndexServer(key="url")
     try:

@@ -257,6 +257,34 @@ def test_crawler_recrawl_round_e2e(spark, fixture_dir, tables, tmp_path_factory)
     # pass 1 an hour later: every url is scheduled out to the slow lane
     counts1 = c.recrawl_round(1, now_s=t0 + 3600.0)
     assert counts1 == {}
+    report1 = spark.read.parquet(
+        os.path.join(ckpt, "round=00001", "recrawl_report")
+    )
+    assert report1.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in report1.schema] == [
+        ("status", "string"), ("n_urls", "bigint"), ("bytes_saved", "bigint"),
+    ]
+
+    # the next pass's reads of the committed crawl and recrawl history
+    # are planned with the manifest's recorded schemas: no job
+    from metadata_crawler_spark.sources.tables import (
+        committed_rounds,
+        read_rounds,
+    )
+
+    state = c.log.read()
+    sc = spark.sparkContext
+    group = "test_recrawl_reads_plan"
+    sc.setJobGroup(group, "plan a recrawl pass's reads")
+    try:
+        for name, upto in (("fetched", 1), ("recrawl_refreshed", 1),
+                           ("recrawl_checks", 1)):
+            read_rounds(
+                spark, ckpt, name, committed_rounds(state, name, upto), state
+            )
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
     # the web mutates: ~1/5 of pages gain a paragraph; a due pass must
     # re-store exactly those urls' re-extracted text
@@ -489,6 +517,14 @@ def test_recrawl_rounds_match_independent_model(
         assert {s: n for s, (n, _) in got_counts.items()} == want_counts, (
             f"seed={seed} pass={k}"
         )
+        # the committed report (observed on the checks write, gone urls
+        # included) is the returned counts
+        assert {
+            r["status"]: (r["n_urls"], r["bytes_saved"])
+            for r in spark.read.parquet(
+                os.path.join(ckpt, f"round={k:05d}", "recrawl_report")
+            ).collect()
+        } == got_counts, f"seed={seed} pass={k}"
         checks_k = {
             (r["url"], bool(r["changed"]))
             for r in spark.read.parquet(

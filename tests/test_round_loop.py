@@ -11,6 +11,7 @@ from functools import partial
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import StructType
 
 from metadata_crawler_spark.functions.urls import blocked_hosts_from_counts
 from metadata_crawler_spark.operators.frontier import rescore_frontier
@@ -266,11 +267,13 @@ def test_guarded_sweep(spark):
     assert guarded_sweep(df, "epoch", 10).count() == 90  # 10% -> no guard
 
 
-def test_size_based_switches(spark, tmp_path):
+def test_size_based_switches(spark, tables, tmp_path):
     """The scale switches decide from size, not constants: the seen-filter
     probe flips to the cogrouped path when the filter's total bytes (from
     its recorded geometry — no job) outgrow the budget, and the robots
-    join switch probes the rules table with a bounded limit-count."""
+    and hosts join switches decide from the optimizer's row estimate
+    (no job for a table scan; a frame without one takes a bounded
+    probe)."""
     from metadata_crawler_spark.operators.seen import bloom_params, filter_bytes
     from metadata_crawler_spark.plans.round_loop import (
         BLOOM_BROADCAST_MAX_BYTES,
@@ -298,8 +301,165 @@ def test_size_based_switches(spark, tmp_path):
     m, _ = bloom_params(300_000_000, 0.01)
     assert filter_bytes("bloom", 300_000_000, 32) == (m // 8) * 32
     assert (m // 8) * 32 > BLOOM_BROADCAST_MAX_BYTES
-    # robots switch: tiny table -> broadcast
+    # robots switch: tiny table -> broadcast (a local frame carries no
+    # size estimate: bounded probe)
     assert crawler.robots_broadcast() is True
+    # table scans decide from the estimate, without a job
+    scans = Crawler(
+        spark=spark, pages_path="unused", robots=tables["robots"],
+        hosts=tables["hosts"], checkpoint_dir=str(tmp_path / "ck2"),
+    )
+    # a 10^9-row rules table (the estimate knows its row count)
+    huge = Crawler(
+        spark=spark, pages_path="unused", robots=spark.range(10**9).selectExpr(
+            "cast(id AS string) AS host", "array('/x') AS disallow",
+            "0L AS crawl_delay_ms",
+        ), hosts=hosts, checkpoint_dir=str(tmp_path / "ck3"),
+    )
+    sc = spark.sparkContext
+    group = "test_size_based_switches"
+    sc.setJobGroup(group, "decide the robots and hosts join switches")
+    try:
+        assert scans.robots_broadcast() is True
+        assert scans.hosts_broadcast() is True
+        assert huge.robots_broadcast() is False
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+#: hrefs that exercise every canonicalization rule (uppercase host,
+#: default port, dot segments, %-escapes, unsorted query, blank and
+#: relative hrefs) plus clean ones that take the fast path
+MESSY_HREFS = [
+    "HTTP://Example.COM:80/a/./b/../c?z=1&a=2#frag",
+    "https://example.com:443/%7euser/%2f?b=2&a=1",
+    "https://example.com/%7Ea%20b",
+    "https://example.com",
+    "https://example.com/clean/path.html",
+    "https://Example.com/Mixed/Case",
+    "http://example.com:8080/x/../y/",
+    "relative/page.html",
+    "/base/./page",
+    "  ",
+    "https://user:pw@example.com/x",
+]
+
+
+def _pages_with_outlinks(hrefs_per_page):
+    """_fetch_batches input rows: one page per href list (None = a page
+    the snapshot has no html for)."""
+    import pandas as pd
+
+    rows = []
+    for i, hrefs in enumerate(hrefs_per_page):
+        html = None if hrefs is None else (
+            "<html>" + "".join(f'<a href="{h}">x</a>' for h in hrefs)
+            + "</html>"
+        ).encode()
+        rows.append({
+            "url": f"https://p{i}.com/", "host": f"p{i}.com", "depth": 1,
+            "score": 1.0, "rank": 1, "crawl_delay_ms": 0,
+            "fetch_offset_ms": 0, "url_hash_hi": i, "url_hash_lo": i,
+            "warc_ts": pd.Timestamp("2024-01-01"), "html": html,
+        })
+    return pd.DataFrame(rows)
+
+
+def test_fetch_batches_canonicalize_outlinks():
+    """_fetch_batches emits links_canon element-aligned with the raw
+    links: each links_canon[i] is canon_url_py(links[i]), a repeated
+    href included; pages without html carry NULL for both, also in a
+    batch without a single href."""
+    from metadata_crawler_spark.functions.urls import canon_url_py
+
+    pages = [
+        MESSY_HREFS + [MESSY_HREFS[0]],  # one href repeated on a page
+        list(reversed(MESSY_HREFS[:4])),
+        None,
+        [],
+    ]
+    out, bare = round_loop._fetch_batches(iter([
+        _pages_with_outlinks(pages), _pages_with_outlinks([None, []]),
+    ]))
+    assert bare["links_canon"].tolist() == [None, []]
+    # mapInPandas matches the batch's columns to FETCH_SCHEMA by name
+    assert sorted(out.columns) == sorted(round_loop._FETCH_COLS + ("links_canon",))
+    by_url = out.set_index("url")
+    for i, hrefs in enumerate(pages):
+        row = by_url.loc[f"https://p{i}.com/"]
+        if hrefs is None:
+            assert row["links"] is None and row["links_canon"] is None
+            continue
+        assert list(row["links"]) == hrefs
+        assert list(row["links_canon"]) == [canon_url_py(h) for h in hrefs]
+
+
+def test_outlink_children_equal_with_canonical_path(spark):
+    """The next frontier's discoveries from in-batch canonical outlinks
+    equal the split-union path's (with_canonical over the raw-url
+    pre-combine) on messy hrefs: same keys, urls, depths and scores."""
+    from metadata_crawler_spark.functions.urls import (
+        with_canonical,
+        with_url_hash,
+    )
+    from metadata_crawler_spark.operators.frontier import (
+        expand_outlinks,
+        valid_urls,
+    )
+
+    pages = [MESSY_HREFS, MESSY_HREFS[::2] + MESSY_HREFS[:3], None]
+    hits = spark.createDataFrame(
+        _pages_with_outlinks(pages)
+    ).mapInPandas(round_loop._fetch_batches, round_loop.FETCH_SCHEMA).filter(
+        F.col("fetched")
+    )
+    got = round_loop._combine_frontier(round_loop._outlink_children(hits))
+    raw = expand_outlinks(hits, "links", "score", "depth").groupBy("url").agg(
+        F.min("depth").alias("depth"), F.sum("score").alias("score")
+    )
+    want = round_loop._combine_frontier(
+        with_url_hash(valid_urls(with_canonical(raw, "url")))
+    )
+    got_rows = sorted(map(tuple, got.collect()))
+    assert got_rows == sorted(map(tuple, want.collect()))
+    assert len(got_rows) >= 6  # the canonical variants merged, not dropped
+
+
+def test_committed_reads_plan_without_jobs(crawl, spark, tmp_path):
+    """A resumed round's committed inputs and a recrawl pass's crawl
+    reads are planned with the manifest's recorded schemas: no job is
+    submitted (no footer inference). A manifest that records no schema
+    for a table fails its read."""
+    from metadata_crawler_spark.sources.tables import (
+        committed_rounds,
+        read_rounds,
+    )
+
+    crawler, ckpt, _ = crawl
+    state = crawler.log.read()
+    sc = spark.sparkContext
+    group = "test_committed_reads_plan"
+    sc.setJobGroup(group, "plan committed-table reads")
+    try:
+        seen, bloom, frontier = crawler._load_state(2, state)
+        fetched = read_rounds(
+            spark, ckpt, "fetched", committed_rounds(state, "fetched", 2),
+            state,
+        )
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert frontier.count() == state["r2"]["frontier_next"]
+    assert fetched.filter("fetched").count() == sum(
+        state[f"r{r}"]["fetched"] for r in range(3)
+    )
+    for name in ("bloom", "frontier_next", "scheduled"):
+        lost = {**state, "schemas": {
+            k: v for k, v in state["schemas"].items() if k != name
+        }}
+        with pytest.raises(ValueError, match=f"no schema for table '{name}'"):
+            crawler._load_state(2, lost)
 
 
 def test_fetch_join_broadcast_gate(
@@ -502,7 +662,10 @@ def test_seen_compaction_path_bound(
     )
     n_rounds = 2100  # > 2k tiny rounds; deltas written directly (pyarrow)
     expected = set()
-    state: dict = {}
+    # the manifest records the schema the engine would have written
+    state: dict = {"schemas": {"scheduled": StructType.fromDDL(
+        "url_hash_hi long, url_hash_lo long, url string"
+    ).jsonValue()}}
     for r in range(n_rounds):
         d = os.path.join(ckpt, f"round={r:05d}", "scheduled")
         os.makedirs(d, exist_ok=True)
@@ -761,6 +924,7 @@ def test_host_cardinalities_refuses_uncommitted_round(
     )
 
     ckpt = str(tmp_path / "ckpt")
+    state = {"last_round": 0, "r0": {"optional_tables": ["host_sketch"]}}
     for rnd in (0, 1):  # round 1 is the crashed orphan
         write_round_table(
             hll_sketches(
@@ -769,11 +933,9 @@ def test_host_cardinalities_refuses_uncommitted_round(
                 ),
                 ["host"], "url",
             ),
-            ckpt, rnd, "host_sketch",
+            ckpt, rnd, "host_sketch", state,
         )
-    ManifestLog(ckpt).commit(
-        {"last_round": 0, "r0": {"optional_tables": ["host_sketch"]}}
-    )
+    ManifestLog(ckpt).commit(state)
     c = _mk(spark, fixture_dir, tables, ckpt)
     assert [(r.host, r.n_distinct) for r in c.host_cardinalities(0).collect()] == [
         ("h.com", 10)

@@ -106,6 +106,7 @@ def test_catalogue_refuses_uncommitted_round(spark, tmp_path):
     )
 
     ck = str(tmp_path / "ck")
+    state = {"last_round": 0}
     for rnd, n in ((0, 30), (1, 7)):  # round 1 is the crashed orphan
         write_round_table(
             spark.range(n).selectExpr(
@@ -113,9 +114,9 @@ def test_catalogue_refuses_uncommitted_round(spark, tmp_path):
                 "true AS fetched",
                 "'en' AS lang",
             ),
-            ck, rnd, "fetched",
+            ck, rnd, "fetched", state,
         )
-    ManifestLog(ck).commit({"last_round": 0})
+    ManifestLog(ck).commit(state)
     assert read_catalogue(spark, ck, 0).count() == 30
     with pytest.raises(ValueError, match="not committed"):
         read_catalogue(spark, ck, 1)

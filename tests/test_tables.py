@@ -62,11 +62,39 @@ def test_round_tables(spark, tmp_path):
 
     df = spark.range(10).toDF("id")
     root = str(tmp_path)
-    write_round_table(df, root, 0, "t")
-    write_round_table(df, root, 1, "t")
-    both = read_rounds(spark, root, "t", [0, 1])
+    state: dict = {}
+    write_round_table(df, root, 0, "t", state)
+    write_round_table(df, root, 1, "t", state)
+    both = read_rounds(spark, root, "t", [0, 1], state)
     assert both.count() == 20
-    only0 = read_rounds(spark, root, "t", [0])
+    only0 = read_rounds(spark, root, "t", [0], state)
     assert only0.count() == 10
     with pytest.raises(AnalysisException, match="round=00002/t"):
-        read_rounds(spark, root, "t", [0, 1, 2])
+        read_rounds(spark, root, "t", [0, 1, 2], state)
+
+
+def test_read_rounds_uses_the_recorded_schema(spark, tmp_path):
+    """A write records its table's schema in the manifest state; the
+    read uses it (no footer job while planning), and a state that
+    records none fails the read instead of inferring one."""
+    df = spark.range(5).selectExpr("id", "cast(id AS int) AS i")
+    root = str(tmp_path)
+    state: dict = {}
+    write_round_table(df, root, 0, "t", state)
+    assert list(state["schemas"]) == ["t"]
+    sc = spark.sparkContext
+    group = "test_read_rounds_plan"
+    sc.setJobGroup(group, "plan a recorded-schema read")
+    try:
+        got = read_rounds(spark, root, "t", [0], state)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        ("id", "bigint"), ("i", "int"),
+    ]
+    assert sorted(r.i for r in got.collect()) == [0, 1, 2, 3, 4]
+    with pytest.raises(ValueError, match="no schema for table 't'"):
+        read_rounds(spark, root, "t", [0], {"schemas": {"u": {}}})
+    with pytest.raises(ValueError, match="no schema"):
+        read_rounds(spark, root, "t", [0], {})
