@@ -17,6 +17,13 @@ Layout
 - ``plans``      the round-loop crawl driver (micro-batch rounds with
   atomic, resumable commits and per-partition lineage metrics).
 - ``streaming``  Structured-Streaming variants of the round loop.
+
+Importing the package guards ``zipimport`` against the per-task
+zip-directory re-reads of pyspark's Python workers (:mod:`.zipguard`).
 """
+
+from .zipguard import install as _install_zipguard
+
+_install_zipguard()
 
 __version__ = "0.1.0"

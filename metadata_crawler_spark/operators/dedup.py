@@ -389,7 +389,7 @@ def bloom_contamination(
     Output schema and semantics identical to `ngram_contamination` (every
     input id gets a row).
     """
-    from .seen import bloom_build, probe_cogrouped, probe_with_broadcast
+    from .seen import bloom_build, probe_seen
 
     def keys(df: DataFrame, *extra: str) -> DataFrame:
         return df.select(
@@ -407,11 +407,7 @@ def bloom_contamination(
     bench_keys = keys(benchmark).select("sh", "url_hash_hi", "url_hash_lo").distinct()
     bloom = bloom_build(bench_keys, n_shards=n_shards, fpr=fpr)
     corpus = keys(docs.select(F.col(id_col).alias("id"), text_col), "id")
-    probed = (
-        probe_with_broadcast(corpus, bloom)
-        if broadcast_bloom
-        else probe_cogrouped(corpus, bloom, n_shards)
-    )
+    probed = probe_seen(corpus, bloom, n_shards, broadcast_bloom)
     maybe = probed.filter(F.col("maybe_seen")).select("id", "sh")
     if exact_verify:
         maybe = maybe.join(bench_keys.select("sh"), "sh", "left_semi")

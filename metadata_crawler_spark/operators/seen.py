@@ -589,6 +589,16 @@ def cuckoo_delete(
     return _grow(cuckoo, purged_keys, CUCKOO, n_shards, per_shard, delete=True)
 
 
+def probe_seen(
+    candidates: DataFrame, filt: DataFrame, n_shards: int, broadcast: bool
+) -> DataFrame:
+    """Append ``maybe_seen`` from ``filt``: the broadcast probe, or the
+    cogrouped one at the filter's recorded ``n_shards``."""
+    if broadcast:
+        return probe_with_broadcast(candidates, filt)
+    return probe_cogrouped(candidates, filt, n_shards)
+
+
 def dedup_against_seen(
     candidates: DataFrame,
     seen_exact: DataFrame | None,
@@ -605,6 +615,11 @@ def dedup_against_seen(
     maybe-seen, which alone pays the exact ``left_anti`` join. Without a
     filter, plain anti.
 
+    The split reads the probed candidates twice, once per branch. A
+    caller that passes candidates already probed by :func:`probe_seen`
+    (and persisted) is split on their ``maybe_seen`` column with no
+    ``filt``, so the probe runs once.
+
     An approximate tier WITHOUT an exact tier cannot prove membership —
     treating its 'maybe' slice as seen would silently drop ~fpr of
     genuinely-new URLs — so with ``seen_exact=None`` every candidate is
@@ -614,13 +629,10 @@ def dedup_against_seen(
         return candidates
     exact = seen_exact.select("url_hash_hi", "url_hash_lo")
     key = ["url_hash_hi", "url_hash_lo"]
-    if filt is None:
+    if filt is not None:
+        candidates = probe_seen(candidates, filt, n_shards, broadcast)
+    elif "maybe_seen" not in candidates.columns:
         return candidates.join(exact, key, "left_anti")
-    probed = (
-        probe_with_broadcast(candidates, filt)
-        if broadcast
-        else probe_cogrouped(candidates, filt, n_shards)
-    )
-    definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+    definitely_new = candidates.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    maybe = candidates.filter(F.col("maybe_seen")).drop("maybe_seen")
     return definitely_new.unionByName(maybe.join(exact, key, "left_anti"))

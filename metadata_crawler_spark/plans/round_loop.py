@@ -91,6 +91,7 @@ from ..operators.seen import (  # noqa: F401
     dedup_against_seen,
     filter_bytes,
     filter_health,
+    probe_seen,
 )
 from ..operators.traps import trap_hosts_from_partials, trap_partials
 from ..operators.versioning import latest_per_key
@@ -632,24 +633,6 @@ class Crawler:
         cfg = self.config
         t0 = time.time()
         state = self.log.read() or {}
-        if round_no == 0:
-            frontier = frontier_delta(seeds.select(
-                "url",
-                F.col("depth").cast("int").alias("depth"),
-                F.col("priority").cast("double").alias("score"),
-            ))
-            seen = bloom = standing = None
-        else:
-            seen, bloom, frontier = self._load_state(round_no - 1, state)
-            prev = state[f"r{round_no - 1}"]
-            # the standing filter's geometry, recorded by the round that
-            # wrote it. Without a record (a checkpoint written before
-            # geometry was recorded) the loaded filter is not probed:
-            # this round dedups by the exact anti-join alone and builds a
-            # fresh filter.
-            standing = prev.get("seen_filter")
-
-        frontier = frontier.persist()
         # r6: after round 0 the frontier size is ALREADY known exactly —
         # it is the previous round's committed frontier_next count (==
         # rows of this frontier's parquet). The count job is then
@@ -657,22 +640,47 @@ class Crawler:
         # consuming job (block-level cache locks keep the two dedup
         # branches from computing it twice). Round 0 (seed chain, size
         # unknown) still counts.
-        frontier_in = (
-            frontier.count() if round_no == 0 else prev["frontier_next"]
-        )
+        if round_no == 0:
+            frontier = frontier_delta(seeds.select(
+                "url",
+                F.col("depth").cast("int").alias("depth"),
+                F.col("priority").cast("double").alias("score"),
+            )).persist()
+            frontier_in = frontier.count()
+            seen = bloom = standing = None
+        else:
+            seen, bloom, frontier = self._load_state(round_no - 1, state)
+            prev = state[f"r{round_no - 1}"]
+            frontier_in = prev["frontier_next"]
+            # the standing filter's geometry, recorded by the round that
+            # wrote it. Without a record (a checkpoint written before
+            # geometry was recorded) the loaded filter is not probed:
+            # this round dedups by the exact anti-join alone and builds a
+            # fresh filter.
+            standing = prev.get("seen_filter")
         width = _round_width(
             frontier_in, self.spark.sparkContext.defaultParallelism
         )
         self.spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        if round_no:
+            if standing:
+                # the cache holds the probe's verdict, not the raw
+                # frontier: the dedup split reads it twice (definitely
+                # new, and the maybe slice's exact anti-join), and a
+                # probe below the cache runs once. Planned after the
+                # width is set: a persist plans its query eagerly.
+                frontier = probe_seen(
+                    frontier, bloom, standing["n_shards"],
+                    self.bloom_broadcast(standing),
+                )
+            frontier = frontier.persist()
         # the deduped count rides an Observation on the gated pipeline —
         # new_urls has exactly one consumer (gate_frontier), so it needs
         # neither its own persist nor a separate count job
         obs_dedup = Observation(f"dedup_{round_no}")
-        new_urls = dedup_against_seen(
-            frontier, seen, bloom if standing else None,
-            standing["n_shards"] if standing else cfg.n_shards,
-            standing is not None and self.bloom_broadcast(standing),
-        ).observe(obs_dedup, F.count(F.lit(1)).alias("n"))
+        new_urls = dedup_against_seen(frontier, seen).observe(
+            obs_dedup, F.count(F.lit(1)).alias("n")
+        )
         # gates split from top-k so the carryover can be computed from the
         # ELIGIBLE set: URLs dropped by validity/robots are permanently
         # blocked and must not ride the frontier forever (they would never

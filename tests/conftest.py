@@ -37,3 +37,36 @@ def tables(spark, fixture_dir):
         name: spark.read.parquet(os.path.join(fixture_dir, f"{name}.parquet"))
         for name in ("pages", "seeds", "robots", "hosts")
     }
+
+
+@pytest.fixture(scope="session")
+def probe_nodes(spark):
+    """Count the seen-filter probe nodes a frame's executed plan runs.
+
+    Walks the physical plan and the plans of the caches it scans,
+    visiting each JVM node once: two scans of one cache share its plan,
+    so a probe below a cache counts once however often it is read."""
+    jvm = spark._jvm
+    conv = jvm.scala.jdk.javaapi.CollectionConverters
+    python_nodes = ("ArrowEvalPython", "FlatMapCoGroupsInPandas")
+
+    def count(df) -> int:
+        visited, stack, n = set(), [df._jdf.queryExecution().executedPlan()], 0
+        while stack:
+            node = stack.pop()
+            key = jvm.System.identityHashCode(node)
+            if key in visited:
+                continue
+            visited.add(key)
+            name = node.nodeName()
+            if name in python_nodes and "probe(" in node.simpleString(100):
+                n += 1
+            if name == "AdaptiveSparkPlan":
+                stack.append(node.executedPlan())
+            elif name.endswith("QueryStage"):
+                stack.append(node.plan())
+            stack += list(conv.asJava(node.children()))
+            stack += list(conv.asJava(node.innerChildren()))
+        return n
+
+    return count

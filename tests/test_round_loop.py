@@ -462,6 +462,38 @@ def test_committed_reads_plan_without_jobs(crawl, spark, tmp_path):
             crawler._load_state(2, lost)
 
 
+def test_resumed_round_probes_seen_filter_once(
+    crawl, spark, fixture_dir, tables, tmp_path, monkeypatch, probe_nodes
+):
+    """A resumed round's gated plan (the cached dedup + gates that
+    scheduling and the carryover read) runs the seen-filter probe once
+    on either probe path: the round caches the probed frontier, and both
+    branches of the dedup split read its verdict. Both paths commit the
+    same round."""
+    import shutil
+
+    _, ckpt, _ = crawl
+    gated_probes: list[int] = []
+    schedule_eligible = round_loop.schedule_eligible
+
+    def capture(gated, *args, **kwargs):
+        gated_probes.append(probe_nodes(gated))
+        return schedule_eligible(gated, *args, **kwargs)
+
+    monkeypatch.setattr(round_loop, "schedule_eligible", capture)
+    counts = []
+    for max_bytes in (round_loop.BLOOM_BROADCAST_MAX_BYTES, 0):
+        monkeypatch.setattr(round_loop, "BLOOM_BROADCAST_MAX_BYTES", max_bytes)
+        ck = str(tmp_path / f"ck_{max_bytes}")
+        shutil.copytree(ckpt, ck)
+        res = _mk(spark, fixture_dir, tables, ck).run_round(3, tables["seeds"])
+        counts.append({
+            k: res[k] for k in ("deduped", "scheduled", "fetched", "frontier_next")
+        })
+    assert gated_probes == [1, 1]
+    assert counts[0] == counts[1] and counts[0]["deduped"] > 0
+
+
 def test_fetch_join_broadcast_gate(
     spark, fixture_dir, tables, tmp_path_factory, monkeypatch
 ):

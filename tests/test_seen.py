@@ -18,6 +18,7 @@ from metadata_crawler_spark.operators.seen import (
     cuckoo_params,
     dedup_against_seen,
     probe_cogrouped,
+    probe_seen,
     probe_with_broadcast,
 )
 
@@ -100,6 +101,38 @@ def test_dedup_tiers_equal_plain_antijoin(spark, keys):
     plain = dedup_against_seen(keys, seen, None).select("url")
     assert tiered.exceptAll(plain).count() == 0
     assert plain.exceptAll(tiered).count() == 0
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_persisted_probe_dedups_like_plain_antijoin(
+    spark, keys, probe_nodes, broadcast
+):
+    """Candidates probed once (probe_seen, persisted) split to exactly
+    the plain anti-join's rows: new keys kept, seen keys dropped, and
+    keys the filter holds but the exact tier does not (forced false
+    positives) kept. The split reads the probe from the cache, so its
+    plan runs one probe node; unpersisted, each branch probes."""
+    key = ["url_hash_hi", "url_hash_lo"]
+    seen = keys.filter(F.col("url_hash_hi") % 5 == 0).select(*key)
+    false_pos = keys.filter(F.col("url_hash_hi") % 50 == 1).select(*key)
+    bloom = bloom_build(seen.unionByName(false_pos), N_SHARDS, 0.01).cache()
+    probed = probe_seen(keys, bloom, N_SHARDS, broadcast)
+    assert probe_nodes(dedup_against_seen(probed, seen)) == 2
+    probed = probed.persist()
+    try:
+        forced = probed.join(false_pos, key, "left_semi")
+        assert forced.count() > 0
+        assert forced.filter(~F.col("maybe_seen")).count() == 0
+        got = dedup_against_seen(probed, seen)
+        assert probe_nodes(got) == 1
+        want = dedup_against_seen(keys, seen, None)
+        cols = ["url", *key]
+        assert sorted(map(tuple, got.select(cols).collect())) == sorted(
+            map(tuple, want.select(cols).collect())
+        )
+        assert got.join(false_pos, key, "left_semi").count() == forced.count()
+    finally:
+        probed.unpersist()
 
 
 def test_empty_bloom_everything_new(spark, keys):
